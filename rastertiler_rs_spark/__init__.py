@@ -20,4 +20,8 @@ Architecture (Spark-first, NOT a port):
   SQLite .mbtiles materialization for golden comparison.
 """
 
+from . import _worker
+
 __version__ = "0.1.0"
+
+_worker.install_if_worker()

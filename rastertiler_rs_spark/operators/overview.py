@@ -444,11 +444,12 @@ def cascade_fragments(
             f"cascade_fragments: tile_size={tile_size} must be a "
             f"multiple of 2^span (span {top_zoom - minzoom}) — chain "
             "cascade_down for the remaining zooms")
-    # task count ~= cores, NOT the renderer's cores*8: pyspark pays a
-    # measured ~10 ms of SERIAL dispatch per python task (local-mode
-    # driver handshake; a 256-task no-op python stage costs ~2.5 s wall
-    # at local[32] regardless of data), and these stages have no
-    # straggler tail worth packing — per-group work is tiny and uniform
+    # task count ~= cores, NOT the renderer's cores*8: every python task
+    # pays a fixed start-up cost (PySpark's per-task import-cache
+    # invalidation re-parsed pyspark.zip until ``_worker`` stamped it; a
+    # 256-task no-op python stage cost ~2.5 s wall at local[32]
+    # regardless of data), and these stages have no straggler tail
+    # worth packing — per-group work is tiny and uniform
     n_parts = max(spark.sparkContext.defaultParallelism, 8)
     top = fused_top.select("x", "y", "png")
     # coalesce can only REDUCE partitions: a narrow input (e.g. a small

@@ -654,11 +654,12 @@ def render(
     #   — ~5-10% off the 65k render wall, and the main reason N→4N
     #   scaling holds. 65k fixture ≈ 46 MB source → the byte target
     #   reproduces ~cores*8 there.
-    # - the FLOOR is the python dispatch tax: each task pays ~5-10 ms
-    #   of serial driver handshake, so a small input (bench's 2048
-    #   images ≈ 1.5 MB) at 256 tasks burns 1.5-2.5 s of wall on
-    #   dispatch alone — measured 6.1-8.0 s → 4.7-5.5 s for the same
-    #   render at cores*2.
+    # - the FLOOR is the python per-task tax: each task pays a fixed
+    #   start-up cost (PySpark's per-task import-cache invalidation
+    #   re-parsed pyspark.zip until ``_worker`` stamped it), so a small
+    #   input (bench's 2048 images ≈ 1.5 MB) at 256 tasks burned
+    #   1.5-2.5 s of wall on it alone — measured 6.1-8.0 s → 4.7-5.5 s
+    #   for the same render at cores*2.
     # A constant multiplier tuned for either end loses at the other;
     # deriving from bytes keeps both measured optima (guide §2).
     from ..session import env_int
@@ -673,11 +674,12 @@ def render(
         n_parts = int(max(min(est, cores_ * mult_cap), cores_ * 2, 8))
     except Exception:
         pass  # no stats (unusual plan): keep the ceiling
-    # The kernel MAP stage (decode+window-read per image) pays a measured
-    # ~20-30 ms/task python-stage overhead while its per-image work is
-    # small — fewer, larger tasks win (128→64 tasks saved ~2.4 s of a
-    # ~5 s stage at local[32]); group/encode stages keep 4x parallelism
-    # where per-task compute dominates.
+    # The kernel MAP stage (decode+window-read per image) paid a measured
+    # ~20-30 ms/task fixed python-task cost (the per-task zip re-parse,
+    # see ``_worker``) while its per-image work is small — fewer, larger
+    # tasks won (128→64 tasks saved ~2.4 s of a ~5 s stage at
+    # local[32]); group/encode stages keep 4x parallelism where per-task
+    # compute dominates.
     n_parts_map = max(spark.sparkContext.defaultParallelism * 2, 8)
     src = with_footprints(images).select(
         "image_id", "bytes", "fmt", "minx", "miny", "maxx", "maxy"
@@ -748,8 +750,9 @@ def render(
 
     def _plain_mosaic(blocks: DataFrame) -> DataFrame:
         # mosaic+encode stage at cores*2, not the cell stage's cores*8:
-        # python tasks pay ~10 ms of serial dispatch each, and in the
-        # default config this stage only handles the zooms below pz
+        # tuned while every python task paid a fixed start-up cost (the
+        # per-task zip re-parse, see ``_worker``), and in the default
+        # config this stage only handles the zooms below pz
         # (bounded tile count — at most 4^pz/3 tiles exist there), so
         # per-tile cost is even and tail-packing buys nothing
         return blocks.repartition(n_parts_map, "zoom", "x", "y").groupBy(

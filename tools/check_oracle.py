@@ -7,12 +7,11 @@ Usage: python tools/check_oracle.py [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-import os
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # driver gate runs at sf0.01; override to stress-test oracles at other
 # scales (e.g. SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 for the float-

@@ -5,8 +5,9 @@ Flags the HUGEINT/DECIMAL drift class the driver's hasher is sensitive to.
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(TOOLS))
+sys.path.insert(0, TOOLS)
 
 import duckdb
 
