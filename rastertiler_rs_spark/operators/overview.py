@@ -1,19 +1,21 @@
-"""Overview pyramid (O1): build zoom N tiles from zoom N+1 tiles.
+"""Overview pyramid (O1): build the low zooms from the base zoom's tiles.
 
 The reference accelerates low zooms by reading GeoTIFF internal
 overviews instead of full-resolution pixels — faster, slightly less
 precise, and switchable off (/root/reference/src/dataset.rs:28-30,
-/root/reference/README.md:62). The Spark-native analog: materialize
-zoom z from zoom z+1 by assembling each parent's four children and
-nearest-decimating 2x (same K2 index rule, idx = floor((i+0.5)*2) =
-2i+1), so low zooms never touch source images at all.
+/root/reference/README.md:62). The Spark-native analog: zoom z is the
+2x nearest decimation of zoom z+1 (each parent's four children pasted
+into a 2·ts super-canvas, parent pixel i = child-pair pixel 2i+1, the
+K2 index rule idx = floor((i+0.5)*2)), so low zooms never touch source
+images at all. ``cascade_fragments`` builds every such level in one
+shuffle; ``oracle.overview_oracle`` states the level-by-level rule.
 
 Why this matters at 100 TB: a direct z0 render mosaics EVERY image onto
-one tile — 10^12 contributions to a single group key. The cascade makes
-each level a groupBy with at most FOUR rows per key (the children), no
-skew, each level 1/4 the size of the one below. This is the scale path;
-direct render stays the exact path (the reference's
---disable-overviews default-off tradeoff).
+one tile — 10^12 contributions to a single group key. The cascade
+groups by ancestor tile over small strided fragments of the base, so
+its input is ~1/3 of the base bytes. This is the scale path; direct
+render stays the exact path (the reference's --disable-overviews
+default-off tradeoff).
 """
 
 from __future__ import annotations
@@ -41,13 +43,11 @@ def validate_cascade_colormap(colormap_str: str | None) -> None:
     The BATCH cascade deliberately does NOT enforce this: the standard
     classified-raster use is a colormap covering exactly the values
     that occur (reference P4 behavior), which is lossless for that
-    data. Its contract is documented on cascade_down/cascade_fragments:
+    data. Its contract is documented on cascade_fragments:
     values outside the map were already encoded to the nodata slot by
     the DIRECT base render, and the cascade treats them as nodata."""
     if colormap_str is None:
         return
-    from ..png import Colormap
-
     cm = Colormap.parse(colormap_str, NODATA)
     missing = [v for v in range(256) if v != NODATA and v not in cm.values]
     if missing:
@@ -89,233 +89,34 @@ def decode_canvas(png_bytes: bytes, dtype_tag: str, colormap: Colormap | None = 
     raise ValueError(f"unsupported dtype {dtype_tag!r}")
 
 
-def _assemble_fn(tile_size: int, dtype_tag: str, colormap_str: str | None, nodata: int):
-    half = tile_size // 2
-    np_dtype = np.uint8 if dtype_tag == "u8" else np.uint32
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        colormap = Colormap.parse(colormap_str, nodata) if colormap_str else None
-        for pdf in batches:
-            out = {"zoom": [], "x": [], "y": [], "png": []}
-            for row in pdf.itertuples(index=False):
-                canvas = np.full((tile_size, tile_size), nodata, dtype=np_dtype)
-                for c in row.children:
-                    child = decode_canvas(bytes(c["png"]), dtype_tag, colormap, nodata)
-                    # child (qy,qx) occupies big[qy*ts:(qy+1)*ts, qx*ts:...];
-                    # parent[r,c] = big[2r+1, 2c+1] ⇒ per-child odd-index slice
-                    sub = child[1::2, 1::2]
-                    qy, qx = int(c["qy"]), int(c["qx"])
-                    canvas[qy * half : (qy + 1) * half, qx * half : (qx + 1) * half] = sub
-                if (canvas == nodata).all():  # dropped-tile rule, dataset.rs:180-182
-                    continue
-                out["zoom"].append(int(row.zoom))
-                out["x"].append(int(row.x))
-                out["y"].append(int(row.y))
-                out["png"].append(encode_tile(canvas, dtype_tag, nodata, colormap))
-            yield pd.DataFrame(out)
-
-    return fn
-
-
-def build_overview_level(
-    fused_level: DataFrame,
-    tile_size: int,
-    dtype_tag: str = "u8",
-    colormap_str: str | None = None,
-    nodata: int = NODATA,
-) -> DataFrame:
-    """One cascade step: fused tiles at a single zoom z → fused tiles at
-    z-1 (same schema: zoom, x, y, tile_row, tile_hash, png).
-
-    groupBy key = parent tile; group size <= 4 by construction, so the
-    shuffle is skew-free regardless of data density.
-    """
-    if tile_size % 2:
-        raise ValueError("tile_size must be even for 2x decimation")
-    children = fused_level.select(
-        (F.col("zoom") - 1).cast("int").alias("zoom"),
-        F.shiftright("x", 1).alias("x"),
-        F.shiftright("y", 1).alias("y"),
-        (F.col("x").bitwiseAND(1)).cast("int").alias("qx"),
-        (F.col("y").bitwiseAND(1)).cast("int").alias("qy"),
-        "png",
-    )
-    # explicit repartition: AQE bytes-based coalescing would serialize
-    # this decode+encode-heavy stage (shuffle bytes are tiny PNGs)
-    n_parts = max(fused_level.sparkSession.sparkContext.defaultParallelism * 2, 8)
-    grouped = children.repartition(n_parts, "zoom", "x", "y").groupBy(
-        "zoom", "x", "y").agg(
-        F.collect_list(F.struct("qx", "qy", "png")).alias("children")
-    )
-    parents = grouped.mapInPandas(
-        _assemble_fn(tile_size, dtype_tag, colormap_str, nodata),
-        "zoom int, x long, y long, png binary",
-    )
-    flip = F.expr("shiftleft(1L, zoom)") - 1 - F.col("y")
-    return (
-        parents.withColumn("tile_row", flip)
-        .withColumn("tile_hash", F.xxhash64("png"))
-        .select("zoom", "x", "y", "tile_row", "tile_hash", "png")
-    )
-
-
-def _subtree_cascade_fn(z_from: int, z_to: int, tile_size: int,
-                        dtype_tag: str, colormap_str: str | None,
-                        nodata: int, flush_rows: int = 1024):
-    """Sorted-stream mapInPandas over groups keyed by the zoom-``z_to``
-    ancestor: each group holds one subtree's zoom-``z_from`` tiles
-    (<= 4^(z_from-z_to) of them) and cascades ALL levels z_from-1..z_to
-    in-process, decoding each child PNG once and carrying raw canvases
-    between levels. One Python stage per (z_from - z_to) zoom levels —
-    the per-stage scheduling/Arrow floor (~0.7 s at local[32]) made a
-    stage-per-level cascade slower at 32 cores than at 8.
-    """
-    half = tile_size // 2
-    np_dtype = np.uint8 if dtype_tag == "u8" else np.uint32
-    span = z_from - z_to
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        colormap = Colormap.parse(colormap_str, nodata) if colormap_str else None
-        out = {"zoom": [], "x": [], "y": [], "png": []}
-        pending: pd.DataFrame | None = None
-
-        def do_group(g: pd.DataFrame) -> None:
-            canvases = {
-                (int(x), int(y)): decode_canvas(bytes(p), dtype_tag, colormap, nodata)
-                for x, y, p in zip(g["x"], g["y"], g["png"])
-            }
-            z = z_from
-            while z > z_to:
-                parents: dict[tuple[int, int], np.ndarray] = {}
-                for (x, y), child in canvases.items():
-                    pk = (x >> 1, y >> 1)
-                    canvas = parents.get(pk)
-                    if canvas is None:
-                        canvas = np.full((tile_size, tile_size), nodata, dtype=np_dtype)
-                        parents[pk] = canvas
-                    qy, qx = y & 1, x & 1
-                    canvas[qy * half : (qy + 1) * half,
-                           qx * half : (qx + 1) * half] = child[1::2, 1::2]
-                z -= 1
-                canvases = {}
-                for (px, py), canvas in parents.items():
-                    if (canvas == nodata).all():
-                        continue
-                    canvases[(px, py)] = canvas
-                    out["zoom"].append(z)
-                    out["x"].append(px)
-                    out["y"].append(py)
-                    out["png"].append(encode_tile(canvas, dtype_tag, nodata, colormap))
-
-        def flush():
-            df = pd.DataFrame(out)
-            for k in out:
-                out[k] = []
-            return df
-
-        for pdf in batches:
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            key = (pdf["x"].to_numpy() >> span) * (1 << 32) + (pdf["y"].to_numpy() >> span)
-            cuts = np.flatnonzero(key[1:] != key[:-1]) + 1
-            starts = np.concatenate(([0], cuts))
-            for s, e in zip(starts[:-1], starts[1:]):
-                do_group(pdf.iloc[s:e])
-                if len(out["zoom"]) >= flush_rows:
-                    yield flush()
-            pending = pdf.iloc[starts[-1]:].copy()
-        if pending is not None and len(pending):
-            do_group(pending)
-        if out["zoom"]:
-            yield flush()
-
-    return fn
-
-
-def cascade_down(
-    fused_top: DataFrame,
-    minzoom: int,
-    tile_size: int,
-    dtype_tag: str = "u8",
-    colormap_str: str | None = None,
-    span: int = 4,
-    top_zoom: int | None = None,
-    persisted: list | None = None,
-) -> DataFrame:
-    """Cascade a single-zoom fused tile level down to ``minzoom``.
-
-    Colormap contract: the cascade decodes stored paletted PNGs back to
-    values, so a user colormap must cover every value that OCCURS in
-    the data (the standard classified-raster use). Values outside the
-    map were already encoded to the nodata slot by the direct base
-    render (reference P4 lookup-default-0) and cascade as nodata;
-    open-ended inputs should use the stream rule
-    (validate_cascade_colormap) instead.
-
-    Cascades a level down to ``minzoom``,
-    ``span`` zoom levels per Python stage (subtree groups of <= 4^span
-    children bound task memory at ~4^span * tile_size^2 bytes). Returns
-    the union of all levels BELOW the input level. Each stage's output
-    is persisted: it feeds both the result union and the next stage.
-
-    Pass ``persisted`` (a list) to receive the cached stage DataFrames:
-    long-running callers (the streaming pyramid runs this per
-    micro-batch) must unpersist them after materializing the result, or
-    the executor cache leaks one stage set per batch.
-    """
-    spark = fused_top.sparkSession
-    if top_zoom is None:
-        top_zoom = fused_top.select(F.max("zoom")).collect()[0][0]
-    if top_zoom is None or top_zoom <= minzoom:
-        return fused_top.filter(F.lit(False))  # empty, same schema
-    n_parts = max(spark.sparkContext.defaultParallelism * 2, 8)
-    outputs = []
-    prev = fused_top
-    z = top_zoom
-    while z > minzoom:
-        z_to = max(z - span, minzoom)
-        s = z - z_to
-        keyed = prev.select(
-            "zoom", "x", "y", "png",
-            F.shiftright("x", s).alias("kx"), F.shiftright("y", s).alias("ky"),
-        )
-        stage = (
-            keyed.repartition(n_parts, "kx", "ky")
-            .sortWithinPartitions("kx", "ky")
-            .mapInPandas(
-                _subtree_cascade_fn(z, z_to, tile_size, dtype_tag,
-                                    colormap_str, NODATA),
-                "zoom int, x long, y long, png binary",
-            )
-            .persist()
-        )
-        if persisted is not None:
-            persisted.append(stage)
-        outputs.append(stage)
-        prev = stage.filter(F.col("zoom") == z_to)
-        z = z_to
-    out = outputs[0]
-    for lv in outputs[1:]:
-        out = out.unionByName(lv)
-    flip = F.expr("shiftleft(1L, zoom)") - 1 - F.col("y")
-    return (
-        out.withColumn("tile_row", flip)
-        .withColumn("tile_hash", F.xxhash64("png"))
-        .select("zoom", "x", "y", "tile_row", "tile_hash", "png")
-    )
+def _strided_axis(t: int, tile_size: int, step: int) -> tuple[int, int] | None:
+    """One axis of a base tile's strided fragment: ``(src, dst)`` = the
+    first sampled row (column) inside base tile ``t`` and the offset
+    where it lands in its ancestor's canvas, or None when the tile holds
+    no sampled row. k levels of the 2i+1 rule compose, in global base
+    pixel coordinates, to G = 2^k·(g+1) - 1 for ANY tile size, so the
+    sampled rows are those with G ≡ -1 (mod step) and row G lands at
+    ancestor row g = (G+1)/step - 1. Ancestor tile boundaries fall on
+    base tile boundaries, so a fragment never straddles two ancestors.
+    When step divides tile_size this is src = step-1,
+    dst = (t mod step)·(tile_size/step)."""
+    src = -(t * tile_size + 1) % step
+    if src >= tile_size:
+        return None
+    return src, ((t * tile_size + src + 1) // step - 1) % tile_size
 
 
 def _fragment_emit_fn(top_zoom: int, minzoom: int, tile_size: int,
                       dtype_tag: str, colormap_str: str | None, nodata: int):
     """Map-only stage of the one-shot cascade: decode each base tile
     ONCE and emit its strided sample for EVERY ancestor zoom. k-fold 2x
-    nearest decimation composes to strided sampling — c[1::2,1::2]
-    applied k times == c[2^k-1::2^k, 2^k-1::2^k] — and pasting children
-    into parent quadrants commutes with the sampling, so these
-    fragments assemble into canvases value-identical to the
-    level-by-level cascade's (byte-identical PNGs; pinned by
-    tests/test_overview_salt.py::test_fragment_cascade_byte_parity)."""
+    nearest decimation composes to strided sampling (_strided_axis), and
+    pasting children into parent quadrants commutes with the sampling,
+    so these fragments assemble into canvases value-identical to the
+    level-by-level rule's (byte-identical PNGs against
+    oracle.overview_oracle; pinned by
+    tests/test_overview_salt.py::test_fragment_cascade_byte_parity).
+    Fragments may be non-square; ``fw`` is their width."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         colormap = Colormap.parse(colormap_str, nodata) if colormap_str else None
@@ -328,16 +129,19 @@ def _fragment_emit_fn(top_zoom: int, minzoom: int, tile_size: int,
                 for z in range(minzoom, top_zoom):
                     k = top_zoom - z
                     step = 1 << k
-                    frag = canvas[step - 1 :: step, step - 1 :: step]
+                    rows = _strided_axis(y, tile_size, step)
+                    cols = _strided_axis(x, tile_size, step)
+                    if rows is None or cols is None:
+                        continue
+                    frag = canvas[rows[0] :: step, cols[0] :: step]
                     if (frag == nodata).all():
                         continue  # parent canvas is nodata-prefilled
-                    fw = tile_size >> k
                     out["zoom"].append(z)
                     out["x"].append(x >> k)
                     out["y"].append(y >> k)
-                    out["r0"].append((y & (step - 1)) * fw)
-                    out["c0"].append((x & (step - 1)) * fw)
-                    out["fw"].append(fw)
+                    out["r0"].append(rows[1])
+                    out["c0"].append(cols[1])
+                    out["fw"].append(frag.shape[1])
                     out["frag"].append(np.ascontiguousarray(frag).tobytes())
             yield pd.DataFrame(out)
 
@@ -347,10 +151,10 @@ def _fragment_emit_fn(top_zoom: int, minzoom: int, tile_size: int,
 _FRAG_SCHEMA = "zoom int, x long, y long, r0 int, c0 int, fw int, frag binary"
 
 
-def _fragment_assemble_fn(tile_size: int, dtype_tag: str,
-                          colormap_str: str | None, nodata: int,
-                          flush_rows: int = 1024):
-    """Sorted-stream assemble+encode over fragments grouped by ancestor
+def _fragment_paste_fn(tile_size: int, dtype_tag: str,
+                       colormap_str: str | None, nodata: int,
+                       flush_rows: int = 1024):
+    """Sorted-stream paste+encode over fragments grouped by ancestor
     tile. Fragments target DISJOINT canvas regions and paste order is
     irrelevant, so the stream carries only the CURRENT tile's canvas
     across Arrow-batch boundaries — no pending-rows buffer. (A
@@ -389,9 +193,9 @@ def _fragment_assemble_fn(tile_size: int, dtype_tag: str,
                         emit(cur_key)
                         canvas.fill(nodata)
                     cur_key = key
-                r0, c0, fw = int(r0), int(c0), int(fw)
-                canvas[r0 : r0 + fw, c0 : c0 + fw] = np.frombuffer(
-                    frag, dtype=np_dtype).reshape(fw, fw)
+                block = np.frombuffer(frag, dtype=np_dtype).reshape(-1, int(fw))
+                r0, c0 = int(r0), int(c0)
+                canvas[r0 : r0 + block.shape[0], c0 : c0 + block.shape[1]] = block
             if len(out["zoom"]) >= flush_rows:
                 yield flush()
         if cur_key is not None:
@@ -412,38 +216,35 @@ def cascade_fragments(
 ) -> DataFrame:
     """One-shot overview build: ONE map-only python stage (decode each
     base tile once, emit per-ancestor strided fragments) + ONE shuffle
-    keyed by ancestor tile + ONE assemble/encode stage — replacing the
-    level-by-level cascade's per-level exchange+python pair, whose
-    fixed stage floors dominated low-zoom build time at high core
-    counts (the levels shrink 4x each but every level still paid a
-    full shuffle + python stage + intermediate PNG decode).
+    keyed by ancestor tile + ONE assemble/encode stage for ALL low
+    zooms. A per-level exchange+python pair would pay fixed stage
+    floors that dominate low-zoom build time at high core counts (the
+    levels shrink 4x each but every level would still pay a full
+    shuffle + python stage + intermediate PNG decode).
 
-    Value-identity with cascade_down: k-fold 2x decimation == strided
-    sampling (see _fragment_emit_fn); intermediate-level drops in the
-    cascade can't change surviving values, and a tile exists in both
+    Colormap contract: the cascade decodes stored paletted PNGs back to
+    values, so a user colormap must cover every value that OCCURS in
+    the data (the standard classified-raster use). Values outside the
+    map were already encoded to the nodata slot by the direct base
+    render (reference P4 lookup-default-0) and cascade as nodata;
+    open-ended inputs should use the stream rule
+    (validate_cascade_colormap) instead.
+
+    Value-identity with the level-by-level 2x rule
+    (oracle.overview_oracle): k-fold 2x decimation == strided sampling
+    for any tile size and depth (see _strided_axis); intermediate-level
+    drops can't change surviving values, and a tile exists in both
     schemes iff its assembled canvas has data.
 
     Scale shape: fragment bytes total ~= base_bytes/3 through one
     compressed shuffle; groups are one ancestor tile (<= 4^k tiny
-    fragments). Constraint: 2^(top_zoom - minzoom) <= tile_size (a
-    fragment must be >= 1px) — deeper pyramids chain cascade_down below
-    the fragment floor. No persisted intermediates, so no executor-
-    cache bookkeeping for callers."""
+    fragments). No persisted intermediates, so no executor-cache
+    bookkeeping for callers."""
     spark = fused_top.sparkSession
     if top_zoom is None:
         top_zoom = fused_top.select(F.max("zoom")).collect()[0][0]
     if top_zoom is None or top_zoom <= minzoom:
         return fused_top.filter(F.lit(False))
-    if (1 << (top_zoom - minzoom)) > tile_size \
-            or tile_size % (1 << (top_zoom - minzoom)) != 0:
-        # the strided-fragment identity needs fw = tile_size >> span to
-        # TILE the canvas exactly: a non-divisible tile_size would leave
-        # the last (tile_size mod 2^span) rows/cols of every parent
-        # canvas unwritten (permanent nodata stripes)
-        raise ValueError(
-            f"cascade_fragments: tile_size={tile_size} must be a "
-            f"multiple of 2^span (span {top_zoom - minzoom}) — chain "
-            "cascade_down for the remaining zooms")
     # task count ~= cores, NOT the renderer's cores*8: every python task
     # pays a fixed start-up cost (PySpark's per-task import-cache
     # invalidation re-parsed pyspark.zip until ``_worker`` stamped it; a
@@ -468,7 +269,7 @@ def cascade_fragments(
         frags.repartition(n_parts, "zoom", "x", "y")
         .sortWithinPartitions("zoom", "x", "y")
         .mapInPandas(
-            _fragment_assemble_fn(tile_size, dtype_tag, colormap_str, NODATA),
+            _fragment_paste_fn(tile_size, dtype_tag, colormap_str, NODATA),
             "zoom int, x long, y long, png binary",
         )
     )
@@ -522,14 +323,9 @@ def render_pyramid_to_sink(
     full.write.mode("overwrite").partitionBy("zoom").parquet(tiles_path)
     base_level = spark.read.parquet(tiles_path).filter(
         F.col("zoom") == base)  # prunes to the zoom=<base> directory
-    cached: list = []
-    try:
-        low = cascade_down(base_level, minzoom, tile_size, dtype_tag,
-                           colormap_str, top_zoom=base, persisted=cached)
-        low.write.mode("append").partitionBy("zoom").parquet(tiles_path)
-    finally:
-        for df in cached:  # free per-stage caches once the sink has them
-            df.unpersist()
+    low = cascade_fragments(base_level, minzoom, tile_size, dtype_tag,
+                            colormap_str, top_zoom=base)
+    low.write.mode("append").partitionBy("zoom").parquet(tiles_path)
     return spark.read.parquet(tiles_path)
 
 
@@ -546,13 +342,14 @@ def render_pyramid(
 ) -> DataFrame:
     """Full pyramid with the overview cascade below ``overview_below``:
     zooms in [overview_below, maxzoom] render directly from source
-    images; zooms in [minzoom, overview_below) cascade down 2x per step.
+    images; zooms in [minzoom, overview_below) are its 2x-per-step
+    nearest decimation (cascade_fragments).
 
     ``overview_below=None`` → all-direct (exact; the reference's
-    --disable-overviews). Each cascade level is persisted — in
-    production each level is written to the tile sink and read back, so
-    lineage never re-renders the base (mbtiles_sink.write_tile_tables
-    partitions by zoom for exactly this).
+    --disable-overviews). The direct render is persisted and appended
+    to ``persisted``; the caller releases it once the result is
+    materialized (render_pyramid_to_sink is the sink-boundary variant
+    with nothing cached).
     """
     from .render import render
 
@@ -590,20 +387,21 @@ def render_pyramid(
     #   decompressing mixed cached batches on the one filtered scan.
     full = render(images, base, maxzoom, tile_size, dtype_tag,
                   colormap_str, salt_buckets=salt_buckets)
+    return _with_overviews(full, base, minzoom, tile_size, dtype_tag,
+                          colormap_str, persisted)
+
+
+def _with_overviews(full: DataFrame, base: int, minzoom: int, tile_size: int,
+                   dtype_tag: str, colormap_str: str | None,
+                   persisted: list | None) -> DataFrame:
+    """``full`` (fused zooms [base, maxzoom], already rendered) plus the
+    cascaded zooms [minzoom, base). The union and the cascade both
+    consume ``full``, so it is persisted once (appended to
+    ``persisted`` for the caller to release) and the cascade reads its
+    base level from the cache."""
     shared = full.persist()
     if persisted is not None:
         persisted.append(shared)
-    base_level = shared.filter(F.col("zoom") == base)
-    if (1 << (base - minzoom)) <= tile_size \
-            and tile_size % (1 << (base - minzoom)) == 0:
-        # one-shot fragment cascade: 2 python stages + 1 shuffle total
-        # for ALL low zooms (vs exchange+python PER span-4 step) — the
-        # per-level stage floors made the cascade nearly parallelism-
-        # invariant and it showed as the production pyramid's N→4N
-        # scaling drag
-        low = cascade_fragments(base_level, minzoom, tile_size, dtype_tag,
-                                colormap_str, top_zoom=base)
-    else:
-        low = cascade_down(base_level, minzoom, tile_size, dtype_tag,
-                           colormap_str, top_zoom=base, persisted=persisted)
+    low = cascade_fragments(shared.filter(F.col("zoom") == base), minzoom,
+                            tile_size, dtype_tag, colormap_str, top_zoom=base)
     return shared.unionByName(low)

@@ -443,17 +443,6 @@ def lang_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return scored.withColumn("lang_guess", guess)
 
 
-def doc_fingerprints(docs: DataFrame, text_col: str = "text", window: int = 8) -> DataFrame:
-    """Rolling-hash document fingerprint: min xxhash64 over each
-    ``window``-gram (winnowing-style single fingerprint per doc)."""
-    grams = docs.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(1), F.greatest(F.length(text_col) - (window - 1), F.lit(1)))).alias("pos"),
-        F.col(text_col),
-    ).select("doc_id", F.xxhash64(F.expr(f"substr({text_col}, pos, {window})")).alias("gh"))
-    return grams.groupBy("doc_id").agg(F.min("gh").alias("fingerprint"))
-
-
 def doc_chunks(docs: DataFrame, size: int = 32, stride: int = 24,
                text_col: str = "text") -> DataFrame:
     """Overlapping token-window CHUNKING — the RAG/embedding-prep

@@ -270,11 +270,11 @@ def render_warp_pyramid(images: DataFrame, minzoom: int, maxzoom: int,
                         persisted: list | None = None) -> DataFrame:
     """Full warped pyramid in the FUSED sink schema (zoom, x, y,
     tile_row, tile_hash, png): zooms in [overview_below, maxzoom] warp
-    directly from source; zooms below cascade 2× per step through the
-    shared overview machinery (operators/overview.cascade_down — same
-    decimation, persist-fork and colormap contracts as
-    render_pyramid). ``overview_below=None`` → all-direct."""
-    from .overview import cascade_down
+    directly from source; zooms below are its 2× nearest decimation
+    through the shared overview machinery (operators/overview — same
+    cascade, persist-fork and colormap contracts as render_pyramid).
+    ``overview_below=None`` → all-direct."""
+    from .overview import _with_overviews
     from .render import _finish
 
     if overview_below is None or overview_below <= minzoom:
@@ -283,10 +283,5 @@ def render_warp_pyramid(images: DataFrame, minzoom: int, maxzoom: int,
     base = min(max(overview_below, minzoom), maxzoom)
     full = _finish(render_warp(images, base, maxzoom, tile_size,
                                dtype_tag, colormap_str))
-    shared = full.persist()
-    if persisted is not None:
-        persisted.append(shared)
-    base_level = shared.filter(F.col("zoom") == base)
-    low = cascade_down(base_level, minzoom, tile_size, dtype_tag,
-                       colormap_str, top_zoom=base, persisted=persisted)
-    return shared.unionByName(low)
+    return _with_overviews(full, base, minzoom, tile_size, dtype_tag,
+                           colormap_str, persisted)

@@ -70,6 +70,31 @@ def render_oracle(rows, minzoom: int, maxzoom: int, tile_size: int = 512,
     return tiles, blobs
 
 
+def overview_oracle(base: dict, top_zoom: int, minzoom: int, tile_size: int,
+                    nodata: int = NODATA) -> dict:
+    """The overview rule stated level by level: paste each parent's four
+    children into a 2·tile_size super-canvas and keep pixels
+    ``big[1::2, 1::2]`` (2x nearest decimation, K2 index 2i+1); an
+    all-nodata parent is dropped. ``base`` maps (x, y) → value canvas at
+    ``top_zoom``; returns {(zoom, x, y): canvas} for zooms
+    [minzoom, top_zoom)."""
+    ts = tile_size
+    out, level = {}, base
+    for z in range(top_zoom - 1, minzoom - 1, -1):
+        bigs: dict[tuple[int, int], np.ndarray] = {}
+        for (x, y), child in level.items():
+            big = bigs.get((x >> 1, y >> 1))
+            if big is None:
+                big = bigs[(x >> 1, y >> 1)] = np.full((2 * ts, 2 * ts), nodata,
+                                                       child.dtype)
+            qy, qx = (y & 1) * ts, (x & 1) * ts
+            big[qy : qy + ts, qx : qx + ts] = child
+        level = {k: b[1::2, 1::2] for k, b in bigs.items()
+                 if (b[1::2, 1::2] != nodata).any()}
+        out.update({(z, x, y): c for (x, y), c in level.items()})
+    return out
+
+
 def metadata_for(rows, minzoom: int, maxzoom: int, name: str = "tiles") -> list[tuple[str, str]]:
     """Tileset metadata per /root/reference/src/render.rs:50-89."""
     idx = np.array([image_index(r["image_id"]) for r in rows], dtype=np.uint64)

@@ -392,7 +392,7 @@ def _upsert_pyramid_batch(batch_df: DataFrame, out_dir: str, minzoom: int,
     Zooms below XB_BITS hold <= 4^XB_BITS tiles TOTAL regardless of data
     size, so they rebuild fully from the assembled zoom-XB_BITS level —
     per-batch overview work is O(dirty stripes) + O(1), not O(base)."""
-    from ..operators.overview import cascade_down
+    from ..operators.overview import cascade_fragments
 
     spark = batch_df.sparkSession
     tiles_path = os.path.join(out_dir, "tiles")
@@ -442,10 +442,9 @@ def _upsert_pyramid_batch(batch_df: DataFrame, out_dir: str, minzoom: int,
                 # the whole sub-base pyramid is <= 4^XB_BITS tiles —
                 # stripe bookkeeping is pointless, rebuild it fully
                 live_base = live.filter(F.col("zoom") == base).select(*_TILE_COLS)
-                out_low = cascade_down(live_base, minzoom, tile_size,
-                                       dtype_tag, colormap_str,
-                                       top_zoom=base,
-                                       persisted=cascade_cached)
+                out_low = cascade_fragments(live_base, minzoom, tile_size,
+                                            dtype_tag, colormap_str,
+                                            top_zoom=base)
             else:
                 mid_floor = max(minzoom, XB_BITS)
                 stripe_pred = F.lit(False)
@@ -454,11 +453,17 @@ def _upsert_pyramid_batch(batch_df: DataFrame, out_dir: str, minzoom: int,
                 dirty_base = live.filter(
                     (F.col("zoom") == base) & stripe_pred).select(*_TILE_COLS)
                 # zooms [mid_floor, base) within dirty stripes only
-                mid = cascade_down(dirty_base, mid_floor, tile_size, dtype_tag,
-                                   colormap_str, top_zoom=base,
-                                   persisted=cascade_cached)
+                mid = cascade_fragments(dirty_base, mid_floor, tile_size,
+                                        dtype_tag, colormap_str, top_zoom=base)
                 out_low = mid
                 if minzoom < mid_floor:
+                    # mid feeds both the write and the zoom-XB_BITS
+                    # level below: persist (not localCheckpoint) so its
+                    # python stages run once AND it is freed in the
+                    # finally below (checkpoint blocks would linger
+                    # until driver GC, one leak per micro-batch)
+                    mid = mid.persist()
+                    cascade_cached.append(mid)
                     # assemble the FULL zoom-XB_BITS level (one tile
                     # column per stripe): recomputed dirty columns + old
                     # clean ones (pruned: zoom partition + xb columns)
@@ -466,18 +471,11 @@ def _upsert_pyramid_batch(batch_df: DataFrame, out_dir: str, minzoom: int,
                         (F.col("zoom") == mid_floor)
                         & ~F.col("x").isin([int(b) for b in dirty_bs])
                     ).select(*_TILE_COLS)
-                    # persist (not localCheckpoint): cascade_down
-                    # forks it per level, and persist both prevents the
-                    # python-stage re-execution AND is freed in the
-                    # finally below (checkpoint blocks would linger
-                    # until driver GC, one leak per micro-batch)
                     full_mid = (mid.filter(F.col("zoom") == mid_floor)
-                                .select(*_TILE_COLS).unionByName(old_mid)
-                                .persist())
-                    cascade_cached.append(full_mid)
-                    tiny = cascade_down(full_mid, minzoom, tile_size, dtype_tag,
-                                        colormap_str, top_zoom=mid_floor,
-                                        persisted=cascade_cached)
+                                .select(*_TILE_COLS).unionByName(old_mid))
+                    tiny = cascade_fragments(full_mid, minzoom, tile_size,
+                                             dtype_tag, colormap_str,
+                                             top_zoom=mid_floor)
                     out_low = mid.unionByName(tiny)
             _write_staged(out_low, staged2)
             delta += _swap_partitions(staged2, tiles_path)

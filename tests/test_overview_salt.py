@@ -10,10 +10,12 @@ import numpy as np
 import pytest
 
 from rastertiler_rs_spark.fixtures import NODATA, generate_images
+from rastertiler_rs_spark.kernel import encode_tile
 from rastertiler_rs_spark.operators.overview import (
-    build_overview_level, decode_canvas, render_pyramid)
+    cascade_fragments, decode_canvas, render_pyramid)
 from rastertiler_rs_spark.operators.render import render
-from rastertiler_rs_spark.png import decode_rgba
+from rastertiler_rs_spark.oracle import overview_oracle
+from rastertiler_rs_spark.png import Colormap, decode_rgba
 
 
 def _spark_images(spark, n, tag="u8"):
@@ -25,6 +27,16 @@ def _fused_map(df):
     out = {(r["zoom"], r["x"], r["y"]): bytes(r["png"]) for r in rows}
     assert len(out) == len(rows)
     return out
+
+
+def _oracle_overviews(base, top_zoom, minzoom, ts, tag, cmap=None):
+    """Encoded overview tiles of the fused ``base`` level by the
+    level-by-level numpy rule (oracle.overview_oracle)."""
+    colormap = Colormap.parse(cmap, NODATA) if cmap else None
+    canvases = {(x, y): decode_canvas(png, tag, colormap)
+                for (_z, x, y), png in base.items()}
+    return {k: encode_tile(c, tag, NODATA, colormap)
+            for k, c in overview_oracle(canvases, top_zoom, minzoom, ts).items()}
 
 
 @pytest.mark.parametrize("tag,minz,maxz,ts,cmap,thresh", [
@@ -42,9 +54,6 @@ def test_salted_equals_single_phase(spark, tag, minz, maxz, ts, cmap, thresh):
 
 
 def test_decode_canvas_roundtrip_all_encode_classes(spark):
-    from rastertiler_rs_spark.kernel import encode_tile
-    from rastertiler_rs_spark.png import Colormap
-
     rng = np.random.RandomState(7)
     # grayscale u8
     a8 = rng.randint(0, 256, (32, 32)).astype(np.uint8)
@@ -104,7 +113,7 @@ def test_overview_level_psnr_vs_direct(spark):
     ts = 64
     direct = _fused_map(render(imgs, 7, 8, ts, "u8"))
     level8 = render(imgs, 8, 8, ts, "u8")
-    ov = _fused_map(build_overview_level(level8, ts, "u8"))
+    ov = _fused_map(cascade_fragments(level8, 7, ts, "u8", top_zoom=8))
     d7 = {k: v for k, v in direct.items() if k[0] == 7}
 
     # tile sets agree except nearest-sampling dropouts at data edges
@@ -118,57 +127,35 @@ def test_overview_level_psnr_vs_direct(spark):
     assert np.mean(psnrs) >= 40.0, f"mean PSNR {np.mean(psnrs):.1f} < 40 dB"
 
 
-def test_cascade_down_equals_level_by_level(spark):
-    """The staged multi-level cascade (span>1, one python stage per
-    span zooms) must be byte-identical to chaining build_overview_level
-    one zoom at a time."""
-    from pyspark.sql import functions as F
-
-    from rastertiler_rs_spark.operators.overview import cascade_down
-
-    imgs = _spark_images(spark, 32)
-    ts = 64
-    base = render(imgs, 7, 7, ts, "u8")
-    got = _fused_map(cascade_down(base, 1, ts, "u8", span=3, top_zoom=7))
-    want = {}
-    prev = base
-    for _z in range(6, 0, -1):
-        prev = build_overview_level(prev, ts, "u8")
-        want.update(_fused_map(prev))
-    assert got == want
+_CMAP5 = "1:#686868,2:#38A800,3:#859B6C,4:#3B7D46,5:#FF00FF"
 
 
-@pytest.mark.parametrize("tag,cmap", [
-    ("u8", None),
-    ("u32", None),
-    ("u8", "1:#686868,2:#38A800,3:#859B6C,4:#3B7D46,5:#FF00FF"),
+@pytest.mark.parametrize("tag,cmap,ts,top_zoom,minzoom", [
+    pytest.param("u8", None, 64, 6, 0, id="u8-None"),
+    pytest.param("u32", None, 64, 6, 0, id="u32-None"),
+    pytest.param("u8", _CMAP5, 64, 6, 0, id=f"u8-{_CMAP5}"),
+    # span 6 > log2(16): strides wider than a tile skip whole base tiles
+    pytest.param("u8", None, 16, 12, 6, id="u8-None-ts16-span6"),
+    # 48 is not a multiple of 2^5: fragments are ragged and offset
+    pytest.param("u8", None, 48, 10, 5, id="u8-None-ts48-span5"),
 ])
-def test_fragment_cascade_byte_parity(spark, tag, cmap):
+def test_fragment_cascade_byte_parity(spark, tag, cmap, ts, top_zoom, minzoom):
     """The one-shot fragment cascade (k-fold decimation == strided
     sampling; one shuffle for all levels) must be byte-identical to the
-    level-by-level cascade on every encoder class — grayscale, u32
-    adaptive palette/RGB, and user-colormap paletted."""
-    from rastertiler_rs_spark.operators.overview import (cascade_down,
-                                                         cascade_fragments)
-
+    level-by-level rule on every encoder class — grayscale, u32
+    adaptive palette/RGB, and user-colormap paletted — and for spans
+    deeper than log2(tile_size) and tile sizes that 2^span does not
+    divide. (The fixture footprints are small: the two deep shapes use
+    base zooms where every cascaded zoom holds data.)"""
     imgs = _spark_images(spark, 32, tag)
-    ts = 64
-    base = render(imgs, 6, 6, ts, tag, colormap_str=cmap)
-    got = _fused_map(cascade_fragments(base, 0, ts, tag, cmap, top_zoom=6))
-    want = _fused_map(cascade_down(base, 0, ts, tag, cmap, top_zoom=6))
+    base = render(imgs, top_zoom, top_zoom, ts, tag, colormap_str=cmap)
+    got = _fused_map(cascade_fragments(base, minzoom, ts, tag, cmap,
+                                       top_zoom=top_zoom))
+    want = _oracle_overviews(_fused_map(base), top_zoom, minzoom, ts, tag, cmap)
+    if ts != 64:  # the deep shapes must put data on every cascaded zoom
+        assert {k[0] for k in want} == set(range(minzoom, top_zoom))
     assert set(got) == set(want)
     assert got == want
-
-
-def test_fragment_cascade_span_guard(spark):
-    """A span deeper than log2(tile_size) cannot produce >= 1px
-    fragments; the guard must fail fast with chaining guidance."""
-    from rastertiler_rs_spark.operators.overview import cascade_fragments
-
-    imgs = _spark_images(spark, 8)
-    base = render(imgs, 8, 8, 64, "u8")
-    with pytest.raises(ValueError, match="cascade_down"):
-        cascade_fragments(base, 1, 64, "u8", top_zoom=8)
 
 
 def test_render_pyramid_clamps_base_to_maxzoom(spark):
@@ -176,15 +163,32 @@ def test_render_pyramid_clamps_base_to_maxzoom(spark):
     overview threshold 8) must NOT render or emit zooms past maxzoom:
     the base clamps to maxzoom and everything below cascades — exactly
     the reference's minzoom..maxzoom contract."""
-    from rastertiler_rs_spark.operators.overview import cascade_down
-
     imgs = _spark_images(spark, 24)
     ts = 64
     pyr = _fused_map(render_pyramid(imgs, 2, 4, ts, "u8", overview_below=6))
     assert sorted({k[0] for k in pyr}) == [2, 3, 4]
     base = render(imgs, 4, 4, ts, "u8")
     want = _fused_map(base)
-    want.update(_fused_map(cascade_down(base, 2, ts, "u8", top_zoom=4)))
+    want.update(_fused_map(cascade_fragments(base, 2, ts, "u8", top_zoom=4)))
+    assert pyr == want
+
+
+def test_render_pyramid_deep_overviews(spark):
+    """A cascade deeper than log2(tile_size) (z8 base down to z0 at
+    ts=64): direct zooms byte-match the direct render and every
+    overview zoom byte-matches the level-by-level rule."""
+    imgs = _spark_images(spark, 16)
+    ts = 64
+    persisted = []
+    try:
+        pyr = _fused_map(render_pyramid(imgs, 0, 8, ts, "u8", overview_below=8,
+                                        persisted=persisted))
+    finally:
+        for df in persisted:
+            df.unpersist()
+    want = _fused_map(render(imgs, 8, 8, ts, "u8"))
+    want.update(_oracle_overviews(want, 8, 0, ts, "u8"))
+    assert min(k[0] for k in pyr) < 8
     assert pyr == want
 
 

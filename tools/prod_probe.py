@@ -25,8 +25,7 @@ from rastertiler_rs_spark.operators.overview import (render_pyramid,
 from rastertiler_rs_spark.operators.render import render
 from rastertiler_rs_spark.session import get_spark
 
-cpus, n, maxzoom, ts, variant, span = {cpus}, {n}, {maxzoom}, {ts}, {variant!r}, {span}
-import rastertiler_rs_spark.operators.overview as ov
+cpus, n, maxzoom, ts, variant = {cpus}, {n}, {maxzoom}, {ts}, {variant!r}
 spark = get_spark(f"probe-{{cpus}}", cpus=cpus)
 spark.sparkContext.setLogLevel("ERROR")
 path = images_parquet(n, "u8")
@@ -46,20 +45,17 @@ elif variant == "sink":
     tiles = fused.count()
 dt = time.time() - t0
 shutil.rmtree(work, ignore_errors=True)
-print("RESULT " + json.dumps({{"cpus": cpus, "variant": variant, "span": span,
+print("RESULT " + json.dumps({{"cpus": cpus, "variant": variant,
                                "tiles": tiles, "sec": round(dt, 3),
                                "tiles_per_sec": round(tiles / dt, 1)}}))
 """
 
 
-def run(cpus, n, maxzoom, ts, variant, span):
+def run(cpus, n, maxzoom, ts, variant):
     code = _CHILD.format(repo=REPO, cpus=cpus, n=n, maxzoom=maxzoom, ts=ts,
-                         variant=variant, span=span)
-    env = dict(os.environ)
-    if span:
-        env["SPARK_GRAFT_CASCADE_SPAN"] = str(span)
+                         variant=variant)
     out = subprocess.run([sys.executable, "-c", code], capture_output=True,
-                         text=True, timeout=3600, env=env)
+                         text=True, timeout=3600)
     for line in out.stdout.splitlines():
         if line.startswith("RESULT "):
             return json.loads(line[len("RESULT "):])
@@ -72,14 +68,12 @@ def main():
     ap.add_argument("--maxzoom", type=int, default=13)
     ap.add_argument("--ts", type=int, default=256)
     ap.add_argument("--variants", default="mem,sink")
-    ap.add_argument("--span", type=int, default=0)
     ap.add_argument("--levels", default="8,32")
     args = ap.parse_args()
     for variant in args.variants.split(","):
         recs = {}
         for cpus in [int(c) for c in args.levels.split(",")]:
-            recs[cpus] = run(cpus, args.n, args.maxzoom, args.ts, variant,
-                             args.span)
+            recs[cpus] = run(cpus, args.n, args.maxzoom, args.ts, variant)
             print(json.dumps(recs[cpus]), flush=True)
         ks = sorted(recs)
         if len(ks) == 2:
