@@ -290,7 +290,6 @@ def render_pyramid_to_sink(
     dtype_tag: str = "u8",
     colormap_str: str | None = None,
     overview_below: int | None = None,
-    salt_buckets: int | None | str = "auto",
 ) -> DataFrame:
     """The 100 TB realization of render_pyramid: materialize the fork
     at the SINK instead of executor memory. Direct zooms
@@ -313,13 +312,13 @@ def render_pyramid_to_sink(
     tiles_path = f"{out_dir}/tiles"
     if overview_below is None or overview_below <= minzoom:
         fused = render(images, minzoom, maxzoom, tile_size, dtype_tag,
-                       colormap_str, salt_buckets=salt_buckets)
+                       colormap_str)
         fused.write.mode("overwrite").partitionBy("zoom").parquet(tiles_path)
         return spark.read.parquet(tiles_path)
 
     base = min(max(overview_below, minzoom), maxzoom)
     full = render(images, base, maxzoom, tile_size, dtype_tag,
-                  colormap_str, salt_buckets=salt_buckets)
+                  colormap_str)
     full.write.mode("overwrite").partitionBy("zoom").parquet(tiles_path)
     base_level = spark.read.parquet(tiles_path).filter(
         F.col("zoom") == base)  # prunes to the zoom=<base> directory
@@ -337,7 +336,6 @@ def render_pyramid(
     dtype_tag: str = "u8",
     colormap_str: str | None = None,
     overview_below: int | None = None,
-    salt_buckets: int | None | str = "auto",
     persisted: list | None = None,
 ) -> DataFrame:
     """Full pyramid with the overview cascade below ``overview_below``:
@@ -355,7 +353,7 @@ def render_pyramid(
 
     if overview_below is None or overview_below <= minzoom:
         return render(images, minzoom, maxzoom, tile_size, dtype_tag,
-                      colormap_str, salt_buckets=salt_buckets)
+                      colormap_str)
     # Clamp to the requested range: the reference renders exactly
     # minzoom..maxzoom (src/main.rs zoom validation) — with the CLI's
     # default overview_below above a small --maxzoom, an unclamped base
@@ -386,7 +384,7 @@ def render_pyramid(
     #   the sorter — slower at both parallelism levels than
     #   decompressing mixed cached batches on the one filtered scan.
     full = render(images, base, maxzoom, tile_size, dtype_tag,
-                  colormap_str, salt_buckets=salt_buckets)
+                  colormap_str)
     return _with_overviews(full, base, minzoom, tile_size, dtype_tag,
                           colormap_str, persisted)
 

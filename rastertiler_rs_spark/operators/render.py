@@ -14,7 +14,9 @@ Spark-first re-expression of `rastertiler-rs render`
 
   BLOCKS path (zooms < partition_zoom — low-zoom exact path):
   images ── mapInPandas window-read kernel per (image, tile)
-         ── groupBy(zoom,x,y) [+ salt] mosaic+encode
+         ── groupBy(zoom,x,y[,salt]) mosaic+encode  (_mosaic_blocks,
+            shared with the warp render)
+         ── [hot keys only: groupBy(zoom,x,y) argmax-merge + encode]
          ── xxhash64 content hash + TMS y-flip (S9)
 
 Design notes for 100 TB scale:
@@ -37,11 +39,12 @@ Design notes for 100 TB scale:
   python stages) and groups stream through sorted partitions, so one
   python call + one Arrow batch covers MANY cells.
 - Skew: cell-group cost is bounded by images-per-cell; raise
-  partition_zoom to split dense areas (quadtree descent). For
-  pathological low-zoom overlap pass salt_buckets — salted partial
-  mosaics (pixelwise img_ord-argmax summaries) merged by a second tiny
-  aggregate. At scale, prefer building low zooms with the overview
-  cascade (operators/overview.py): every group <= 4 rows.
+  partition_zoom to split dense areas (quadtree descent). On the
+  blocks path, tile keys whose cover count reaches salt_threshold fold
+  into salted partial mosaics (pixelwise img_ord-argmax summaries)
+  merged by a second tiny aggregate. At scale, prefer building low
+  zooms with the overview cascade (operators/overview.py): every
+  group <= 4 rows.
 """
 
 from __future__ import annotations
@@ -236,35 +239,6 @@ def _kernel_all_zooms_fn(minzoom: int, maxzoom: int, tile_size: int,
     return fn
 
 
-def _encode_batch_fn(tile_size: int, dtype_tag: str, colormap_str: str | None):
-    """Mosaic + encode over rows of (zoom, x, y, contribs:array<struct>) —
-    the groups were built by a JVM-side collect_list aggregate, so one
-    Arrow batch carries MANY tiles (vs one applyInPandas call per tile)."""
-    np_dtype = np.uint8 if dtype_tag == "u8" else np.uint32
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        colormap = Colormap.parse(colormap_str, NODATA) if colormap_str else None
-        for pdf in batches:
-            out = {"zoom": [], "x": [], "y": [], "png": []}
-            for row in pdf.itertuples(index=False):
-                contribs = [
-                    (c["image_id"], int(c["left"]), int(c["top"]), int(c["bw"]),
-                     int(c["bh"]),
-                     np.frombuffer(c["block"], dtype=np_dtype).reshape(int(c["bh"]), int(c["bw"])))
-                    for c in row.contribs
-                ]
-                canvas = mosaic(contribs, tile_size, NODATA, np_dtype)
-                if canvas is None:
-                    continue
-                out["zoom"].append(int(row.zoom))
-                out["x"].append(int(row.x))
-                out["y"].append(int(row.y))
-                out["png"].append(encode_tile(canvas, dtype_tag, NODATA, colormap))
-            yield pd.DataFrame(out)
-
-    return fn
-
-
 def _render_cell(group: pd.DataFrame, pz: int, zlo: int, zhi: int,
                  tile_size: int, dtype_tag: str, np_dtype, colormap,
                  out: dict) -> None:
@@ -382,9 +356,8 @@ def _fold_partial(contribs, tile_size: int, np_dtype, nodata=NODATA):
     partial: paste ascending by img_ord so winner[p] is the MAX img_ord
     with data at p — associative+commutative, so partials from any
     bucket split merge exactly. Returns None when the bucket carried
-    only nodata. ONE copy of the winner rule, shared by the explicit
-    salt path and the auto router (a drifted duplicate would break the
-    salted-vs-plain byte parity on only one path)."""
+    only nodata. Stage B's hot branch (_route_mosaic_fn) is its only
+    caller, for render and render_warp alike."""
     canvas = np.full((tile_size, tile_size), nodata, dtype=np_dtype)
     winner = np.full((tile_size, tile_size), -1, dtype=np.int64)
     for c in sorted(contribs, key=lambda c: int(c["img_ord"])):
@@ -420,38 +393,12 @@ def _argmax_merge(parts, tile_size: int, np_dtype, nodata=NODATA):
     return canvas
 
 
-def _partial_mosaic_fn(tile_size: int, np_dtype):
-    """Phase 1 of the salted mosaic: fold one salt-bucket's contributions
-    into (canvas, winner) where winner[p] = img_ord of the contributor
-    that owns pixel p (-1 = nodata). Pasting ascending by img_ord makes
-    winner[p] the MAX img_ord with data at p — an associative,
-    commutative summary, so partials merge exactly (img_ord order ==
-    image_id order for the fixed-width id scheme)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"zoom": [], "x": [], "y": [], "canvas": [], "winner": []}
-            for row in pdf.itertuples(index=False):
-                folded = _fold_partial(row.contribs, tile_size, np_dtype)
-                if folded is None:
-                    continue
-                canvas, winner = folded
-                out["zoom"].append(int(row.zoom))
-                out["x"].append(int(row.x))
-                out["y"].append(int(row.y))
-                out["canvas"].append(canvas.tobytes())
-                out["winner"].append(winner.tobytes())
-            yield pd.DataFrame(out)
-
-    return fn
-
-
 def _route_mosaic_fn(tile_size: int, dtype_tag: str,
                      colormap_str: str | None, nodata=NODATA):
-    """Unified stage B of the hot-routed mosaic: rows are (zoom, x, y,
-    salt, is_hot, contribs). COLD groups (salt 0, not hot) hold their
+    """Stage B of _mosaic_blocks: rows are (zoom, x, y[, salt],
+    is_hot, contribs). COLD groups (salt 0, not hot) hold their
     tile's ENTIRE contribution list — mosaic + encode to a finished
-    png here (one-pass, exactly the plain path's math). HOT groups are
+    png here (one pass, kernel.mosaic's paste rule). HOT groups are
     one salt bucket of a hot tile — fold to a (canvas, winner) partial
     for stage C's argmax merge. Output rows carry either png or
     canvas+winner, never both."""
@@ -500,7 +447,7 @@ def _route_mosaic_fn(tile_size: int, dtype_tag: str,
 
 def _merge_or_pass_fn(tile_size: int, dtype_tag: str,
                       colormap_str: str | None, nodata=NODATA):
-    """Unified stage C: finished cold PNGs pass straight through;
+    """Stage C of _mosaic_blocks: finished cold PNGs pass through;
     hot tiles argmax-merge their salt partials and encode."""
     np_dtype = np.uint8 if dtype_tag == "u8" else np.uint32
 
@@ -529,28 +476,7 @@ def _merge_or_pass_fn(tile_size: int, dtype_tag: str,
     return fn
 
 
-def _merge_encode_fn(tile_size: int, dtype_tag: str, colormap_str: str | None):
-    """Phase 2: pixelwise argmax-merge of salt partials, then encode."""
-    np_dtype = np.uint8 if dtype_tag == "u8" else np.uint32
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        colormap = Colormap.parse(colormap_str, NODATA) if colormap_str else None
-        for pdf in batches:
-            out = {"zoom": [], "x": [], "y": [], "png": []}
-            for row in pdf.itertuples(index=False):
-                canvas = _argmax_merge(row.partials, tile_size, np_dtype)
-                if canvas is None:
-                    continue
-                out["zoom"].append(int(row.zoom))
-                out["x"].append(int(row.x))
-                out["y"].append(int(row.y))
-                out["png"].append(encode_tile(canvas, dtype_tag, NODATA, colormap))
-            yield pd.DataFrame(out)
-
-    return fn
-
-
-# auto-routing threshold: a plain mosaic task costs ~30-60 µs per
+# salting threshold: a plain mosaic task costs ~30-60 µs per
 # contribution, so keys below ~8k contributions finish in <~0.5 s and
 # the two-phase path's winner-array partials (9x the canvas bytes per
 # bucket) would cost more than they save; above it the single task is
@@ -558,87 +484,95 @@ def _merge_encode_fn(tile_size: int, dtype_tag: str, colormap_str: str | None):
 # OOM). Relative sizing doesn't matter at corpus scale — every
 # sub-partition-zoom tile is astronomically past any threshold.
 _AUTO_SALT_THRESHOLD = 8192
-# hard cap on the auto-router's driver-collected hot keyset: with
-# partition_zoom=None the manifest spans every zoom, and a dense corpus
-# could cross the threshold on millions of mid-zoom tiles — only the
-# HOTTEST keys matter for the serial-tail problem, and unsalted keys
-# still render correctly through the cold path (just single-task). The
-# top-K keeps the collect + broadcast bounded at any scale.
+# hard cap on the collected hot keyset: with partition_zoom=None
+# the manifest spans every zoom, and a dense corpus could cross the
+# threshold on millions of mid-zoom tiles — only the HOTTEST keys
+# matter for the serial-tail problem, and unsalted keys still render
+# correctly through the cold path (just single-task). The top-K keeps
+# the collect + broadcast bounded at any scale.
 _AUTO_SALT_MAX_KEYS = 65536
 
 
-def render(
-    images: DataFrame,
-    minzoom: int,
-    maxzoom: int,
-    tile_size: int = 512,
-    dtype_tag: str = "u8",
-    colormap_str: str | None = None,
-    salt_buckets: int | None | str = "auto",
-    partition_zoom: int | None | str = "auto",
-    salt_threshold: int | None | str = "auto",
-    persisted: list | None = None,
-) -> DataFrame:
-    """images table → fused tile table
-    (zoom int, x long, y long, tile_row long, tile_hash long, png binary)
-    where (x, y) is XYZ and tile_row is the TMS-flipped y
-    (/root/reference/src/mbtiles.rs:111-113). Lazy — write or collect to
-    execute. Validation mirrors /root/reference/src/render.rs:39-48 and
-    /root/reference/src/main.rs:108-115, :146-154.
+def _hot_keys(footprints: DataFrame, minzoom: int, maxzoom: int,
+              threshold: int) -> DataFrame:
+    """The blocks-path hot-key query: (zoom, x, y) of the tile keys in
+    [minzoom, maxzoom] whose footprint cover count reaches
+    ``threshold``, hottest first, at most ``_AUTO_SALT_MAX_KEYS`` of
+    them (a bounded TakeOrdered). Pure JVM — the tile_manifest explode
+    needs only the EPSG:3857 footprint columns, no decode, no python —
+    and the cover count is a superset of the blocks the kernel emits,
+    which is exactly right for routing."""
+    return (
+        tile_manifest(footprints, minzoom, maxzoom)
+        .groupBy("zoom", "tx", "ty").count()
+        .filter(F.col("count") >= threshold)
+        .orderBy(F.desc("count"), "zoom", "tx", "ty")  # deterministic
+        .limit(_AUTO_SALT_MAX_KEYS)
+        .select("zoom", F.col("tx").alias("x"), F.col("ty").alias("y"))
+    )
 
-    Physical strategy: zooms >= ``partition_zoom`` (pz) run the CELL
-    path — images are exploded to their covering zoom-pz cells and each
-    cell group renders its tiles end-to-end, so the shuffle ships
-    compressed source bytes (~KBs/image) instead of raw resampled
-    pixels (~tile_size² bytes/tile): ~50x less shuffle I/O at high
-    zooms, and kernel+mosaic+encode fuse into one stage. Zooms < pz run
-    the BLOCKS path (per-tile resampled blocks shuffled to a
-    groupBy(zoom,x,y) mosaic) — at low zooms blocks are tiny, and this
-    path is the one that accepts salting (salt_buckets) when a single
-    low-zoom tile aggregates millions of images; at scale prefer the
-    overview cascade (operators/overview.py) for those zooms entirely.
-    ``partition_zoom="auto"`` picks min(8, maxzoom); None disables the
-    cell path. Both paths produce byte-identical tiles (pinned by the
-    parity tests).
 
-    Salting defaults to ``"auto"``: tile keys whose contribution count
-    crosses ``_AUTO_SALT_THRESHOLD`` render through the two-phase
-    salted mosaic (buckets = defaultParallelism), the long tail through
-    the plain single-pass one — a z0-z2 tile over a dense corpus
-    otherwise aggregates every image in ONE task, a serial tail that
-    flattens N→4N scaling (and at 10^12 rows would simply OOM). The
-    routing count is one extra driver action over the persisted block
-    stream (the kernel python stage still runs exactly once); see the
-    in-function comment for the measured-and-rejected zero-action
-    alternatives. ``salt_buckets=None`` forces the plain path;
-    explicit ints keep their round-3 semantics (salt everything, or
-    route with an explicit integer ``salt_threshold``). Salted and
-    plain output is byte-identical (tests/test_overview_salt.py).
+def _mosaic_blocks(blocks: DataFrame, hot_rows, tile_size: int,
+                   dtype_tag: str, colormap_str: str | None, n_parts: int,
+                   nodata=NODATA) -> DataFrame:
+    """The blocks-path mosaic, shared by render and render_warp:
+    (zoom, x, y, img_ord, left, top, bw, bh, block) rows → (zoom, x, y,
+    png), pasted in ascending img_ord.
 
-    pz tradeoff at 10^12 rows: higher pz → more groups (up to 4^pz,
-    plenty of parallelism) and smaller per-group tile counts, but more
-    duplication of images spanning cell borders (fan-out = (extent/
-    cell + 1)²). Pick pz so a typical image spans ~1 cell; dense-area
-    skew is bounded by images-per-cell and can be split further by
-    raising pz (quadtree descent) — AQE skew hints apply to the
-    exchange either way.
-    """
-    if colormap_str is not None and dtype_tag != "u8":
-        raise ValueError("colormap can only be provided for uint8 data")
-    if dtype_tag not in ("u8", "u32"):
-        raise ValueError(f"data type is not supported: {dtype_tag}")
-    if minzoom > maxzoom:
-        raise ValueError("minzoom must be <= maxzoom")
-    if not (0 <= minzoom <= 24 and 0 <= maxzoom <= 24):
-        raise ValueError("zoom must be no greater than 24")
-
-    if partition_zoom == "auto":
-        pz = min(8, maxzoom)
+    The keys in ``hot_rows`` (collected _hot_keys rows) are salted over
+    defaultParallelism buckets: stage B folds each bucket of a hot key
+    to a (canvas, winner) partial and mosaics + encodes every cold key
+    in one pass; stage C argmax-merges the partials and passes the
+    finished cold PNGs through. A hot tile thus parallelizes across
+    buckets instead of aggregating every image in ONE task (a serial
+    tail that flattens N→4N scaling, and at 10^12 rows an OOM); cold
+    tiles pay one extra shuffle hop of their PNG (KBs). With no hot
+    keys stage B alone is the whole mosaic. Salted and plain output is
+    byte-identical (tests/test_overview_salt.py)."""
+    spark = blocks.sparkSession
+    if hot_rows:
+        hot_keys = spark.createDataFrame(
+            [(int(r["zoom"]), int(r["x"]), int(r["y"]), True)
+             for r in hot_rows],
+            "zoom int, x long, y long, is_hot boolean")
+        buckets = spark.sparkContext.defaultParallelism
+        blocks = (
+            blocks.join(F.broadcast(hot_keys), ["zoom", "x", "y"], "left")
+            .fillna(False, subset=["is_hot"])
+            .withColumn("salt", F.when(
+                F.col("is_hot"), F.pmod(F.col("img_ord"), F.lit(buckets))
+            ).otherwise(F.lit(0)).cast("int"))
+        )
+        keys = ["zoom", "x", "y", "salt"]
     else:
-        pz = partition_zoom
+        blocks = blocks.withColumn("is_hot", F.lit(False))
+        keys = ["zoom", "x", "y"]
+    stage_b = blocks.repartition(n_parts, *keys).groupBy(*keys, "is_hot").agg(
+        F.collect_list(
+            F.struct("img_ord", "left", "top", "bw", "bh", "block")
+        ).alias("contribs")
+    ).mapInPandas(
+        _route_mosaic_fn(tile_size, dtype_tag, colormap_str, nodata),
+        "zoom int, x long, y long, png binary, canvas binary, winner binary",
+    )
+    if not hot_rows:
+        return stage_b.select("zoom", "x", "y", "png")
+    return stage_b.repartition(n_parts, "zoom", "x", "y").groupBy(
+        "zoom", "x", "y").agg(
+        F.collect_list(F.struct("png", "canvas", "winner")).alias("partials")
+    ).mapInPandas(
+        _merge_or_pass_fn(tile_size, dtype_tag, colormap_str, nodata),
+        "zoom int, x long, y long, png binary",
+    )
 
-    spark = images.sparkSession
-    # Explicit repartitions below pin stage parallelism: AQE's bytes-based
+
+def _cell_tiles(images: DataFrame, src: DataFrame, pz: int, zlo: int,
+                zhi: int, tile_size: int, dtype_tag: str,
+                colormap_str: str | None) -> DataFrame:
+    """CELL path, zooms [zlo, zhi] >= pz: explode each image to its
+    covering zoom-pz cells, shuffle compressed source bytes by cell and
+    render every cell group end to end (_cell_stream_fn)."""
+    # Explicit repartitions pin stage parallelism: AQE's bytes-based
     # coalescing would collapse these Python-UDF-heavy stages to a handful
     # of tasks (shuffle bytes are small — compressed PNGs — but per-row
     # compute is large), serializing the pipeline. Measured 3.5x on the
@@ -664,261 +598,180 @@ def render(
     # deriving from bytes keeps both measured optima (guide §2).
     from ..session import env_int
 
-    cores_ = spark.sparkContext.defaultParallelism
+    cores = images.sparkSession.sparkContext.defaultParallelism
     mult_cap = env_int("SPARK_GRAFT_CELL_MULT", 8)
-    n_parts = max(cores_ * mult_cap, 8)
+    n_parts = max(cores * mult_cap, 8)
     try:
         size_b = int(images._jdf.queryExecution().optimizedPlan()
                      .stats().sizeInBytes())
         est = size_b // env_int("SPARK_GRAFT_CELL_TASK_BYTES", 196608)
-        n_parts = int(max(min(est, cores_ * mult_cap), cores_ * 2, 8))
+        n_parts = int(max(min(est, cores * mult_cap), cores * 2, 8))
     except Exception:
         pass  # no stats (unusual plan): keep the ceiling
-    # The kernel MAP stage (decode+window-read per image) paid a measured
-    # ~20-30 ms/task fixed python-task cost (the per-task zip re-parse,
-    # see ``_worker``) while its per-image work is small — fewer, larger
+    # The map side here (scan → footprint → tile-range → explode →
+    # shuffle write) is pure JVM codegen since with_footprints became
+    # column expressions: no repartition needed to pin parallelism —
+    # even a handful of scan tasks push the ~MBs/task through in
+    # JVM time, and one fewer exchange means one fewer stage floor.
+    # (With the old pandas-UDF footprint stage this same map side
+    # was scan-split-bound and needed fine maxPartitionBytes or an
+    # explicit exchange; profiled at local[32] as pure Arrow wait.)
+    covers = tile_range_cols(src.withColumn("zoom", F.lit(pz).cast("int")))
+    exploded = (
+        covers.withColumn("cx", F.explode(F.sequence("txmin", "txmax")))
+        .withColumn("cy", F.explode(F.sequence("tymin", "tymax")))
+        .select("cx", "cy", "image_id", "bytes", "fmt",
+                "minx", "miny", "maxx", "maxy")
+    )
+    return (
+        exploded.repartition(n_parts, "cx", "cy")
+        .sortWithinPartitions("cx", "cy")
+        .mapInPandas(
+            _cell_stream_fn(pz, zlo, zhi, tile_size, dtype_tag, colormap_str),
+            "zoom int, x long, y long, png binary",
+        )
+    )
+
+
+def _blocks_tiles(src: DataFrame, general_ids: bool, hot_rows, zlo: int,
+                  zhi: int, tile_size: int, dtype_tag: str,
+                  colormap_str: str | None) -> DataFrame:
+    """BLOCKS path, zooms [zlo, zhi] < pz: decode each image once and
+    window-read its per-tile blocks (_kernel_all_zooms_fn), then
+    _mosaic_blocks. ``general_ids`` joins an order-preserving ord64
+    paste key on (ids outside the fixed 'img' + 8-digit scheme, whose
+    parsed integer no longer sorts like the string)."""
+    # kernel and mosaic stages at cores*2, not the cell stage's cores*8:
+    # tuned while every python task paid a fixed start-up cost (the
+    # per-task zip re-parse, see ``_worker``) — fewer, larger kernel
     # tasks won (128→64 tasks saved ~2.4 s of a ~5 s stage at
-    # local[32]); group/encode stages keep 4x parallelism where per-task
-    # compute dominates.
-    n_parts_map = max(spark.sparkContext.defaultParallelism * 2, 8)
+    # local[32]), and the mosaic only handles the zooms below pz
+    # (at most 4^pz/3 tiles), so per-tile cost is even and tail-packing
+    # buys nothing
+    n_parts = max(src.sparkSession.sparkContext.defaultParallelism * 2, 8)
+    if general_ids:
+        # distinct ids sorted distributively: monotonically_increasing_id
+        # follows range-partition order (non-dense but order-preserving —
+        # order is all the paste and winner rules need)
+        ord_map = (src.select("image_id").distinct().orderBy("image_id")
+                   .withColumn("ord64", F.monotonically_increasing_id()))
+        src = src.join(ord_map, "image_id")
+    # the repartition costs one pass of source bytes but balances the
+    # decode+kernel across tasks (scan splits alone are skewed by
+    # row-group byte sizes); measured faster than scan-aligned
+    blocks = src.repartition(n_parts, "image_id").mapInPandas(
+        _kernel_all_zooms_fn(zlo, zhi, tile_size, use_input_ord=general_ids),
+        _KERNEL_SCHEMA)
+    return _mosaic_blocks(blocks, hot_rows, tile_size, dtype_tag,
+                          colormap_str, n_parts)
+
+
+def render(
+    images: DataFrame,
+    minzoom: int,
+    maxzoom: int,
+    tile_size: int = 512,
+    dtype_tag: str = "u8",
+    colormap_str: str | None = None,
+    partition_zoom: int | None | str = "auto",
+    salt_threshold: int | None = _AUTO_SALT_THRESHOLD,
+) -> DataFrame:
+    """images table → fused tile table
+    (zoom int, x long, y long, tile_row long, tile_hash long, png binary)
+    where (x, y) is XYZ and tile_row is the TMS-flipped y
+    (/root/reference/src/mbtiles.rs:111-113). Lazy — write or collect to
+    execute. Validation mirrors /root/reference/src/render.rs:39-48 and
+    /root/reference/src/main.rs:108-115, :146-154.
+
+    Physical strategy: zooms >= ``partition_zoom`` (pz) run the CELL
+    path — images are exploded to their covering zoom-pz cells and each
+    cell group renders its tiles end-to-end, so the shuffle ships
+    compressed source bytes (~KBs/image) instead of raw resampled
+    pixels (~tile_size² bytes/tile): ~50x less shuffle I/O at high
+    zooms, and kernel+mosaic+encode fuse into one stage. Zooms < pz run
+    the BLOCKS path (per-tile resampled blocks shuffled to a
+    groupBy(zoom,x,y) mosaic) — at low zooms blocks are tiny, and this
+    path is the one that salts hot keys when a single low-zoom tile
+    aggregates millions of images; at scale prefer the overview cascade
+    (operators/overview.py) for those zooms entirely.
+    ``partition_zoom="auto"`` picks min(8, maxzoom); None disables the
+    cell path. Both paths produce byte-identical tiles (pinned by the
+    parity tests).
+
+    Salting: blocks-path tile keys whose footprint cover count reaches
+    ``salt_threshold`` (default ``_AUTO_SALT_THRESHOLD``) mosaic in two
+    phases over defaultParallelism salt buckets, the long tail in one
+    pass (_mosaic_blocks); 1 salts every key, None none. The hot keys
+    come from a pure-JVM cover count that shares one collect
+    with the image-id scheme check, so the kernel python stage still
+    runs exactly once. Salted and plain output is byte-identical
+    (tests/test_overview_salt.py).
+
+    pz tradeoff at 10^12 rows: higher pz → more groups (up to 4^pz,
+    plenty of parallelism) and smaller per-group tile counts, but more
+    duplication of images spanning cell borders (fan-out = (extent/
+    cell + 1)²). Pick pz so a typical image spans ~1 cell; dense-area
+    skew is bounded by images-per-cell and can be split further by
+    raising pz (quadtree descent) — AQE skew hints apply to the
+    exchange either way.
+    """
+    if colormap_str is not None and dtype_tag != "u8":
+        raise ValueError("colormap can only be provided for uint8 data")
+    if dtype_tag not in ("u8", "u32"):
+        raise ValueError(f"data type is not supported: {dtype_tag}")
+    if minzoom > maxzoom:
+        raise ValueError("minzoom must be <= maxzoom")
+    if not (0 <= minzoom <= 24 and 0 <= maxzoom <= 24):
+        raise ValueError("zoom must be no greater than 24")
+
+    if partition_zoom == "auto":
+        pz = min(8, maxzoom)
+    else:
+        pz = partition_zoom
+
     src = with_footprints(images).select(
         "image_id", "bytes", "fmt", "minx", "miny", "maxx", "maxy"
     )
 
     cell_tiles = None
     if pz is not None and pz <= maxzoom:
-        zlo = max(minzoom, pz)
-        # The map side here (scan → footprint → tile-range → explode →
-        # shuffle write) is pure JVM codegen since with_footprints became
-        # column expressions: no repartition needed to pin parallelism —
-        # even a handful of scan tasks push the ~MBs/task through in
-        # JVM time, and one fewer exchange means one fewer stage floor.
-        # (With the old pandas-UDF footprint stage this same map side
-        # was scan-split-bound and needed fine maxPartitionBytes or an
-        # explicit exchange; profiled at local[32] as pure Arrow wait.)
-        covers = tile_range_cols(src.withColumn("zoom", F.lit(pz).cast("int")))
-        exploded = (
-            covers.withColumn("cx", F.explode(F.sequence("txmin", "txmax")))
-            .withColumn("cy", F.explode(F.sequence("tymin", "tymax")))
-            .select("cx", "cy", "image_id", "bytes", "fmt",
-                    "minx", "miny", "maxx", "maxy")
-        )
-        cell_tiles = (
-            exploded.repartition(n_parts, "cx", "cy")
-            .sortWithinPartitions("cx", "cy")
-            .mapInPandas(
-                _cell_stream_fn(pz, zlo, maxzoom, tile_size, dtype_tag, colormap_str),
-                "zoom int, x long, y long, png binary",
-            )
-        )
+        cell_tiles = _cell_tiles(images, src, pz, max(minzoom, pz), maxzoom,
+                                 tile_size, dtype_tag, colormap_str)
         if minzoom >= pz:
             return _finish(cell_tiles)
         maxzoom = pz - 1  # blocks path covers the remaining low zooms
 
-    np_dtype = np.uint8 if dtype_tag == "u8" else np.uint32
-    cores = spark.sparkContext.defaultParallelism
+    # ONE collect: the image-id scheme flag (a full image_id scan; it
+    # rides as a sentinel zoom=-1 row) plus, when salting, the hot-key
+    # top-K as a concurrent subtree of the same job. The mosaic's paste
+    # order is ascending image_id, and the kernel's parsed-integer
+    # img_ord matches string order ONLY for the exact 'img' + 8-digit
+    # scheme.
+    #
+    # Hot-key routing alternatives measured and rejected at n=65536: a
+    # lazy filter-split of the block stream re-executes the kernel
+    # python stage per branch (Catalyst/AQE cannot reuse exchanges
+    # under MapInPandas consumers — accumulator-verified); a
+    # kernel-range split at the source decodes every image twice (~2-4 s
+    # of kernel CPU per pass at 32c); a persist+count router serializes
+    # a full kernel pre-pass before the main job (~7 s at 32c/65k — more
+    # than the serial tail it removes).
+    facts_q = src.agg(
+        F.max(F.when(~F.col("image_id").rlike("^img[0-9]{8}$"), 1)
+              .otherwise(0)).alias("g")
+    ).select(F.lit(-1).alias("zoom"),
+             F.lit(0).cast("long").alias("x"),
+             F.lit(0).cast("long").alias("y"),
+             F.coalesce(F.col("g"), F.lit(0)).alias("gen"))
+    if salt_threshold is not None:
+        facts_q = (_hot_keys(src, minzoom, maxzoom, salt_threshold)
+                   .withColumn("gen", F.lit(0)).unionByName(facts_q))
+    rows = facts_q.collect()
+    general_ids = any(r["zoom"] == -1 and r["gen"] == 1 for r in rows)
+    hot_rows = [r for r in rows if r["zoom"] >= 0]
 
-    # The mosaic contract is ascending image_id (string): the salted
-    # paths order/argmax by the numeric img_ord, which matches string
-    # order ONLY for the exact fixture scheme 'img' + 8 digits. Any
-    # other id scheme gets an order-preserving 64-bit key instead:
-    # distinct ids sorted distributively, monotonically_increasing_id
-    # follows range-partition order (non-dense but order-preserving —
-    # order is all the winner/paste rules need), joined back on id.
-    # The check itself is a full image_id scan; on the default auto
-    # path it rides the hot-count job (one collect, two concurrent
-    # subtrees — see below) instead of paying its own driver action.
-    _GENERAL_ID_PRED = ~F.col("image_id").rlike("^img[0-9]{8}$")
-
-    def _blocks_src(general_ids: bool) -> DataFrame:
-        if general_ids:
-            ord_map = (src.select("image_id").distinct()
-                       .orderBy("image_id")
-                       .withColumn("ord64", F.monotonically_increasing_id()))
-            return src.join(ord_map, "image_id")
-        return src
-
-    def _blocks(zlo: int, zhi: int, general_ids: bool) -> DataFrame:
-        # the repartition costs one pass of source bytes but balances
-        # the decode+kernel across tasks (scan splits alone are skewed
-        # by row-group byte sizes); measured faster than scan-aligned
-        return _blocks_src(general_ids).repartition(
-            n_parts_map, "image_id").mapInPandas(
-            _kernel_all_zooms_fn(zlo, zhi, tile_size,
-                                 use_input_ord=general_ids),
-            _KERNEL_SCHEMA)
-
-    def _plain_mosaic(blocks: DataFrame) -> DataFrame:
-        # mosaic+encode stage at cores*2, not the cell stage's cores*8:
-        # tuned while every python task paid a fixed start-up cost (the
-        # per-task zip re-parse, see ``_worker``), and in the default
-        # config this stage only handles the zooms below pz
-        # (bounded tile count — at most 4^pz/3 tiles exist there), so
-        # per-tile cost is even and tail-packing buys nothing
-        return blocks.repartition(n_parts_map, "zoom", "x", "y").groupBy(
-            "zoom", "x", "y").agg(
-            F.collect_list(
-                F.struct("image_id", "left", "top", "bw", "bh", "block")
-            ).alias("contribs")
-        ).mapInPandas(
-            _encode_batch_fn(tile_size, dtype_tag, colormap_str),
-            "zoom int, x long, y long, png binary",
-        )
-
-    def _salted_mosaic(blocks: DataFrame, buckets: int,
-                       n_salt: int, n_merge: int) -> DataFrame:
-        # Skew path (north-star: salted repartition by (zoom, cell)):
-        # a dense tile key — worst case z0 receiving every image —
-        # first folds into <= buckets bounded partials in parallel,
-        # then a tiny second aggregate merges them.
-        salted = blocks.withColumn(
-            "salt", F.pmod(F.col("img_ord"), F.lit(buckets)))
-        partials = salted.repartition(n_salt, "zoom", "x", "y", "salt").groupBy(
-            "zoom", "x", "y", "salt").agg(
-            F.collect_list(
-                F.struct("img_ord", "left", "top", "bw", "bh", "block")
-            ).alias("contribs")
-        ).mapInPandas(
-            _partial_mosaic_fn(tile_size, np_dtype),
-            "zoom int, x long, y long, canvas binary, winner binary",
-        )
-        return partials.repartition(n_merge, "zoom", "x", "y").groupBy(
-            "zoom", "x", "y").agg(
-            F.collect_list(F.struct("canvas", "winner")).alias("partials")
-        ).mapInPandas(
-            _merge_encode_fn(tile_size, dtype_tag, colormap_str),
-            "zoom int, x long, y long, png binary",
-        )
-
-    if salt_buckets == "auto":
-        # AUTO routing, ONE linear dataflow. Hot keys are detected
-        # from the pure-JVM cover counts (tile_manifest explode — no
-        # decode, no python; a superset of the kernel's emitted blocks,
-        # which is exactly right for routing and costs a sub-second
-        # driver job bounded by the sub-pz tile count). The tiny hot
-        # keyset broadcast-marks the single block stream — no lazy
-        # fork — and the mosaic runs as a unified two-stage pipeline:
-        # stage B encodes COLD tiles outright (plain-path math, one
-        # pass) and folds HOT salt buckets to (canvas, winner)
-        # partials; stage C passes finished PNGs through and
-        # argmax-merges the partials. Cold tiles pay one extra shuffle
-        # hop of their finished PNG (KBs); hot tiles parallelize
-        # across buckets instead of serializing one task per dense
-        # tile (at 10^12 rows, the z0 group would OOM it).
-        #
-        # Alternatives measured and rejected at n=65536: a lazy
-        # filter-split of the block stream re-executes the kernel
-        # python stage per branch (Catalyst/AQE cannot reuse exchanges
-        # under MapInPandas consumers — accumulator-verified, same
-        # wall as the round-3 pyramid fork); a kernel-range split at
-        # the source decodes every image twice (~2-4 s of kernel CPU
-        # per pass at 32c); a persist+count router serializes a full
-        # kernel pre-pass before the main job (~7 s at 32c/65k — more
-        # than the serial tail it removes).
-        # ONE collect, TWO concurrent subtrees: the hot-key top-K and
-        # the general-id flag (a full image_id scan either way) union
-        # into a single driver action — their stages run in parallel
-        # inside one job instead of costing two serial job round-trips
-        # (the flag rides as a sentinel zoom=-1 row)
-        hot_q = (
-            tile_manifest(src, minzoom, maxzoom)
-            .groupBy("zoom", "tx", "ty").count()
-            .filter(F.col("count") >= _AUTO_SALT_THRESHOLD)
-            .orderBy(F.desc("count"), "zoom", "tx", "ty")  # deterministic
-            .limit(_AUTO_SALT_MAX_KEYS)
-            .select("zoom", F.col("tx").alias("x"), F.col("ty").alias("y"),
-                    F.lit(0).alias("gen"))
-        )  # bounded: top-K of the aggregated counts (TakeOrdered)
-        gen_q = src.agg(
-            F.max(F.when(_GENERAL_ID_PRED, 1).otherwise(0)).alias("g")
-        ).select(F.lit(-1).alias("zoom"),
-                 F.lit(0).cast("long").alias("x"),
-                 F.lit(0).cast("long").alias("y"),
-                 F.coalesce(F.col("g"), F.lit(0)).alias("gen"))
-        fused_rows = hot_q.unionByName(gen_q).collect()
-        general_ids = any(r["zoom"] == -1 and r["gen"] == 1
-                          for r in fused_rows)
-        hot_rows = [r for r in fused_rows if r["zoom"] >= 0]
-        if hot_rows:
-            hot_keys = spark.createDataFrame(
-                [(int(r["zoom"]), int(r["x"]), int(r["y"])) for r in hot_rows],
-                "zoom int, x long, y long")
-            marked = _blocks(minzoom, maxzoom, general_ids).join(
-                F.broadcast(hot_keys.withColumn("_h", F.lit(True))),
-                ["zoom", "x", "y"], "left")
-            salted = marked.select(
-                "*",
-                F.coalesce("_h", F.lit(False)).alias("is_hot"),
-                F.when(F.coalesce("_h", F.lit(False)),
-                       F.pmod(F.col("img_ord"), F.lit(cores)))
-                .otherwise(F.lit(0)).cast("int").alias("salt"))
-            stage_b = salted.repartition(
-                n_parts_map, "zoom", "x", "y", "salt").groupBy(
-                "zoom", "x", "y", "salt", "is_hot").agg(
-                F.collect_list(
-                    F.struct("img_ord", "left", "top", "bw", "bh", "block")
-                ).alias("contribs")
-            ).mapInPandas(
-                _route_mosaic_fn(tile_size, dtype_tag, colormap_str),
-                "zoom int, x long, y long, png binary, "
-                "canvas binary, winner binary",
-            )
-            tiles = stage_b.repartition(
-                n_parts_map, "zoom", "x", "y").groupBy(
-                "zoom", "x", "y").agg(
-                F.collect_list(F.struct("png", "canvas", "winner"))
-                .alias("partials")
-            ).mapInPandas(
-                _merge_or_pass_fn(tile_size, dtype_tag, colormap_str),
-                "zoom int, x long, y long, png binary",
-            )
-        else:
-            tiles = _plain_mosaic(_blocks(minzoom, maxzoom, general_ids))
-        if cell_tiles is not None:
-            tiles = tiles.unionByName(cell_tiles)
-        return _finish(tiles)
-
-    # non-auto branches: the id-scheme check pays its own (narrow-column)
-    # driver action — only the default auto path fuses it into the
-    # routing job
-    general_ids = not src.filter(_GENERAL_ID_PRED).isEmpty()
-    if salt_buckets and salt_buckets > 1 and salt_threshold is not None \
-            and salt_threshold != "auto":
-        # DATA-DEPENDENT routing — per-key counts split hot tiles from
-        # the long tail (winner-array partials cost ~9x the canvas
-        # bytes — pure overhead on 1-2-contribution keys). Costs one
-        # extra action (the hot count) that doubles as the persist
-        # materialization of the shared block stream.
-        blocks = _blocks(minzoom, maxzoom, general_ids).persist()
-        if persisted is not None:
-            # the block cache must outlive the returned lazy DataFrame;
-            # callers unpersist after materializing (render_pyramid's
-            # out-param pattern) — without a handle a long-lived session
-            # leaks one cached block RDD per explicit-threshold render
-            persisted.append(blocks)
-        hot = (blocks.groupBy("zoom", "x", "y").count()
-               .filter(F.col("count") >= salt_threshold)
-               .select("zoom", "x", "y"))
-        n_hot = hot.count()
-        if n_hot:
-            cold = blocks.join(F.broadcast(hot), ["zoom", "x", "y"], "left_anti")
-            hot_blocks = blocks.join(F.broadcast(hot), ["zoom", "x", "y"],
-                                     "left_semi")
-            tiles = _salted_mosaic(
-                hot_blocks, salt_buckets,
-                n_salt=max(min(n_parts, n_hot * salt_buckets), cores),
-                n_merge=max(min(n_parts, n_hot), 1),
-            ).unionByName(_plain_mosaic(cold))
-        else:
-            tiles = _plain_mosaic(blocks)
-    elif salt_buckets and salt_buckets > 1:
-        # explicit buckets, no threshold: every key two-phase
-        tiles = _salted_mosaic(_blocks(minzoom, maxzoom, general_ids),
-                               salt_buckets,
-                               n_salt=n_parts, n_merge=n_parts)
-    else:
-        tiles = _plain_mosaic(_blocks(minzoom, maxzoom, general_ids))
-
+    tiles = _blocks_tiles(src, general_ids, hot_rows, minzoom, maxzoom,
+                          tile_size, dtype_tag, colormap_str)
     if cell_tiles is not None:
         tiles = tiles.unionByName(cell_tiles)
     return _finish(tiles)

@@ -16,14 +16,14 @@ row), so the per-tile gather is two ts-length index vectors + one fancy
 index — no per-pixel python.
 
 Scale shape: stage 1 is the blocks-path pattern (decode each image
-once, emit its per-tile warped canvases), stage 2 one tile-key shuffle
-+ mosaic/encode. A pathologically global footprint (one image covering
-z0) would concentrate on one tile key like any low-zoom render —
-render_warp's default ``salt_buckets="auto"`` detects hot keys from
-the pure-JVM footprint cover counts and routes them through the SHARED
-two-phase salted mosaic (render._route_mosaic_fn/_merge_or_pass_fn —
-one copy of the (canvas, winner) fold + argmax-merge rule), while the
-long tail encodes in a single pass; salted and plain output is
+once, emit its per-tile warped canvases), then the native render's
+blocks-path mosaic (render._mosaic_blocks: one tile-key shuffle +
+mosaic/encode). A pathologically global footprint (one image covering
+z0) would concentrate on one tile key like any low-zoom render, so
+render_warp takes the same ``salt_threshold`` as render: hot keys
+come from the pure-JVM cover counts of the projected footprints
+(render._hot_keys) and mosaic in two salted phases, while the long
+tail encodes in a single pass; salted and plain output is
 byte-identical (tests/test_warp.py).
 
 Cross-engine contract (the DuckDB twin re-derives warped pixels from
@@ -43,8 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import tilemath as tm
-from ..kernel import encode_tile, mosaic
 from ..png import decode_band
+from .render import _AUTO_SALT_THRESHOLD, _hot_keys, _mosaic_blocks
 
 _WARP_BLOCK_SCHEMA = "zoom int, x long, y long, img_ord long, canvas binary"
 
@@ -118,42 +118,12 @@ def _warp_kernel_fn(minzoom: int, maxzoom: int, tile_size: int, nodata):
     return fn
 
 
-def _warp_encode_fn(tile_size: int, dtype_tag: str, nodata,
-                    colormap_str: str | None = None):
-    np_dtype = np.uint8 if dtype_tag == "u8" else np.uint32
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..png import Colormap
-
-        colormap = (Colormap.parse(colormap_str, nodata)
-                    if colormap_str else None)
-        for pdf in batches:
-            out = {k: [] for k in ("zoom", "x", "y", "png")}
-            for row in pdf.itertuples(index=False):
-                contribs = [
-                    (int(c["img_ord"]), 0, 0, tile_size, tile_size,
-                     np.frombuffer(bytes(c["canvas"]), dtype=np_dtype)
-                     .reshape(tile_size, tile_size))
-                    for c in row.contribs
-                ]
-                cv = mosaic(contribs, tile_size, nodata, np_dtype)
-                if cv is None:
-                    continue
-                out["zoom"].append(int(row.zoom))
-                out["x"].append(int(row.x))
-                out["y"].append(int(row.y))
-                out["png"].append(encode_tile(cv, dtype_tag, nodata,
-                                              colormap))
-            yield pd.DataFrame(out)
-
-    return fn
-
-
 def render_warp(images: DataFrame, minzoom: int, maxzoom: int,
                 tile_size: int = 256, dtype_tag: str = "u8",
                 colormap_str: str | None = None,
                 nodata: int = 0, n_parts: int | None = None,
-                salt_buckets: str | None = "auto") -> DataFrame:
+                salt_threshold: int | None = _AUTO_SALT_THRESHOLD,
+                ) -> DataFrame:
     """Render geographic (EPSG:4326) images into the mercator pyramid.
 
     ``images`` carries the input_hint schema PLUS its geographic
@@ -164,26 +134,19 @@ def render_warp(images: DataFrame, minzoom: int, maxzoom: int,
     render. Output (zoom, x, y, png) in XYZ rows; feed through
     render._finish / tiles_table for the TMS sink shape.
 
-    ``salt_buckets="auto"`` (default) routes HOT tile keys — detected
-    from a pure-JVM footprint cover count, the native render's router
-    — through the shared two-phase salted mosaic (render._route_mosaic
-    fold to (canvas, winner) partials + argmax merge), so one
-    global-footprint 4326 image (a z0 world map) cannot single-task a
-    low-zoom tile; the long tail encodes in one pass exactly like the
-    plain path. ``None`` forces the plain single-pass mosaic. Salted
+    ``salt_threshold`` has render's meaning: tile keys whose projected
+    footprint cover count reaches it mosaic in two salted phases
+    through render's shared blocks-path mosaic (render._mosaic_blocks),
+    so one global-footprint 4326 image (a z0 world map) cannot
+    single-task a low-zoom tile; 1 salts every key, None none. Salted
     and plain output is byte-identical (tests/test_warp.py parity).
     Paste order is an order-preserving int (distinct image_ids sorted
-    once), so the winner-argmax rule matches ascending-image_id
-    pasting for ANY id scheme.
+    once), so it matches ascending-image_id pasting for ANY id scheme.
     """
     from ..functions.columns import geo_to_mercator_cols
-    from .render import (_AUTO_SALT_MAX_KEYS, _AUTO_SALT_THRESHOLD,
-                         _merge_or_pass_fn, _route_mosaic_fn,
-                         tile_manifest)
 
-    spark = images.sparkSession
-    cores = spark.sparkContext.defaultParallelism
-    n_parts = n_parts or max(cores, 1)
+    n_parts = n_parts or max(
+        images.sparkSession.sparkContext.defaultParallelism, 1)
 
     # order-preserving integer paste key (the native render's
     # general-ids discipline): monotonically_increasing_id over the
@@ -193,74 +156,26 @@ def render_warp(images: DataFrame, minzoom: int, maxzoom: int,
                .withColumn("img_ord", F.monotonically_increasing_id()))
     src = images.join(ord_map, "image_id")
 
+    # warp canvases are full tiles: they enter the shared blocks
+    # contract as left=0, top=0, bw=bh=tile_size blocks
     blocks = src.repartition(n_parts, "image_id").mapInPandas(
         _warp_kernel_fn(minzoom, maxzoom, tile_size, nodata),
-        _WARP_BLOCK_SCHEMA)
+        _WARP_BLOCK_SCHEMA).select(
+        "zoom", "x", "y", "img_ord", F.lit(0).alias("left"),
+        F.lit(0).alias("top"), F.lit(tile_size).alias("bw"),
+        F.lit(tile_size).alias("bh"), F.col("canvas").alias("block"))
 
     hot_rows = []
-    if salt_buckets == "auto":
-        # hot keys from the projected footprint cover counts — pure JVM
-        # (forward mercator of the geo corners + tile_manifest explode),
-        # no decode, no python; a superset of the kernel's emitted
-        # tiles, which is exactly right for routing
+    if salt_threshold is not None:
+        # cover counts over the projected footprints (forward mercator
+        # of the geo corners)
         mx0, my0 = geo_to_mercator_cols(F.col("minlon"), F.col("minlat"))
         mx1, my1 = geo_to_mercator_cols(F.col("maxlon"), F.col("maxlat"))
         fp = images.select(mx0.alias("minx"), my0.alias("miny"),
                            mx1.alias("maxx"), my1.alias("maxy"))
-        hot_rows = (
-            tile_manifest(fp, minzoom, maxzoom)
-            .groupBy("zoom", "tx", "ty").count()
-            .filter(F.col("count") >= _AUTO_SALT_THRESHOLD)
-            .orderBy(F.desc("count"), "zoom", "tx", "ty")
-            .limit(_AUTO_SALT_MAX_KEYS)
-            .select("zoom", F.col("tx").alias("x"), F.col("ty").alias("y"))
-        ).collect()
-
-    if not hot_rows:
-        return (blocks.repartition(n_parts, "zoom", "x", "y")
-                .groupBy("zoom", "x", "y")
-                .agg(F.collect_list(F.struct("img_ord", "canvas"))
-                     .alias("contribs"))
-                .mapInPandas(_warp_encode_fn(tile_size, dtype_tag, nodata,
-                                             colormap_str),
-                             "zoom int, x long, y long, png binary"))
-
-    # two-phase routed mosaic (shared stage fns with the native render —
-    # ONE copy of the winner rule): warp canvases are full tiles, so
-    # they enter the shared contribs contract as left=0, top=0,
-    # bw=bh=tile_size blocks
-    hot_keys = spark.createDataFrame(
-        [(int(r["zoom"]), int(r["x"]), int(r["y"])) for r in hot_rows],
-        "zoom int, x long, y long")
-    marked = blocks.join(
-        F.broadcast(hot_keys.withColumn("_h", F.lit(True))),
-        ["zoom", "x", "y"], "left")
-    salted = marked.select(
-        "zoom", "x", "y", "img_ord", "canvas",
-        F.coalesce("_h", F.lit(False)).alias("is_hot"),
-        F.when(F.coalesce("_h", F.lit(False)),
-               F.pmod(F.col("img_ord"), F.lit(cores)))
-        .otherwise(F.lit(0)).cast("int").alias("salt"))
-    contrib = F.struct(
-        F.col("img_ord"), F.lit(0).alias("left"), F.lit(0).alias("top"),
-        F.lit(tile_size).alias("bw"), F.lit(tile_size).alias("bh"),
-        F.col("canvas").alias("block"))
-    stage_b = salted.repartition(
-        n_parts, "zoom", "x", "y", "salt").groupBy(
-        "zoom", "x", "y", "salt", "is_hot").agg(
-        F.collect_list(contrib).alias("contribs")
-    ).mapInPandas(
-        _route_mosaic_fn(tile_size, dtype_tag, colormap_str, nodata),
-        "zoom int, x long, y long, png binary, "
-        "canvas binary, winner binary")
-    return stage_b.repartition(
-        n_parts, "zoom", "x", "y").groupBy(
-        "zoom", "x", "y").agg(
-        F.collect_list(F.struct("png", "canvas", "winner"))
-        .alias("partials")
-    ).mapInPandas(
-        _merge_or_pass_fn(tile_size, dtype_tag, colormap_str, nodata),
-        "zoom int, x long, y long, png binary")
+        hot_rows = _hot_keys(fp, minzoom, maxzoom, salt_threshold).collect()
+    return _mosaic_blocks(blocks, hot_rows, tile_size, dtype_tag,
+                          colormap_str, n_parts, nodata)
 
 
 def render_warp_pyramid(images: DataFrame, minzoom: int, maxzoom: int,

@@ -40,16 +40,20 @@ def _oracle_overviews(base, top_zoom, minzoom, ts, tag, cmap=None):
 
 
 @pytest.mark.parametrize("tag,minz,maxz,ts,cmap,thresh", [
-    ("u8", 0, 7, 64, None, None),
+    ("u8", 0, 7, 64, None, 1),   # every key takes two-phase
     ("u8", 0, 7, 64, None, 3),   # routed: only dense keys take two-phase
-    ("u8", 4, 6, 64, "1:#686868,2:#38A800,3:#859B6C,4:#3B7D46,5:#FF00FF", None),
+    ("u8", 4, 6, 64, "1:#686868,2:#38A800,3:#859B6C,4:#3B7D46,5:#FF00FF", 1),
     ("u32", 5, 7, 64, None, 2),
 ])
 def test_salted_equals_single_phase(spark, tag, minz, maxz, ts, cmap, thresh):
     imgs = _spark_images(spark, 40, tag)
-    single = _fused_map(render(imgs, minz, maxz, ts, tag, cmap))
-    salted = _fused_map(render(imgs, minz, maxz, ts, tag, cmap, salt_buckets=7,
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+    single = _fused_map(render(imgs, minz, maxz, ts, tag, cmap,
+                               salt_threshold=None))
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
+    salted = _fused_map(render(imgs, minz, maxz, ts, tag, cmap,
                                salt_threshold=thresh))
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
     assert single == salted
 
 

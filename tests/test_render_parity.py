@@ -200,11 +200,9 @@ def test_general_image_ids_byte_parity(spark):
     # force the blocks path for all zooms (pz above maxzoom) and plant a
     # hot threshold so the salted img_ord path executes too
     a = tile_map(render(base, 0, 4, tile_size=64, dtype_tag="u8",
-                        salt_buckets=4, salt_threshold=4,
-                        partition_zoom=None))
+                        salt_threshold=4, partition_zoom=None))
     b = tile_map(render(renamed, 0, 4, tile_size=64, dtype_tag="u8",
-                        salt_buckets=4, salt_threshold=4,
-                        partition_zoom=None))
+                        salt_threshold=4, partition_zoom=None))
     assert a and a == b
     # non-fixed-width NUMERIC-suffix ids: 'img2' vs 'img10' parse but
     # int order != string order — must also route through the sorted key
@@ -212,8 +210,8 @@ def test_general_image_ids_byte_parity(spark):
     short_pdf["image_id"] = short_pdf["image_id"].str[:3] + \
         short_pdf["image_id"].str[3:].astype(int).astype(str)
     c = tile_map(render(spark.createDataFrame(short_pdf), 0, 4,
-                        tile_size=64, dtype_tag="u8", salt_buckets=4,
-                        salt_threshold=4, partition_zoom=None))
+                        tile_size=64, dtype_tag="u8", salt_threshold=4,
+                        partition_zoom=None))
     # 'img0'..'img47' string order != numeric order, so c is a VALID
     # render under the string-order contract of ITS OWN id set; it must
     # at least produce the same tile KEY SET and run without error

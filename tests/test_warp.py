@@ -279,23 +279,20 @@ def test_render_warp_spark_parity(spark):
         np.testing.assert_array_equal(decode_canvas(png, "u8"), want[key])
 
 
-def test_render_warp_salted_parity(spark, monkeypatch):
-    """Hot-tile router (salt_buckets="auto"): with the threshold forced
-    to 1 every covered tile routes through the two-phase salted mosaic
-    (fold to (canvas, winner) partials + argmax merge) — output must be
-    byte-identical to the plain single-pass path, the native render's
-    salted-vs-plain contract applied to warp."""
-    from rastertiler_rs_spark.operators import render as render_mod
-
+def test_render_warp_salted_parity(spark):
+    """Hot-tile router: with ``salt_threshold=1`` every covered tile
+    routes through the two-phase salted mosaic (fold to (canvas,
+    winner) partials + argmax merge) — output must be byte-identical to
+    the plain single-pass path (``salt_threshold=None``), the native
+    render's salted-vs-plain contract applied to warp."""
     images = spark.read.parquet(images_geo_parquet(N))
     plain = {(r["zoom"], r["x"], r["y"]): bytes(r["png"])
              for r in render_warp(images, ZMIN, ZMAX, tile_size=TS,
                                   dtype_tag="u8",
-                                  salt_buckets=None).collect()}
-    monkeypatch.setattr(render_mod, "_AUTO_SALT_THRESHOLD", 1)
+                                  salt_threshold=None).collect()}
     salted = {(r["zoom"], r["x"], r["y"]): bytes(r["png"])
               for r in render_warp(images, ZMIN, ZMAX, tile_size=TS,
                                    dtype_tag="u8",
-                                   salt_buckets="auto").collect()}
+                                   salt_threshold=1).collect()}
     assert plain.keys() == salted.keys()
     assert all(plain[k] == salted[k] for k in plain)

@@ -148,11 +148,11 @@ def main() -> None:
     geo = spark.read.parquet(images_geo_parquet(8))
     sections.append((
         "render_warp (plain tail): kernel map on image_id -> ONE "
-        "exchange on (zoom,x,y) -> mosaic/encode; the auto hot-tile "
-        "router (salt_buckets='auto') adds the two-phase salted fold "
-        "ONLY when the JVM footprint cover count crosses the threshold",
+        "exchange on (zoom,x,y) -> mosaic/encode; the hot-tile "
+        "router (salt_threshold) adds the two-phase salted fold ONLY "
+        "when the JVM footprint cover count crosses the threshold",
         plan_text(render_warp(geo, 2, 4, tile_size=64,
-                              salt_buckets=None))))
+                              salt_threshold=None))))
     pts = ev.select((F.col("value") * 1000).alias("px"),
                     (F.col("value") * 700).alias("py"))
     sections.append((

@@ -4,9 +4,9 @@ Each component runs in ITS OWN SparkSession run order, cold-ish, to
 mirror bench.py's single-shot cold timing. Pass component names:
   mapside   scan -> footprint -> cover explode -> repartition(cx,cy) exchange
   cell      full cell path z8-14 (render(8,14))
-  blocks    blocks path z0-7 only (render(0,7) with pz=None, auto salt)
+  blocks    blocks path z0-7 only (render(0,7) with pz=None, default salt)
   full      render(0,14) (the bench flagship)
-  manifest  the auto-salt hot-count driver job alone
+  manifest  the blocks-path hot-key query alone (_hot_keys)
 """
 from __future__ import annotations
 
@@ -21,8 +21,8 @@ from pyspark.sql import functions as F
 
 from rastertiler_rs_spark.fixtures import images_parquet
 from rastertiler_rs_spark.operators.render import (
-    _AUTO_SALT_MAX_KEYS, _AUTO_SALT_THRESHOLD, render, tile_manifest,
-    tile_range_cols, with_footprints)
+    _AUTO_SALT_THRESHOLD, _hot_keys, render, tile_range_cols,
+    with_footprints)
 from rastertiler_rs_spark.session import env_int, get_spark
 
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -48,10 +48,7 @@ def main() -> None:
         if name == "manifest":
             src = with_footprints(images).select(
                 "image_id", "bytes", "fmt", "minx", "miny", "maxx", "maxy")
-            (tile_manifest(src, 0, 7).groupBy("zoom", "tx", "ty").count()
-             .filter(F.col("count") >= _AUTO_SALT_THRESHOLD)
-             .orderBy(F.desc("count"), "zoom", "tx", "ty")
-             .limit(_AUTO_SALT_MAX_KEYS).collect())
+            _hot_keys(src, 0, 7, _AUTO_SALT_THRESHOLD).collect()
         elif name == "mapside":
             src = with_footprints(images).select(
                 "image_id", "bytes", "fmt", "minx", "miny", "maxx", "maxy")

@@ -7,13 +7,14 @@ renders that zoom with the blocks path:
 
   baseline      groupBy(zoom,x,y): the hot tile's every contribution
                 lands in ONE task (the serialization the rule forbids)
-  salted        salt_buckets=S: contributions fold into S bounded
-                partial mosaics in parallel, then one tiny merge
+  salted        salt_threshold=64: the hot key's contributions fold
+                into defaultParallelism bounded partial mosaics in
+                parallel, then one tiny merge
 
 Byte-identical outputs (asserted). Appends results to BENCH.md with
 --write.
 
-Usage: python tools/skew_demo.py [--n 3000] [--salt 16] [--cpus 32] [--write]
+Usage: python tools/skew_demo.py [--n 3000] [--cpus 32] [--write]
 """
 
 from __future__ import annotations
@@ -71,7 +72,6 @@ def build_table(n: int, zoom: int = 10):
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--n", type=int, default=3000)
-    ap.add_argument("--salt", type=int, default=16)
     ap.add_argument("--cpus", type=int, default=32)
     ap.add_argument("--write", action="store_true")
     args = ap.parse_args()
@@ -97,11 +97,12 @@ def main() -> None:
                 for r in df.collect()}
 
     t0 = time.time()
-    base = fused_map(render(img, zoom, zoom, 256, "u8", partition_zoom=None))
+    base = fused_map(render(img, zoom, zoom, 256, "u8", partition_zoom=None,
+                            salt_threshold=None))
     t_base = time.time() - t0
     t0 = time.time()
     salted = fused_map(render(img, zoom, zoom, 256, "u8", partition_zoom=None,
-                              salt_buckets=args.salt, salt_threshold=64))
+                              salt_threshold=64))
     t_salt = time.time() - t0
     assert base == salted, "salted output must be byte-identical"
 
@@ -111,7 +112,7 @@ def main() -> None:
         "hot_tile_present": hot in base,
         "baseline_sec": round(t_base, 2),
         "salted_sec": round(t_salt, 2),
-        "salt_buckets": args.salt, "cpus": args.cpus,
+        "salt_threshold": 64, "cpus": args.cpus,
         "speedup": round(t_base / t_salt, 2),
     }
     print(result)
@@ -127,7 +128,7 @@ one groupBy key receives every contribution.
 | plan | wall sec |
 |---|---|
 | baseline groupBy(zoom,x,y) — hot key on one task | {result['baseline_sec']} |
-| salt_buckets={args.salt} two-phase mosaic | {result['salted_sec']} |
+| salt_threshold=64 two-phase mosaic ({args.cpus} buckets) | {result['salted_sec']} |
 
 Speedup {result['speedup']}x, outputs byte-identical (asserted in the
 run and in tests/test_overview_salt.py). The same hotspot on the cell
