@@ -179,13 +179,11 @@ def encode_tile(canvas: np.ndarray, dtype_tag: str, nodata: int, colormap=None) 
         # appears; palette survives iff distinct<255, or ==255 and p is the
         # very last pixel.
         flat = canvas.ravel()
-        non_nodata = flat[flat != nodata]
         uniq, first_pos = np.unique(flat, return_index=True)
         m = uniq != nodata
         uniq, first_pos = uniq[m], first_pos[m]
         d = len(uniq)
         use_palette = d < 255 or (d == 255 and int(np.max(first_pos)) == flat.size - 1)
-        del non_nodata
         if use_palette:
             order = np.argsort(first_pos, kind="stable")
             cm = Colormap(nodata=int(nodata))

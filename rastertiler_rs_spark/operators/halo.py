@@ -12,6 +12,13 @@ runs task-local over the tile's OWN pixels. Exactly one shuffle,
 keyed by the owning tile; strips and tiles ride it together via a
 unified row shape.
 
+`_halo_apply` is the one path through that exchange: every tiled-
+neighborhood operator is a `per_tile(tx, ty, pad)` callback on it —
+the stats stencils here (through `_halo_stats`), the PNG emitters
+tile_halo_shade_tiles / tile_halo_shaded_relief,
+watershed.pixel_successors and isolines.isoline_segments. The Horn
+3×3 gradient numerators all come from `_horn`.
+
 Correctness contract: summed per tile, the result equals the stencil
 over the UNPARTITIONED canvas restricted to each tile's pixels — the
 oracle entries check that identity against DuckDB twins that never
@@ -25,21 +32,22 @@ from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..png import decode_band
 
 _STATS_SCHEMA = "tx long, ty long, n_valid long, sum_g2 long, max_g2 long"
-_EMPTY_STATS = {"tx": "int64", "ty": "int64", "n_valid": "int64",
-                "sum_g2": "int64", "max_g2": "int64"}
+_PNG_SCHEMA = "tx long, ty long, png binary"
+# pandas dtype of each Spark type a _halo_apply schema uses
+_PANDAS_DTYPES = {"long": "int64", "binary": object}
 
 
 def _halo_unified(tiles: DataFrame, tile_size: int,
                   corners: bool) -> DataFrame:
-    """The halo-exchange transport: explode every tile into itself +
-    its edge strips (+ corner pixels for 8-neighbor kernels) keyed to
-    the receiving tile — the unified row stream one groupBy(tx, ty)
-    then assembles into padded canvases."""
+    """The halo-exchange transport of _halo_apply: explode every tile
+    into itself + its edge strips (+ corner pixels for 8-neighbor
+    kernels) keyed to the receiving tile — the unified row stream one
+    groupBy(tx, ty) then assembles into padded canvases."""
     ts = int(tile_size)
 
     def explode_strips(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -90,7 +98,7 @@ def _halo_unified(tiles: DataFrame, tile_size: int,
         explode_strips, "tx long, ty long, kind string, payload binary")
 
 
-def _pad_from_group(pdf: pd.DataFrame, tile_size: int,
+def _pad_from_group(pdf: pd.DataFrame,
                     nodata: int) -> np.ndarray | None:
     """Assemble one tile's padded (ts+2)² canvas from its unified-row
     group (own pixels + received halo strips; absent neighbors stay
@@ -121,47 +129,93 @@ def _pad_from_group(pdf: pd.DataFrame, tile_size: int,
     return pad
 
 
-def _halo_stats(tiles: DataFrame, tile_size: int, nodata: int,
+def _halo_apply(tiles: DataFrame, tile_size: int, nodata: int,
                 corners: bool,
-                stencil: Callable[[np.ndarray], tuple[np.ndarray, np.ndarray]],
-                reduce: Callable[[np.ndarray, object],
-                                 tuple[int, int, int]] | None = None,
-                ) -> DataFrame:
-    """Shared halo-exchange plumbing: _halo_unified transport, one
-    shuffle on the owning tile, assemble the padded canvas, run
-    `stencil(pad) -> (valid, aux)` over the tile's own pixels, reduce
-    to integer stats.  Default reduce treats aux as per-pixel g² and
-    emits (n_valid, Σg², max g²); a custom `reduce(valid, aux) ->
-    (n_valid, sum_g2, max_g2)` may pack anything integer into the
-    shared stats schema."""
-    ts = int(tile_size)
-    unified = _halo_unified(tiles, ts, corners)
+                per_tile: Callable[[int, int, np.ndarray], dict | None],
+                schema: str) -> DataFrame:
+    """The one halo-exchange path: the _halo_unified transport, one
+    shuffle on the owning tile, _pad_from_group, then
+    `per_tile(tx, ty, pad)` -> the tile's output columns (anything
+    pd.DataFrame accepts), or None for no rows. Groups without a center
+    tile (strips addressed past the canvas boundary) emit no rows
+    either; `schema` is the output's Spark DDL (long / binary
+    columns)."""
+    empty = pd.DataFrame({
+        name: pd.Series([], dtype=_PANDAS_DTYPES[typ])
+        for name, typ in (col.split() for col in schema.split(","))})
 
     # fully-annotated signature (key + frame): a partial hint makes
     # pyspark's eval-type inference warn and fall back
     def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
-        pad = _pad_from_group(pdf, ts, nodata)
-        if pad is None:
-            # strips addressed to a tile that does not exist (canvas
-            # boundary) — nothing to compute
-            return pd.DataFrame(
-                {k: [] for k in _EMPTY_STATS}).astype(_EMPTY_STATS)
-        valid, aux = stencil(pad)
-        if not valid.any():
-            return pd.DataFrame(
-                {k: [] for k in _EMPTY_STATS}).astype(_EMPTY_STATS)
-        if reduce is None:
-            vg2 = aux[valid]
-            stats = (int(valid.sum()), int(vg2.sum()), int(vg2.max()))
-        else:
-            stats = reduce(valid, aux)
-        return pd.DataFrame({"tx": [tx], "ty": [ty],
-                             "n_valid": [int(stats[0])],
-                             "sum_g2": [int(stats[1])],
-                             "max_g2": [int(stats[2])]})
+        pad = _pad_from_group(pdf, nodata)
+        cols = None if pad is None else per_tile(int(key[0]), int(key[1]),
+                                                 pad)
+        return empty if cols is None else pd.DataFrame(cols)
 
-    return unified.groupBy("tx", "ty").applyInPandas(assemble, _STATS_SCHEMA)
+    return (_halo_unified(tiles, tile_size, corners).groupBy("tx", "ty")
+            .applyInPandas(assemble, schema))
+
+
+def _moments(valid: np.ndarray, g: np.ndarray) -> tuple[int, int, int]:
+    """(n_valid, Σg, max g) of a per-pixel value over the valid
+    pixels — the default stats reduce."""
+    vg = g[valid]
+    return int(valid.sum()), int(vg.sum()), int(vg.max())
+
+
+def _halo_stats(tiles: DataFrame, tile_size: int, nodata: int,
+                corners: bool, stencil: Callable[[np.ndarray], tuple],
+                reduce: Callable[..., tuple[int, int, int]] = _moments,
+                ) -> DataFrame:
+    """The stats operators' per_tile on _halo_apply: run
+    `stencil(pad) -> (valid, *aux)` over the tile's own pixels, then
+    `reduce(valid, *aux) -> (n_valid, sum_g2, max_g2)` packs anything
+    integer into the shared stats schema (default _moments: aux is one
+    per-pixel value). Tiles without a valid pixel emit no row."""
+
+    def per_tile(tx: int, ty: int, pad: np.ndarray) -> dict | None:
+        valid, *aux = stencil(pad)
+        if not valid.any():
+            return None
+        n_valid, sum_g2, max_g2 = reduce(valid, *aux)
+        return {"tx": [tx], "ty": [ty], "n_valid": [int(n_valid)],
+                "sum_g2": [int(sum_g2)], "max_g2": [int(max_g2)]}
+
+    return _halo_apply(tiles, tile_size, nodata, corners, per_tile,
+                       _STATS_SCHEMA)
+
+
+def _window9(pad: np.ndarray, nodata: int):
+    """The 9 shifted views of the 3×3 neighborhood (row-major, center
+    = index 4) plus the all-valid mask (center + 8 neighbors
+    non-nodata)."""
+    views = [pad[r:r + pad.shape[0] - 2, c:c + pad.shape[1] - 2]
+             for r in range(3) for c in range(3)]
+    valid = views[4] != nodata
+    for v in views:
+        valid &= v != nodata
+    return views, valid
+
+
+def _horn(pad: np.ndarray, nodata: int):
+    """Horn 1981 / Sobel 3×3 gradient numerators over the tile's own
+    pixels: (valid8, gx, gy) with gx = (ne+2e+se) − (nw+2w+sw),
+    gy = (sw+2s+se) − (nw+2n+ne) (rows grow south) and valid8 = the
+    center and all 8 neighbors non-nodata."""
+    (nw, n_, ne, w_, _, e_, sw, s_, se), valid = _window9(pad, nodata)
+    gx = (ne + 2 * e_ + se) - (nw + 2 * w_ + sw)
+    gy = (sw + 2 * s_ + se) - (nw + 2 * n_ + ne)
+    return valid, gx, gy
+
+
+def _pack8(valid: np.ndarray, classes: np.ndarray) -> tuple[int, int, int]:
+    """(n_valid, lo, hi): the histogram of 8 classes (−1 = unclassed)
+    packed 4×16 bits per stats column, classes 0-3 in lo, 4-7 in hi
+    (counts ≤ ts² = 16384 < 2^16, so the packing is lossless)."""
+    counts = np.bincount(classes[classes >= 0], minlength=8)
+    lo = sum(int(counts[k]) << (16 * k) for k in range(4))
+    hi = sum(int(counts[k + 4]) << (16 * k) for k in range(4))
+    return int(valid.sum()), lo, hi
 
 
 def tile_halo_gradient(tiles: DataFrame, tile_size: int,
@@ -201,31 +255,11 @@ def tile_halo_sobel(tiles: DataFrame, tile_size: int,
     valid (non-nodata). Output: (tx, ty, n_valid, sum_g2, max_g2)."""
 
     def stencil(pad: np.ndarray):
-        c = pad[1:-1, 1:-1]
-        n_, s_ = pad[:-2, 1:-1], pad[2:, 1:-1]
-        w_, e_ = pad[1:-1, :-2], pad[1:-1, 2:]
-        nw, ne = pad[:-2, :-2], pad[:-2, 2:]
-        sw, se = pad[2:, :-2], pad[2:, 2:]
-        gx = (ne + 2 * e_ + se) - (nw + 2 * w_ + sw)
-        gy = (sw + 2 * s_ + se) - (nw + 2 * n_ + ne)
-        valid = (c != nodata)
-        for nb in (n_, s_, w_, e_, nw, ne, sw, se):
-            valid &= nb != nodata
+        valid, gx, gy = _horn(pad, nodata)
         return valid, gx * gx + gy * gy
 
     return _halo_stats(tiles, tile_size, nodata, corners=True,
                        stencil=stencil)
-
-
-def _window9(pad: np.ndarray, nodata: int):
-    """The 9 shifted views of the 3×3 neighborhood plus the all-valid
-    mask (center + 8 neighbors non-nodata)."""
-    views = [pad[r:r + pad.shape[0] - 2, c:c + pad.shape[1] - 2]
-             for r in range(3) for c in range(3)]
-    valid = views[4] != nodata
-    for v in views:
-        valid &= v != nodata
-    return views, valid
 
 
 def tile_halo_morph(tiles: DataFrame, tile_size: int,
@@ -305,12 +339,8 @@ def tile_halo_flowdir(tiles: DataFrame, tile_size: int,
                  for dr, dc, _ in _D8_OFFSETS]
         return valid, drops
 
-    def reduce(valid: np.ndarray, aux) -> tuple[int, int, int]:
-        dirs = d8_direction([d[valid] for d in aux])
-        counts = np.bincount(dirs[dirs >= 0], minlength=8)
-        lo = sum(int(counts[k]) << (16 * k) for k in range(4))
-        hi = sum(int(counts[k + 4]) << (16 * k) for k in range(4))
-        return int(valid.sum()), lo, hi
+    def reduce(valid: np.ndarray, drops) -> tuple[int, int, int]:
+        return _pack8(valid, d8_direction([d[valid] for d in drops]))
 
     return _halo_stats(tiles, tile_size, nodata, corners=True,
                        stencil=stencil, reduce=reduce)
@@ -454,27 +484,15 @@ def tile_halo_hillshade(tiles: DataFrame, tile_size: int,
     consts = hillshade_constants(azimuth_deg, altitude_deg, z_factor,
                                  cellsize)
 
-    def stencil(pad: np.ndarray):
-        c = pad[1:-1, 1:-1]
-        n_, s_ = pad[:-2, 1:-1], pad[2:, 1:-1]
-        w_, e_ = pad[1:-1, :-2], pad[1:-1, 2:]
-        nw, ne = pad[:-2, :-2], pad[:-2, 2:]
-        sw, se = pad[2:, :-2], pad[2:, 2:]
-        gx = (ne + 2 * e_ + se) - (nw + 2 * w_ + sw)
-        gy = (sw + 2 * s_ + se) - (nw + 2 * n_ + ne)
-        valid = (c != nodata)
-        for nb in (n_, s_, w_, e_, nw, ne, sw, se):
-            valid &= nb != nodata
-        return valid, (gx, gy)
-
-    def reduce(valid: np.ndarray, aux) -> tuple[int, int, int]:
-        gx, gy = aux
+    def reduce(valid: np.ndarray, gx: np.ndarray,
+               gy: np.ndarray) -> tuple[int, int, int]:
         sh = shade_u8(gx[valid], gy[valid], consts)
         return (int(valid.sum()), int(sh.sum()),
                 int(sh.max()) * 256 + int(sh.min()))
 
     return _halo_stats(tiles, tile_size, nodata, corners=True,
-                       stencil=stencil, reduce=reduce)
+                       stencil=lambda pad: _horn(pad, nodata),
+                       reduce=reduce)
 
 
 def tile_halo_shade_tiles(tiles: DataFrame, tile_size: int,
@@ -492,39 +510,18 @@ def tile_halo_shade_tiles(tiles: DataFrame, tile_size: int,
 
     consts = hillshade_constants(azimuth_deg, altitude_deg, z_factor,
                                  cellsize)
-    ts = int(tile_size)
 
-    base = _halo_unified(tiles, ts, corners=True)
-
-    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
-        pad = _pad_from_group(pdf, ts, nodata)
-        if pad is None:
-            return pd.DataFrame({"tx": pd.Series([], dtype="int64"),
-                                 "ty": pd.Series([], dtype="int64"),
-                                 "png": pd.Series([], dtype=object)})
-        c = pad[1:-1, 1:-1]
-        n_, s_ = pad[:-2, 1:-1], pad[2:, 1:-1]
-        w_, e_ = pad[1:-1, :-2], pad[1:-1, 2:]
-        nw, ne = pad[:-2, :-2], pad[:-2, 2:]
-        sw, se = pad[2:, :-2], pad[2:, 2:]
-        gx = (ne + 2 * e_ + se) - (nw + 2 * w_ + sw)
-        gy = (sw + 2 * s_ + se) - (nw + 2 * n_ + ne)
-        valid = (c != nodata)
-        for nb in (n_, s_, w_, e_, nw, ne, sw, se):
-            valid &= nb != nodata
+    def per_tile(tx: int, ty: int, pad: np.ndarray) -> dict | None:
+        valid, gx, gy = _horn(pad, nodata)
         if not valid.any():
-            return pd.DataFrame({"tx": pd.Series([], dtype="int64"),
-                                 "ty": pd.Series([], dtype="int64"),
-                                 "png": pd.Series([], dtype=object)})
-        sh = np.full(c.shape, nodata, dtype=np.int64)
+            return None
+        sh = np.full(valid.shape, nodata, dtype=np.int64)
         sh[valid] = shade_u8(gx[valid], gy[valid], consts)
-        return pd.DataFrame({"tx": [tx], "ty": [ty],
-                             "png": [encode_grayscale8(
-                                 sh.astype(np.uint8), nodata)]})
+        return {"tx": [tx], "ty": [ty],
+                "png": [encode_grayscale8(sh.astype(np.uint8), nodata)]}
 
-    return base.groupBy("tx", "ty").applyInPandas(
-        assemble, "tx long, ty long, png binary")
+    return _halo_apply(tiles, tile_size, nodata, True, per_tile,
+                       _PNG_SCHEMA)
 
 
 def tile_halo_shaded_relief(tiles: DataFrame, tile_size: int,
@@ -554,41 +551,23 @@ def tile_halo_shaded_relief(tiles: DataFrame, tile_size: int,
                                  cellsize)
     flat_shade = int(math.floor(
         1.0 + 254.0 * math.sin(math.radians(altitude_deg)) + 0.5))
-    ts = int(tile_size)
-    base = _halo_unified(tiles, ts, corners=True)
 
-    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
-        pad = _pad_from_group(pdf, ts, nodata)
-        if pad is None:
-            return pd.DataFrame({"tx": pd.Series([], dtype="int64"),
-                                 "ty": pd.Series([], dtype="int64"),
-                                 "png": pd.Series([], dtype=object)})
+    def per_tile(tx: int, ty: int, pad: np.ndarray) -> dict | None:
         c = pad[1:-1, 1:-1]
-        n_, s_ = pad[:-2, 1:-1], pad[2:, 1:-1]
-        w_, e_ = pad[1:-1, :-2], pad[1:-1, 2:]
-        nw, ne = pad[:-2, :-2], pad[:-2, 2:]
-        sw, se = pad[2:, :-2], pad[2:, 2:]
-        gx = (ne + 2 * e_ + se) - (nw + 2 * w_ + sw)
-        gy = (sw + 2 * s_ + se) - (nw + 2 * n_ + ne)
-        full = (c != nodata)
-        for nb in (n_, s_, w_, e_, nw, ne, sw, se):
-            full &= nb != nodata
         valid = c != nodata
         if not valid.any():
-            return pd.DataFrame({"tx": pd.Series([], dtype="int64"),
-                                 "ty": pd.Series([], dtype="int64"),
-                                 "png": pd.Series([], dtype=object)})
+            return None
+        full, gx, gy = _horn(pad, nodata)
         shade = np.full(c.shape, np.int64(flat_shade))
         shade[full] = shade_u8(gx[full], gy[full], consts)
         rgb = relief_rgb(c.astype(np.uint8), ramp, nodata).astype(np.int64)
         out = (rgb * shade[:, :, None] + 254) // 255
         out[~valid] = 0
-        return pd.DataFrame({"tx": [tx], "ty": [ty],
-                             "png": [encode_rgb(out.astype(np.uint8), 0)]})
+        return {"tx": [tx], "ty": [ty],
+                "png": [encode_rgb(out.astype(np.uint8), 0)]}
 
-    return base.groupBy("tx", "ty").applyInPandas(
-        assemble, "tx long, ty long, png binary")
+    return _halo_apply(tiles, tile_size, nodata, True, per_tile,
+                       _PNG_SCHEMA)
 
 
 def slope_permille(gx: np.ndarray, gy: np.ndarray,
@@ -609,26 +588,14 @@ def tile_halo_slope(tiles: DataFrame, tile_size: int,
     Σslope‰, max slope‰."""
     k = 100.0 * z_factor / (8.0 * cellsize)
 
-    def stencil(pad: np.ndarray):
-        c = pad[1:-1, 1:-1]
-        n_, s_ = pad[:-2, 1:-1], pad[2:, 1:-1]
-        w_, e_ = pad[1:-1, :-2], pad[1:-1, 2:]
-        nw, ne = pad[:-2, :-2], pad[:-2, 2:]
-        sw, se = pad[2:, :-2], pad[2:, 2:]
-        gx = (ne + 2 * e_ + se) - (nw + 2 * w_ + sw)
-        gy = (sw + 2 * s_ + se) - (nw + 2 * n_ + ne)
-        valid = (c != nodata)
-        for nb in (n_, s_, w_, e_, nw, ne, sw, se):
-            valid &= nb != nodata
-        return valid, (gx, gy)
-
-    def reduce(valid: np.ndarray, aux) -> tuple[int, int, int]:
-        gx, gy = aux
+    def reduce(valid: np.ndarray, gx: np.ndarray,
+               gy: np.ndarray) -> tuple[int, int, int]:
         sp = slope_permille(gx[valid], gy[valid], k)
         return int(valid.sum()), int(sp.sum()), int(sp.max())
 
     return _halo_stats(tiles, tile_size, nodata, corners=True,
-                       stencil=stencil, reduce=reduce)
+                       stencil=lambda pad: _horn(pad, nodata),
+                       reduce=reduce)
 
 
 def tile_halo_terrain(tiles: DataFrame, tile_size: int,
@@ -649,26 +616,10 @@ def tile_halo_terrain(tiles: DataFrame, tile_size: int,
     edge strips + corner halos from the 8 neighbor tiles, like
     tile_halo_sobel."""
 
-    def stencil(pad: np.ndarray):
-        c = pad[1:-1, 1:-1]
-        n_, s_ = pad[:-2, 1:-1], pad[2:, 1:-1]
-        w_, e_ = pad[1:-1, :-2], pad[1:-1, 2:]
-        nw, ne = pad[:-2, :-2], pad[:-2, 2:]
-        sw, se = pad[2:, :-2], pad[2:, 2:]
-        gx = (ne + 2 * e_ + se) - (nw + 2 * w_ + sw)
-        gy = (sw + 2 * s_ + se) - (nw + 2 * n_ + ne)
-        valid = (c != nodata)
-        for nb in (n_, s_, w_, e_, nw, ne, sw, se):
-            valid &= nb != nodata
-        return valid, (gx, gy)
-
-    def reduce(valid: np.ndarray, aux) -> tuple[int, int, int]:
-        gx, gy = aux
-        oct_ = aspect_octant(gx[valid], gy[valid])
-        counts = np.bincount(oct_[oct_ >= 0], minlength=8)
-        lo = sum(int(counts[k]) << (16 * k) for k in range(4))
-        hi = sum(int(counts[k + 4]) << (16 * k) for k in range(4))
-        return int(valid.sum()), lo, hi
+    def reduce(valid: np.ndarray, gx: np.ndarray,
+               gy: np.ndarray) -> tuple[int, int, int]:
+        return _pack8(valid, aspect_octant(gx[valid], gy[valid]))
 
     return _halo_stats(tiles, tile_size, nodata, corners=True,
-                       stencil=stencil, reduce=reduce)
+                       stencil=lambda pad: _horn(pad, nodata),
+                       reduce=reduce)

@@ -5,10 +5,11 @@ cell step, done Spark-first.
 
 Marching squares walks the (H−1)×(W−1) grid of 2×2 pixel CELLS; a
 cell whose top-left pixel is a tile's last row/column needs pixels
-the next tile owns, so each tile ships its top row, left column, and
-top-left pixel to the neighbors that need them (a strip shuffle,
-O(perimeter)) and every cell is evaluated by exactly ONE owner (the
-tile of its top-left pixel) — no dedup exchange, the zonal
+the next tile owns. Those arrive through the package's one halo
+exchange (halo._halo_apply, O(perimeter) strips): the south row, east
+column and south-east corner of the tile's padded canvas complete its
+(ts+1)² cell grid, and every cell is evaluated by exactly ONE owner
+(the tile of its top-left pixel) — no dedup exchange, the zonal
 reference-point argument again.
 
 Everything is integer and therefore value-gateable: corners classify
@@ -31,13 +32,11 @@ the unpartitioned canvas formula.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..png import decode_band
+from .halo import _halo_apply
 
 SCALE = 256
 
@@ -130,66 +129,20 @@ def isoline_segments(tiles: DataFrame, tile_size: int, threshold: int,
     ``threshold``: one row per segment, endpoints in SCALE-scaled
     global pixel coordinates, oriented per _CASES (shared edges
     reproduce identical crossings from both owners, so segments chain
-    into loops across tiles). One strip shuffle, one python stage."""
+    into loops across tiles). One halo exchange (_halo_apply): pad[1:, 1:]
+    of the padded canvas is the (ts+1)² grid of the tile's own cells."""
     ts = int(tile_size)
+    thr = int(threshold)
 
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"tx": [], "ty": [], "kind": [], "payload": []}
-            for row in pdf.itertuples(index=False):
-                band = decode_band(bytes(row.png), "png;u8")
-                if band.shape != (ts, ts):
-                    raise ValueError(
-                        f"tile ({row.tx},{row.ty}) is {band.shape}, "
-                        f"expected {(ts, ts)}")
-                tx, ty = int(row.tx), int(row.ty)
-                emits = [
-                    (tx, ty, "C", band),
-                    (tx, ty - 1, "S", band[0, :]),      # my top row pads
-                    (tx - 1, ty, "E", band[:, 0]),      # the S/E/SE of
-                    (tx - 1, ty - 1, "SE", band[0:1, 0]),  # my neighbors
-                ]
-                for etx, ety, kind, arr in emits:
-                    out["tx"].append(etx)
-                    out["ty"].append(ety)
-                    out["kind"].append(kind)
-                    out["payload"].append(
-                        np.ascontiguousarray(arr).tobytes())
-            yield pd.DataFrame(out)
-
-    unified = tiles.select("tx", "ty", "png").mapInPandas(
-        explode, "tx long, ty long, kind string, payload binary")
-
-    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({k: pd.Series([], dtype="int64")
-                              for k in ("tx", "ty", "x1", "y1",
-                                        "x2", "y2")})
-        center = pdf[pdf["kind"] == "C"]
-        if center.empty:
-            return empty
-        tx, ty = int(key[0]), int(key[1])
-        band = np.frombuffer(bytes(center.iloc[0]["payload"]),
-                             dtype=np.uint8).reshape(ts, ts)
-        pad = np.full((ts + 1, ts + 1), nodata, dtype=np.int64)
-        pad[:ts, :ts] = band
-        for kind, payload in zip(pdf["kind"], pdf["payload"]):
-            arr = np.frombuffer(bytes(payload), dtype=np.uint8)
-            if kind == "S":
-                pad[ts, :ts] = arr
-            elif kind == "E":
-                pad[:ts, ts] = arr
-            elif kind == "SE":
-                pad[ts, ts] = arr[0]
-        x1, y1, x2, y2 = _tile_segments(pad, int(threshold), nodata,
+    def per_tile(tx: int, ty: int, pad: np.ndarray) -> dict | None:
+        x1, y1, x2, y2 = _tile_segments(pad[1:, 1:], thr, nodata,
                                         ty * ts, tx * ts)
         if not x1.size:
-            return empty
-        return pd.DataFrame({"tx": tx, "ty": ty, "x1": x1, "y1": y1,
-                             "x2": x2, "y2": y2})
+            return None
+        return {"tx": tx, "ty": ty, "x1": x1, "y1": y1, "x2": x2, "y2": y2}
 
-    return (unified.groupBy("tx", "ty").applyInPandas(
-        assemble, "tx long, ty long, x1 long, y1 long, "
-                  "x2 long, y2 long"))
+    return _halo_apply(tiles, ts, nodata, True, per_tile,
+                       "tx long, ty long, x1 long, y1 long, x2 long, y2 long")
 
 
 def isolines_to_mvt(tiles: DataFrame, tile_size: int, threshold: int,

@@ -491,6 +491,9 @@ _AUTO_SALT_THRESHOLD = 8192
 # correctly through the cold path (just single-task). The top-K keeps
 # the collect + broadcast bounded at any scale.
 _AUTO_SALT_MAX_KEYS = 65536
+# cell-stage input bytes per task (see _cell_tiles): the 65k-image
+# fixture's ~46 MB source lands at ~cores*8 tasks at 32 cores
+_CELL_TASK_BYTES = 196608
 
 
 def _hot_keys(footprints: DataFrame, minzoom: int, maxzoom: int,
@@ -604,7 +607,7 @@ def _cell_tiles(images: DataFrame, src: DataFrame, pz: int, zlo: int,
     try:
         size_b = int(images._jdf.queryExecution().optimizedPlan()
                      .stats().sizeInBytes())
-        est = size_b // env_int("SPARK_GRAFT_CELL_TASK_BYTES", 196608)
+        est = size_b // _CELL_TASK_BYTES
         n_parts = int(max(min(est, cores * mult_cap), cores * 2, 8))
     except Exception:
         pass  # no stats (unusual plan): keep the ceiling

@@ -25,10 +25,9 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .halo import _D8_OFFSETS, _halo_unified, _pad_from_group, d8_direction
+from .halo import _D8_OFFSETS, _halo_apply, d8_direction
 
 
 def pixel_successors(tiles: DataFrame, tile_size: int,
@@ -43,19 +42,11 @@ def pixel_successors(tiles: DataFrame, tile_size: int,
         return tiles.sparkSession.createDataFrame([], "v long, p long")
     width = (int(ext["mx"]) + 1) * ts
 
-    unified = _halo_unified(tiles, ts, corners=True)
-
-    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
-        pad = _pad_from_group(pdf, ts, nodata)
-        if pad is None:
-            return pd.DataFrame({"v": pd.Series([], dtype="int64"),
-                                 "p": pd.Series([], dtype="int64")})
+    def per_tile(tx: int, ty: int, pad: np.ndarray) -> dict | None:
         c = pad[1:-1, 1:-1]
         valid = c != nodata
         if not valid.any():
-            return pd.DataFrame({"v": pd.Series([], dtype="int64"),
-                                 "p": pd.Series([], dtype="int64")})
+            return None
         drops = []
         for dr, dc, _ in _D8_OFFSETS:
             nb = pad[1 + dr:1 + dr + ts, 1 + dc:1 + dc + ts]
@@ -68,10 +59,9 @@ def pixel_successors(tiles: DataFrame, tile_size: int,
         for i, (dr, dc, _) in enumerate(_D8_OFFSETS):
             m = d == i
             succ[m] = gid[m] + dr * width + dc
-        return pd.DataFrame({"v": gid, "p": succ})
+        return {"v": gid, "p": succ}
 
-    return unified.groupBy("tx", "ty").applyInPandas(
-        assemble, "v long, p long")
+    return _halo_apply(tiles, ts, nodata, True, per_tile, "v long, p long")
 
 
 def watershed_labels(tiles: DataFrame, tile_size: int,

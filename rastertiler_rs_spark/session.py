@@ -83,10 +83,8 @@ def get_spark(app: str = "rastertiler_rs_spark", cpus: int | None = None,
         # matmul) with 256-row batches: ~40x more per-batch python+Arrow
         # overhead than needed, and it UNDER-bounded fat image rows
         # (256 x ~500 KB source images = way past the intended 16 MB).
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                str(env_int("SPARK_GRAFT_ARROW_MAX_RECORDS", 10000)))
-        .config("spark.sql.execution.arrow.maxBytesPerBatch",
-                _env_size("SPARK_GRAFT_ARROW_MAX_BYTES", "16m"))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", "16m")
         # split scans finer than the 128m default (sf-dir parquet is
         # small; 8m keeps small-query task counts sane while still
         # splitting multi-file tables). The render pipeline no longer
@@ -96,8 +94,7 @@ def get_spark(app: str = "rastertiler_rs_spark", cpus: int | None = None,
         # which existed to parallelize the then-Python footprint stage —
         # doubled every small query's scan tasks and showed up in the
         # driver bench; don't re-tighten this session-wide.
-        .config("spark.sql.files.maxPartitionBytes",
-                _env_size("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"))
+        .config("spark.sql.files.maxPartitionBytes", "8m")
         # wrapping 64-bit hash arithmetic must not throw (Spark 4 ANSI default)
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.driver.memory",

@@ -192,10 +192,10 @@ def test_cli_render_tiles_dir(tmp_path):
         [sys.executable, "-m", "rastertiler_rs_spark", "render", src,
          str(out), "--minzoom", "4", "--maxzoom", "7", "--tilesize", "64",
          "--workers", "8", "--tiles-dir", str(tdir)],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600)
+        capture_output=True, text=True, timeout=600,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     assert r.returncode == 0, r.stderr[-2000:]
     assert out.exists()
-    import os
     zdirs = [e for e in os.listdir(tdir / "tiles") if e.startswith("zoom=")]
     assert sorted(int(z.split("=")[1]) for z in zdirs) == [4, 5, 6, 7]
 

@@ -44,11 +44,26 @@ def test_halo_gradient_equals_global(spark):
     assert any(n == ts * ts for (n, _, _) in got.values()) or len(got) > 1
 
 
-def test_halo_gradient_rejects_bad_tile_size(spark):
+@pytest.mark.parametrize("op", ["gradient", "sobel", "shade_tiles",
+                                "shaded_relief", "isoline_segments",
+                                "pixel_successors"])
+def test_halo_rejects_bad_tile_size(spark, op):
+    """Every operator on the shared halo transport refuses a tile that
+    decodes to a shape other than tile_size."""
+    from rastertiler_rs_spark.operators import halo
+    from rastertiler_rs_spark.operators.isolines import isoline_segments
+    from rastertiler_rs_spark.operators.watershed import pixel_successors
+
+    fns = {"gradient": tile_halo_gradient,
+           "sobel": halo.tile_halo_sobel,
+           "shade_tiles": halo.tile_halo_shade_tiles,
+           "shaded_relief": halo.tile_halo_shaded_relief,
+           "isoline_segments": lambda t, ts: isoline_segments(t, ts, 128),
+           "pixel_successors": pixel_successors}
     path = tiled_canvas_parquet(256, 192, 64, seed=5)
     tiles = spark.read.parquet(path)
     with pytest.raises(Exception, match="expected"):
-        tile_halo_gradient(tiles, 128).collect()
+        fns[op](tiles, 128).collect()
 
 
 def _global_sobel_expect(band, ts):
