@@ -1251,13 +1251,13 @@ def q_embedding_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-verifies the build→files→pruned-probe round-trip too."""
     import os
 
+    from rastertiler_rs_spark.fixtures import CACHE_DIR
     from rastertiler_rs_spark.operators.embedding import (build_ivf_index,
                                                           ivf_query_index)
 
     emb = _t(spark, sf_dir, "embeddings")
     index_dir = os.path.join(
-        "/root/repo/.fixture_cache",
-        "ivf_" + os.path.basename(sf_dir.rstrip("/")))
+        CACHE_DIR, "ivf_" + os.path.basename(sf_dir.rstrip("/")))
     # build-if-missing, like every other .fixture_cache artifact: the
     # index content is deterministic, and an unconditional overwrite
     # could yank part-files from under a concurrent reader's snapshot

@@ -57,8 +57,7 @@ def _zoom(v: str) -> int:
 
 
 def cmd_render(args) -> None:
-    from .operators.mbtiles_sink import (materialize_mbtiles,
-                                        write_mbtiles_shards)
+    from .operators._lineage import persisted
     from .operators.overview import render_pyramid
     from .operators.render import metadata_table, render
     from .session import get_spark
@@ -128,7 +127,16 @@ def cmd_render(args) -> None:
     if n_sinks > 1:
         # every sink consumes fused: persist so the render runs ONCE
         # (lazy-DataFrame forks re-execute the producer otherwise)
-        fused = fused.persist()
+        with persisted(fused) as fused:
+            _write_sinks(args, fused, meta)
+    else:
+        _write_sinks(args, fused, meta)
+
+
+def _write_sinks(args, fused, meta) -> None:
+    from .operators.mbtiles_sink import (materialize_mbtiles,
+                                        write_mbtiles_shards)
+
     if args.xyz_dir:
         from .operators.xyz_sink import write_xyz_tree
 
@@ -139,8 +147,6 @@ def cmd_render(args) -> None:
         print(f"wrote {st['n_tiles']} tiles (z{st['minzoom']}-"
               f"z{st['maxzoom']}) to {args.xyz_dir}")
         if args.out == "-" and not args.shards_dir:
-            if n_sinks > 1:
-                fused.unpersist()
             return
     if args.shards_dir:
         try:
@@ -163,9 +169,6 @@ def cmd_render(args) -> None:
                                         tile_size=args.tilesize)
         except ValueError as e:
             sys.exit(f"ERROR: {e}")
-        finally:
-            if n_sinks > 1:
-                fused.unpersist()
         print(f"wrote {args.out} (base z{man['base_zoom']}, "
               f"{len(man['levels'])} levels, {man['n_blocks']} blocks, "
               f"{man['size']} bytes)")
@@ -179,9 +182,6 @@ def cmd_render(args) -> None:
             stats = write_pmtiles_distributed(fused, args.out, metadata=md)
         except ValueError as e:
             sys.exit(f"ERROR: {e}")
-        finally:
-            if n_sinks > 1:
-                fused.unpersist()
         print(f"wrote {args.out} ({stats['n_addressed']} tiles, "
               f"{stats['n_entries']} entries)")
         return
@@ -189,9 +189,6 @@ def cmd_render(args) -> None:
         materialize_mbtiles(fused, meta, args.out, max_tiles=args.max_tiles)
     except ValueError as e:
         sys.exit(f"ERROR: {e}")
-    finally:
-        if n_sinks > 1:
-            fused.unpersist()
     print(f"wrote {args.out}")
 
 

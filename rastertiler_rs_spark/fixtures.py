@@ -29,6 +29,9 @@ from .png import encode_grayscale8, encode_rgb, rgb_from_u32
 # explode sizing").
 ZBASE = 12
 NODATA = 0
+# cached fixtures live in the checkout that holds this package
+CACHE_DIR = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), ".fixture_cache")
 
 _W_CYCLE = np.array([64, 128, 256, 512], dtype=np.int32)
 _H_CYCLE = np.array([64, 128, 192, 512], dtype=np.int32)
@@ -107,7 +110,7 @@ def generate_images_geo(n: int, dtype_tag: str = "u8"):
 
 
 def images_geo_parquet(n: int, dtype_tag: str = "u8",
-                       cache_dir: str = "/root/repo/.fixture_cache") -> str:
+                       cache_dir: str = CACHE_DIR) -> str:
     import pyarrow.parquet as pq
 
     os.makedirs(cache_dir, exist_ok=True)
@@ -250,7 +253,7 @@ def generate_flac_audio(n: int):
     })
 
 
-def flac_parquet(n: int, cache_dir: str = "/root/repo/.fixture_cache") -> str:
+def flac_parquet(n: int, cache_dir: str = CACHE_DIR) -> str:
     return _cached_parquet("flac_audio", generate_flac_audio, n, cache_dir)
 
 
@@ -280,7 +283,7 @@ def generate_ogg_audio(n: int):
     })
 
 
-def ogg_parquet(n: int, cache_dir: str = "/root/repo/.fixture_cache") -> str:
+def ogg_parquet(n: int, cache_dir: str = CACHE_DIR) -> str:
     return _cached_parquet("ogg_audio", generate_ogg_audio, n, cache_dir)
 
 
@@ -296,7 +299,7 @@ def _cached_parquet(name: str, table_fn, n: int, cache_dir: str) -> str:
     return path
 
 
-def audio_parquet(n: int, cache_dir: str = "/root/repo/.fixture_cache") -> str:
+def audio_parquet(n: int, cache_dir: str = CACHE_DIR) -> str:
     return _cached_parquet("audio", generate_audio, n, cache_dir)
 
 
@@ -355,7 +358,7 @@ def generate_videos(n: int):
     })
 
 
-def videos_parquet(n: int, cache_dir: str = "/root/repo/.fixture_cache") -> str:
+def videos_parquet(n: int, cache_dir: str = CACHE_DIR) -> str:
     return _cached_parquet("videos", generate_videos, n, cache_dir)
 
 
@@ -441,11 +444,11 @@ def generate_mjpeg420_videos(n: int):
 
 
 def mjpeg420_parquet(n: int,
-                     cache_dir: str = "/root/repo/.fixture_cache") -> str:
+                     cache_dir: str = CACHE_DIR) -> str:
     return _cached_parquet("mjpeg420", generate_mjpeg420_videos, n, cache_dir)
 
 
-def mjpeg_parquet(n: int, cache_dir: str = "/root/repo/.fixture_cache") -> str:
+def mjpeg_parquet(n: int, cache_dir: str = CACHE_DIR) -> str:
     return _cached_parquet("mjpeg", generate_mjpeg_videos, n, cache_dir)
 
 
@@ -497,7 +500,7 @@ def generate_avi_videos(n: int):
     })
 
 
-def avi_videos_parquet(n: int, cache_dir: str = "/root/repo/.fixture_cache") -> str:
+def avi_videos_parquet(n: int, cache_dir: str = CACHE_DIR) -> str:
     return _cached_parquet("avi_videos", generate_avi_videos, n, cache_dir)
 
 
@@ -545,7 +548,7 @@ def generate_avi_mjpeg(n: int):
     })
 
 
-def avi_mjpeg_parquet(n: int, cache_dir: str = "/root/repo/.fixture_cache") -> str:
+def avi_mjpeg_parquet(n: int, cache_dir: str = CACHE_DIR) -> str:
     return _cached_parquet("avi_mjpeg", generate_avi_mjpeg, n, cache_dir)
 
 
@@ -596,7 +599,7 @@ def generate_webm_videos(n: int):
     })
 
 
-def webm_videos_parquet(n: int, cache_dir: str = "/root/repo/.fixture_cache") -> str:
+def webm_videos_parquet(n: int, cache_dir: str = CACHE_DIR) -> str:
     return _cached_parquet("webm_videos", generate_webm_videos, n, cache_dir)
 
 
@@ -645,7 +648,7 @@ def generate_webm_vp8(n: int):
     })
 
 
-def webm_vp8_parquet(n: int, cache_dir: str = "/root/repo/.fixture_cache") -> str:
+def webm_vp8_parquet(n: int, cache_dir: str = CACHE_DIR) -> str:
     return _cached_parquet("webm_vp8", generate_webm_vp8, n, cache_dir)
 
 
@@ -690,7 +693,7 @@ def generate_mp3(n: int):
     })
 
 
-def mp3_parquet(n: int, cache_dir: str = "/root/repo/.fixture_cache") -> str:
+def mp3_parquet(n: int, cache_dir: str = CACHE_DIR) -> str:
     return _cached_parquet("mp3", generate_mp3, n, cache_dir)
 
 
@@ -746,7 +749,7 @@ def generate_mp3_payload(n: int):
 
 
 def mp3_payload_parquet(n: int,
-                        cache_dir: str = "/root/repo/.fixture_cache") -> str:
+                        cache_dir: str = CACHE_DIR) -> str:
     return _cached_parquet("mp3_payload", generate_mp3_payload, n, cache_dir)
 
 
@@ -777,7 +780,7 @@ def generate_images(n: int, dtype_tag: str = "u8"):
     )
 
 
-def images_parquet(n: int, dtype_tag: str = "u8", cache_dir: str = "/root/repo/.fixture_cache") -> str:
+def images_parquet(n: int, dtype_tag: str = "u8", cache_dir: str = CACHE_DIR) -> str:
     """Generate (or reuse) the images table at a cached parquet path."""
     import pyarrow.parquet as pq
 
@@ -818,37 +821,40 @@ def canvas_band(w: int = 1024, h: int = 768, seed: int = 5) -> np.ndarray:
     return band
 
 
+def _tiled_parquet(kind: str, band_fn, w: int, h: int, ts: int,
+                   seed: int, cache_dir: str) -> str:
+    """``band_fn(w, h, seed)`` split into ts x ts PNG tiles (tx, ty,
+    png), cached as ``{kind}_{w}x{h}_{ts}_{seed}.parquet``."""
+    import pyarrow as pa
+
+    if w % ts or h % ts:
+        raise ValueError("canvas dims must be multiples of the tile size")
+
+    def table(seed: int):
+        band = band_fn(w, h, seed)
+        txs, tys, pngs = [], [], []
+        for ty in range(h // ts):
+            for tx in range(w // ts):
+                tile = band[ty * ts:(ty + 1) * ts, tx * ts:(tx + 1) * ts]
+                txs.append(tx)
+                tys.append(ty)
+                pngs.append(encode_grayscale8(tile, NODATA))
+        return pa.table({
+            "tx": pa.array(txs, pa.int64()),
+            "ty": pa.array(tys, pa.int64()),
+            "png": pa.array(pngs, pa.binary()),
+        })
+
+    return _cached_parquet(f"{kind}_{w}x{h}_{ts}", table, seed, cache_dir)
+
+
 def tiled_canvas_parquet(w: int = 1024, h: int = 768, ts: int = 128,
                          seed: int = 5,
-                         cache_dir: str = "/root/repo/.fixture_cache") -> str:
+                         cache_dir: str = CACHE_DIR) -> str:
     """The canvas split into ts x ts PNG tiles: (tx, ty, png). The
     engine only ever sees the TILES — reconstructing cross-border
     stencils is the halo operator's job."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from .png import encode_grayscale8
-
-    os.makedirs(cache_dir, exist_ok=True)
-    path = os.path.join(cache_dir, f"canvas_{w}x{h}_{ts}_{seed}.parquet")
-    if os.path.exists(path):
-        return path
-    if w % ts or h % ts:
-        raise ValueError("canvas dims must be multiples of the tile size")
-    band = canvas_band(w, h, seed)
-    txs, tys, pngs = [], [], []
-    for ty in range(h // ts):
-        for tx in range(w // ts):
-            tile = band[ty * ts:(ty + 1) * ts, tx * ts:(tx + 1) * ts]
-            txs.append(tx)
-            tys.append(ty)
-            pngs.append(encode_grayscale8(tile, NODATA))
-    pq.write_table(pa.table({
-        "tx": pa.array(txs, pa.int64()),
-        "ty": pa.array(tys, pa.int64()),
-        "png": pa.array(pngs, pa.binary()),
-    }), path, row_group_size=256)
-    return path
+    return _tiled_parquet("canvas", canvas_band, w, h, ts, seed, cache_dir)
 
 
 def region_canvas_band(w: int = 256, h: int = 192,
@@ -869,33 +875,10 @@ def region_canvas_band(w: int = 256, h: int = 192,
 
 def region_canvas_parquet(w: int = 256, h: int = 192, ts: int = 64,
                           seed: int = 5,
-                          cache_dir: str = "/root/repo/.fixture_cache") -> str:
+                          cache_dir: str = CACHE_DIR) -> str:
     """region_canvas_band split into ts x ts PNG tiles: (tx, ty, png)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from .png import encode_grayscale8
-
-    os.makedirs(cache_dir, exist_ok=True)
-    path = os.path.join(cache_dir, f"regions_{w}x{h}_{ts}_{seed}.parquet")
-    if os.path.exists(path):
-        return path
-    if w % ts or h % ts:
-        raise ValueError("canvas dims must be multiples of the tile size")
-    band = region_canvas_band(w, h, seed)
-    txs, tys, pngs = [], [], []
-    for ty in range(h // ts):
-        for tx in range(w // ts):
-            tile = band[ty * ts:(ty + 1) * ts, tx * ts:(tx + 1) * ts]
-            txs.append(tx)
-            tys.append(ty)
-            pngs.append(encode_grayscale8(tile, NODATA))
-    pq.write_table(pa.table({
-        "tx": pa.array(txs, pa.int64()),
-        "ty": pa.array(tys, pa.int64()),
-        "png": pa.array(pngs, pa.binary()),
-    }), path, row_group_size=256)
-    return path
+    return _tiled_parquet("regions", region_canvas_band, w, h, ts, seed,
+                          cache_dir)
 
 
 # ---------------------------------------------------------------- GeoTIFF
@@ -922,17 +905,24 @@ def geotiff_band(w: int, h: int) -> np.ndarray:
     return (1 + (r * 31 + c * 17) % 255).astype(np.uint8)
 
 
-def geotiff_fixture(cache_dir: str = "/root/repo/.fixture_cache") -> str:
-    """Write (or reuse) the cached multi-strip GeoTIFF fixture."""
+def _cached_geotiff(name: str, params, cache_dir: str, **kw) -> str:
+    """``geotiff_band`` written once at ``params``' size and affine as
+    ``{name}.tif``; ``kw`` picks the layout (write_geotiff's options)."""
     from .geotiff import write_geotiff
 
     os.makedirs(cache_dir, exist_ok=True)
-    w, h, transform, rps = geotiff_params()
-    path = os.path.join(cache_dir, f"fixture_{w}x{h}_rps{rps}.tif")
+    w, h, transform, _rps = params
+    path = os.path.join(cache_dir, f"{name}.tif")
     if not os.path.exists(path):
-        write_geotiff(path, geotiff_band(w, h), transform, NODATA,
-                      rows_per_strip=rps)
+        write_geotiff(path, geotiff_band(w, h), transform, NODATA, **kw)
     return path
+
+
+def geotiff_fixture(cache_dir: str = CACHE_DIR) -> str:
+    """Write (or reuse) the cached multi-strip GeoTIFF fixture."""
+    w, h, _, rps = params = geotiff_params()
+    return _cached_geotiff(f"fixture_{w}x{h}_rps{rps}", params, cache_dir,
+                           rows_per_strip=rps)
 
 
 def geotiff_geo_params() -> tuple[int, int, tuple, int]:
@@ -948,55 +938,37 @@ def geotiff_geo_params() -> tuple[int, int, tuple, int]:
     return 1536, 1024, (a, 0.0, x0, 0.0, -a, y0), 256
 
 
-def geotiff_geo_fixture(cache_dir: str = "/root/repo/.fixture_cache") -> str:
+def geotiff_geo_fixture(cache_dir: str = CACHE_DIR) -> str:
     """Write (or reuse) the cached EPSG:4326 multi-strip GeoTIFF
     fixture (same deterministic fully-opaque band as the mercator
     fixture — the oracle restates it in global pixel coordinates)."""
-    from .geotiff import write_geotiff
-
-    os.makedirs(cache_dir, exist_ok=True)
-    w, h, transform, rps = geotiff_geo_params()
-    path = os.path.join(cache_dir, f"fixture_geo_{w}x{h}_rps{rps}.tif")
-    if not os.path.exists(path):
-        write_geotiff(path, geotiff_band(w, h), transform, NODATA,
-                      epsg=4326, rows_per_strip=rps)
-    return path
+    w, h, _, rps = params = geotiff_geo_params()
+    return _cached_geotiff(f"fixture_geo_{w}x{h}_rps{rps}", params,
+                           cache_dir, epsg=4326, rows_per_strip=rps)
 
 
-def geotiff_cog_fixture(cache_dir: str = "/root/repo/.fixture_cache") -> str:
+def geotiff_cog_fixture(cache_dir: str = CACHE_DIR) -> str:
     """Write (or reuse) the COG-layout twin of the GeoTIFF fixture:
     same pixels and affine, but tiled 512x512 + deflate + horizontal
     predictor (GDAL's usual COG recipe). 1536x1024 divides evenly into
     512-tiles, so the block grid — and therefore the footprint set the
     exact-cover oracle derives — is IDENTICAL to the strip fixture
     chopped at block_cols=512."""
-    from .geotiff import write_geotiff
-
-    os.makedirs(cache_dir, exist_ok=True)
-    w, h, transform, _rps = geotiff_params()
-    path = os.path.join(cache_dir, f"fixture_{w}x{h}_cog512.tif")
-    if not os.path.exists(path):
-        write_geotiff(path, geotiff_band(w, h), transform, NODATA,
-                      tile_size=512, compression="deflate", predictor=2)
-    return path
+    w, h, _, _ = params = geotiff_params()
+    return _cached_geotiff(f"fixture_{w}x{h}_cog512", params, cache_dir,
+                           tile_size=512, compression="deflate", predictor=2)
 
 
-def geotiff_bigtiff_fixture(cache_dir: str = "/root/repo/.fixture_cache") -> str:
+def geotiff_bigtiff_fixture(cache_dir: str = CACHE_DIR) -> str:
     """BigTIFF (TIFF v43, 64-bit offsets) twin of the COG fixture:
     identical pixels, 512-tile block grid, deflate + predictor — only
     the container layout differs, so the exact-cover oracle footprints
     are the same as the strip/COG legs'. This is the layout any >4 GB
     cloud-optimized raster must use."""
-    from .geotiff import write_geotiff
-
-    os.makedirs(cache_dir, exist_ok=True)
-    w, h, transform, _rps = geotiff_params()
-    path = os.path.join(cache_dir, f"fixture_{w}x{h}_cog512_big.tif")
-    if not os.path.exists(path):
-        write_geotiff(path, geotiff_band(w, h), transform, NODATA,
-                      tile_size=512, compression="deflate", predictor=2,
-                      bigtiff=True)
-    return path
+    w, h, _, _ = params = geotiff_params()
+    return _cached_geotiff(f"fixture_{w}x{h}_cog512_big", params, cache_dir,
+                           tile_size=512, compression="deflate", predictor=2,
+                           bigtiff=True)
 
 
 # ------------------------------------------------------------ GIF videos
@@ -1050,7 +1022,7 @@ def generate_gif_videos(n: int):
     })
 
 
-def gif_videos_parquet(n: int, cache_dir: str = "/root/repo/.fixture_cache") -> str:
+def gif_videos_parquet(n: int, cache_dir: str = CACHE_DIR) -> str:
     return _cached_parquet("gif_videos", generate_gif_videos, n, cache_dir)
 
 
@@ -1100,7 +1072,7 @@ def generate_webpanim_videos(n: int):
     })
 
 
-def webpanim_parquet(n: int, cache_dir: str = "/root/repo/.fixture_cache") -> str:
+def webpanim_parquet(n: int, cache_dir: str = CACHE_DIR) -> str:
     return _cached_parquet("webpanim_videos", generate_webpanim_videos, n,
                            cache_dir)
 
@@ -1151,6 +1123,6 @@ def generate_apng_videos(n: int):
     })
 
 
-def apng_parquet(n: int, cache_dir: str = "/root/repo/.fixture_cache") -> str:
+def apng_parquet(n: int, cache_dir: str = CACHE_DIR) -> str:
     return _cached_parquet("apng_videos", generate_apng_videos, n,
                            cache_dir)

@@ -22,8 +22,9 @@ Per round: ONE join of the label table against the (persisted,
 pre-partitioned) undirected edge list + ONE groupBy-min back on the
 vertex key, both pinned with explicit repartition(n, key) (the AQE
 bytes-based coalescing pitfall — see CLAUDE.md), lineage truncated
-with a lazy localCheckpoint materialized by the convergence aggregate
-(the knn loop pattern: one job per round, no separate isEmpty probe).
+by `_lineage.fixpoint`: each round's labels are a lazy cut
+materialized by the convergence aggregate (one job per round, no
+separate isEmpty probe), and the superseded round is released after it.
 Convergence is read from an exact decimal sum of labels: labels only
 ever decrease, so an unchanged sum IS the fixed point (decimal(38)
 keeps the test exact at any corpus size where int64 sums could wrap).
@@ -33,6 +34,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ._lineage import (cut, fixpoint, persisted, round_parts,
+                       unchanged)
 
 
 def connected_components(edges: DataFrame, src: str = "src",
@@ -47,46 +51,34 @@ def connected_components(edges: DataFrame, src: str = "src",
     Raises after ``max_rounds`` non-converged rounds (graph diameter
     larger than expected — see module docstring for the star-contraction
     escalation path)."""
-    spark = edges.sparkSession
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = round_parts(edges)
 
     und = edges.select(F.col(src).cast("long").alias("src"),
                        F.col(dst).cast("long").alias("dst"))
     und = (und.unionByName(und.select(F.col("dst").alias("src"),
                                       F.col("src").alias("dst")))
            .distinct()
-           .repartition(n_parts, "dst")
-           .persist())
+           .repartition(n_parts, "dst"))
+    with persisted(und) as und:
+        verts = und.select(F.col("src").alias("v"))
+        if vertices is not None:
+            vcol = vertices.columns[0]
+            verts = verts.unionByName(
+                vertices.select(F.col(vcol).cast("long").alias("v")))
+        labels = cut(verts.distinct().select("v", F.col("v").alias("lbl")),
+                     n_parts, "v", eager=True)
 
-    verts = und.select(F.col("src").alias("v"))
-    if vertices is not None:
-        vcol = vertices.columns[0]
-        verts = verts.unionByName(
-            vertices.select(F.col(vcol).cast("long").alias("v")))
-    try:
-        labels = (verts.distinct().select("v", F.col("v").alias("lbl"))
-                  .repartition(n_parts, "v").localCheckpoint())
-        prev = labels.agg(F.sum(F.col("lbl").cast("decimal(38,0)"))).first()[0]
-
-        for _ in range(max_rounds):
+        def step(labels: DataFrame) -> DataFrame:
             nbr = (und.join(labels.select(F.col("v").alias("dst"), "lbl"),
                             "dst")
                    .select(F.col("src").alias("v"), "lbl"))
-            labels = (labels.unionByName(nbr)
-                      .groupBy("v").agg(F.min("lbl").alias("lbl"))
-                      .repartition(n_parts, "v")
-                      .localCheckpoint(eager=False))
-            cur = labels.agg(
-                F.sum(F.col("lbl").cast("decimal(38,0)"))).first()[0]
-            if cur == prev:
-                return labels
-            prev = cur
-    finally:
-        und.unpersist()
-    raise ValueError(
-        f"connected_components did not converge in {max_rounds} rounds — "
-        "graph diameter exceeds the near-dup assumption; raise max_rounds "
-        "or switch to star-contraction (module docstring)")
+            return (labels.unionByName(nbr)
+                    .groupBy("v").agg(F.min("lbl").alias("lbl")))
+
+        total = unchanged(lambda labels: labels.agg(
+            F.sum(F.col("lbl").cast("decimal(38,0)"))).first()[0])
+        return fixpoint(labels, step, total, max_rounds,
+                        "connected_components", n_parts, "v")
 
 
 def dedup_assign(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id",

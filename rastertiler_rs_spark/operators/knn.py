@@ -6,12 +6,17 @@ until it holds >= k candidates, then a FINAL exact pass widens the box
 to ceil(kth_distance / cell_size) so no closer point in an unexplored
 cell can exist — the result is exactly the true kNN (verified against
 the brute-force SQL oracle). Driver only steers ring radii; all data
-movement is cell equi-joins.
+movement is cell equi-joins. The widening rounds run on
+`_lineage.fixpoint`, which cuts and releases each round's lineage.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window, functions as F
+
+from ._lineage import cut, fixpoint, release
 
 
 def _candidates(queries: DataFrame, cells: DataFrame, r_col) -> DataFrame:
@@ -107,10 +112,8 @@ def knn_join(
         F.col("py") - F.col("qy")) * (F.col("py") - F.col("qy"))
     w = Window.partitionBy(query_id).orderBy("d2", point_id)
 
-    # phase 1: expand r (doubling) until every query sees >= k candidates.
-    # pending/found are localCheckpoint'ed each round: the loop otherwise
-    # accumulates an anti-join + union lineage per round, and every later
-    # action would replay all earlier rounds' joins.
+    # phase 1: expand r (doubling) until every query sees >= k candidates,
+    # one _lineage.fixpoint round per radius over the pending queries.
     # Start radius from per-occupied-cell density, derived as a SQL
     # scalar broadcast onto the queries — no driver-side collect (each
     # driver sync costs a whole job round-trip, which dominates knn
@@ -152,7 +155,7 @@ def knn_join(
         # truncate the stats lineage once: without this every later job
         # that touches q (pending anti-joins, found, phase 2) re-runs the
         # full points scan + aggregate behind the broadcast
-        q = q.localCheckpoint(eager=False)
+        q = cut(q)
 
     # ONE job AND ONE plan family per round: the round's candidates go
     # through a single Window exec computing BOTH the rank and the
@@ -187,11 +190,36 @@ def knn_join(
                             * F.lit(1.0 + 4e-16)) + 1).cast("long")
     is_kth = F.col("rank") == k  # a rank-k row exists iff the query is done
 
-    pending = q
-    topk_parts: list[DataFrame] = []
-    widen_parts: list[DataFrame] = []
-    widest: int | None = None
-    n_widen_total = 0
+    ranked: list[DataFrame] = []  # per round: the ranked_all cut
+    guards: list = []  # per round: the guard row
+
+    def probe(pending: DataFrame) -> bool:
+        # one round: rank the pending queries' candidates, read the guard
+        cand = _candidates(pending, cells, F.col("_r")).withColumn("d2", d2)
+        ranked.append(cut(
+            cand.withColumn("rank", F.row_number().over(w))
+            .withColumn("n_cand", F.count("*").over(wall))
+            .filter(F.col("rank") <= k)
+            .select(query_id, point_id, "d2", "rank",
+                    (F.col("n_cand") >= k).alias("_done"),
+                    "qx", "qy", "qcx", "qcy", "_r")))
+        guards.append((
+            ranked[-1].agg(
+                F.count(F.when(is_kth, 1)).alias("n_done"),
+                F.max(F.when(is_kth, final_r_expr)).alias("r"),
+                F.count(F.when(is_kth & (final_r_expr > F.col("_r")), 1)
+                        ).alias("n_widen"))
+            .crossJoin(F.broadcast(pending.agg(F.count("*").alias("n_in"))))
+        ).collect()[0])
+        return guards[-1]["n_in"] - guards[-1]["n_done"] == 0
+
+    def stragglers(pending: DataFrame) -> DataFrame:
+        return (pending.join(ranked[-1].filter(is_kth).select(query_id),
+                             query_id, "left_anti")
+                # double the probe radius IN the rows: next round's plan
+                # is shape-identical to this one (see docstring)
+                .withColumn("_r", (F.col("_r") * F.lit(2)).cast("long")))
+
     spark = points.sparkSession
     _saved: dict[str, str] = {}
     if loop_adaptive is not None:
@@ -201,55 +229,18 @@ def knn_join(
         _saved["spark.sql.shuffle.partitions"] = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(int(loop_shuffle_partitions)))
     try:
-        for i in range(max_rounds):
-            cand = _candidates(pending, cells,
-                               F.col("_r")).withColumn("d2", d2)
-            ranked_all = (
-                cand.withColumn("rank", F.row_number().over(w))
-                .withColumn("n_cand", F.count("*").over(wall))
-                .filter(F.col("rank") <= k)
-                .select(query_id, point_id, "d2", "rank",
-                        (F.col("n_cand") >= k).alias("_done"),
-                        "qx", "qy", "qcx", "qcy", "_r")
-                .localCheckpoint(eager=False)
-            )
-            guard = (
-                ranked_all.agg(
-                    F.count(F.when(is_kth, 1)).alias("n_done"),
-                    F.max(F.when(is_kth, final_r_expr)).alias("r"),
-                    F.count(F.when(is_kth & (final_r_expr > F.col("_r")), 1)
-                            ).alias("n_widen"))
-                .crossJoin(F.broadcast(pending.agg(F.count("*").alias("n_in"))))
-            ).collect()[0]
-            topk_parts.append(ranked_all.filter("_done").select(
-                query_id, point_id, "d2", "rank"))
-            widen_parts.append(
-                ranked_all.filter(is_kth)
-                .withColumn("final_r", final_r_expr)
-                .filter(F.col("final_r") > F.col("_r"))
-                .select(query_id, "qx", "qy", "qcx", "qcy",
-                        F.col("_r").alias("r_probe"), "final_r"))
-            if guard["r"] is not None:
-                widest = guard["r"] if widest is None else max(widest, guard["r"])
-            n_widen_total += guard["n_widen"]
-            if guard["n_in"] - guard["n_done"] == 0:
-                break
-            pending = (
-                pending.join(ranked_all.filter(is_kth).select(query_id),
-                             query_id, "left_anti")
-                # double the probe radius IN the rows: next round's plan
-                # is shape-identical to this one (see docstring)
-                .withColumn("_r", (F.col("_r") * F.lit(2)).cast("long")))
-            pending = pending.localCheckpoint(eager=False)
-        else:
-            raise ValueError(f"kNN did not converge in {max_rounds} rounds (k too large?)")
+        # the ranked_all cuts are the result's parts and stay stored;
+        # the last pending table is not read again
+        release(fixpoint(q, stragglers, probe, max_rounds, "kNN"))
     finally:
         for key, val in _saved.items():
             spark.conf.set(key, val)
 
-    topk = topk_parts[0]
-    for part in topk_parts[1:]:
-        topk = topk.unionByName(part)
+    topk = reduce(DataFrame.unionByName, [
+        r.filter("_done").select(query_id, point_id, "d2", "rank")
+        for r in ranked])
+    widest = max((g["r"] for g in guards if g["r"] is not None),
+                 default=None)
 
     # phase 2: annulus-only exact pass (see docstring proof); the guard
     # stats collected with the last round double as the all-settled
@@ -261,12 +252,16 @@ def knn_join(
             f"kNN phase-2 ring {widest} exceeds max_final_r={max_final_r}: "
             f"data too sparse for cell_size={cs} — increase cell_size "
             f"(or raise max_final_r knowingly; probe cost grows as r^2)")
-    if not n_widen_total:
+    if not sum(g["n_widen"] for g in guards):
         return topk
 
-    widen = widen_parts[0]
-    for part in widen_parts[1:]:
-        widen = widen.unionByName(part)
+    widen = reduce(DataFrame.unionByName, [
+        r.filter(is_kth)
+        .withColumn("final_r", final_r_expr)
+        .filter(F.col("final_r") > F.col("_r"))
+        .select(query_id, "qx", "qy", "qcx", "qcy",
+                F.col("_r").alias("r_probe"), "final_r")
+        for r in ranked])
     settled = topk.join(widen.select(query_id), query_id, "left_anti")
 
     annulus = (

@@ -1,11 +1,12 @@
-"""Sinks: distributed parquet tile tables, distributed SHARDED
-.mbtiles, and the driver-side single .mbtiles file.
+"""Sinks: distributed SHARDED .mbtiles and the driver-side single
+.mbtiles file.
 
-The distributed sinks are the product at 100 TB: the (map, images)
-parquet pair partitioned by zoom, and `write_mbtiles_shards` — one
-standalone SQLite shard per quadkey subtree, written EXECUTOR-side
-(streamed into sqlite per task, atomic temp+rename commit, idempotent
-retries) so no tile byte ever crosses the driver. The single-file
+The distributed sink is the product at 100 TB (next to the parquet
+tile table of `overview.render_pyramid_to_sink`):
+`write_mbtiles_shards` — one standalone SQLite shard per quadkey
+subtree, written EXECUTOR-side (streamed into sqlite per task, atomic
+temp+rename commit, idempotent retries) so no tile byte ever crosses
+the driver. The single-file
 SQLite materialization (DDL per /root/reference/src/mbtiles.rs:13-30)
 is a small-scale golden-comparison convenience, like the reference's
 final single-file flush (/root/reference/src/mbtiles.rs:125-144), and
@@ -21,15 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..oracle import MBTILES_DDL, write_mbtiles
-from .render import blobs_table, tiles_table
-
-
-def write_tile_tables(fused: DataFrame, out_dir: str, mode: str = "overwrite") -> None:
-    """Write map/ and images/ parquet. Partitioned by zoom_level so per-
-    zoom consumers (and the overview builder) prune partitions; images/
-    is hash-keyed and deduped (A5)."""
-    tiles_table(fused).write.mode(mode).partitionBy("zoom_level").parquet(f"{out_dir}/map")
-    blobs_table(fused).write.mode(mode).parquet(f"{out_dir}/images")
 
 
 def shard_for_tile(z: int, x: int, y: int, prefix_zoom: int = 2) -> int:
@@ -371,8 +363,10 @@ def materialize_mbtiles(fused: DataFrame, metadata: DataFrame, path: str,
     A single SQLite file is inherently single-node, so this collects to
     the driver — bounded by ``max_tiles`` (default ~5M ≈ a few GB of
     PNGs): pointing this at a continental z14 render would otherwise OOM
-    the driver silently. Past the cap, use ``write_tile_tables`` (the
-    distributed parquet sink, CLI ``--tiles-dir``) instead.
+    the driver silently. Past the cap, use ``write_mbtiles_shards`` (the
+    sharded .mbtiles sink, CLI ``--shards-dir``) or
+    ``overview.render_pyramid_to_sink`` (the parquet tile table, CLI
+    ``--tiles-dir``) instead.
 
     Single pass: collect through limit(max+1) — if the cap trips we
     raise without having buffered the full table, and without running
@@ -383,9 +377,9 @@ def materialize_mbtiles(fused: DataFrame, metadata: DataFrame, path: str,
         raise ValueError(
             f"materialize_mbtiles: tile count exceeds max_tiles={max_tiles}; "
             "a single .mbtiles file is a driver-side materialization — "
-            "use the distributed parquet sink (write_tile_tables / CLI "
-            "--tiles-dir) or the sharded .mbtiles sink "
-            "(write_mbtiles_shards / CLI --shards-dir) for large "
+            "use the sharded .mbtiles sink (write_mbtiles_shards / CLI "
+            "--shards-dir) or the parquet tile table "
+            "(render_pyramid_to_sink / CLI --tiles-dir) for large "
             "pyramids, or raise max_tiles knowingly")
     tiles = [(r["zoom"], r["x"], r["tile_row"], r["tile_hash"]) for r in rows]
     blobs = {r["tile_hash"]: bytes(r["png"]) for r in rows}

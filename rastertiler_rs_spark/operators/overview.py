@@ -368,8 +368,9 @@ def render_pyramid(
     # demands a materialized fork; persist() is that boundary. At real
     # scale the boundary is the tile SINK instead — write zooms
     # [base..max] once, read the base partition back
-    # (mbtiles_sink.write_tile_tables partitions by zoom for exactly
-    # this; the streaming pyramid already works that way per batch).
+    # (render_pyramid_to_sink partitions by zoom for exactly this;
+    # write_mbtiles_shards is the sharded .mbtiles sink; the streaming
+    # pyramid already works that way per batch).
     #
     # Rejected alternatives, measured:
     # - Shared explicit exchange + Spark exchange reuse: Catalyst

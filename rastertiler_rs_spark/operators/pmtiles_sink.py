@@ -112,8 +112,11 @@ def write_pmtiles_distributed(fused: DataFrame, path: str,
         import pandas as pd
         from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        tmp = os.path.join(parts_dir, f".part-{pid:05d}.tmp")
+        ctx = TaskContext.get()
+        pid = ctx.partitionId()
+        # attempt-unique temp name, as in cog_sink
+        tmp = os.path.join(
+            parts_dir, f".part-{pid:05d}-{ctx.taskAttemptId()}.tmp")
         ents, by_hash, pos = [], {}, 0
         last_id = -1
         with open(tmp, "wb") as f:

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._lineage import persisted, round_parts
+
 
 def exact_quantiles(df: DataFrame, col: str,
                     ps_basis_points: list[int]) -> DataFrame:
@@ -40,14 +42,12 @@ def exact_quantiles(df: DataFrame, col: str,
         if not 0 < int(p) <= 10000:
             raise ValueError(f"basis points {p} outside (0, 10000]")
     spark = df.sparkSession
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    n_parts = round_parts(df)
 
-    counts = (df.select(F.col(col).cast("long").alias("v"))
-              .groupBy("v").agg(F.count(F.lit(1)).alias("cnt"))
-              .repartitionByRange(n_parts, "v")
-              .withColumn("pid", F.spark_partition_id())
-              .persist())
-    try:
+    with persisted(df.select(F.col(col).cast("long").alias("v"))
+                   .groupBy("v").agg(F.count(F.lit(1)).alias("cnt"))
+                   .repartitionByRange(n_parts, "v")
+                   .withColumn("pid", F.spark_partition_id())) as counts:
         ptot = sorted((r.pid, r.tot) for r in counts.groupBy("pid")
                       .agg(F.sum("cnt").alias("tot")).collect())
         n_total = sum(t for _, t in ptot)
@@ -84,5 +84,3 @@ def exact_quantiles(df: DataFrame, col: str,
                         "k")).collect()
         return spark.createDataFrame(
             rows, "p_bp long, value long, n_total long, k long")
-    finally:
-        counts.unpersist()

@@ -59,6 +59,7 @@ from .. import tilemath as tm
 from ..fixtures import NODATA, image_index
 from ..kernel import encode_tile, mosaic, read_tile_block
 from ..png import Colormap, decode_band
+from ._lineage import plan_size_bytes
 
 
 def with_footprints(images: DataFrame) -> DataFrame:
@@ -605,9 +606,7 @@ def _cell_tiles(images: DataFrame, src: DataFrame, pz: int, zlo: int,
     mult_cap = env_int("SPARK_GRAFT_CELL_MULT", 8)
     n_parts = max(cores * mult_cap, 8)
     try:
-        size_b = int(images._jdf.queryExecution().optimizedPlan()
-                     .stats().sizeInBytes())
-        est = size_b // _CELL_TASK_BYTES
+        est = plan_size_bytes(images) // _CELL_TASK_BYTES
         n_parts = int(max(min(est, cores * mult_cap), cores * 2, 8))
     except Exception:
         pass  # no stats (unusual plan): keep the ceiling
@@ -788,23 +787,6 @@ def _finish(tiles: DataFrame) -> DataFrame:
         .withColumn("tile_hash", F.xxhash64("png"))
         .select("zoom", "x", "y", "tile_row", "tile_hash", "png")
     )
-
-
-def tiles_table(fused: DataFrame) -> DataFrame:
-    """MBTiles `map` shape (/root/reference/src/mbtiles.rs:18-23)."""
-    return fused.select(
-        F.col("zoom").alias("zoom_level"),
-        F.col("x").alias("tile_column"),
-        F.col("tile_row"),
-        F.col("tile_hash").alias("tile_id"),
-    )
-
-
-def blobs_table(fused: DataFrame) -> DataFrame:
-    """MBTiles `images` shape with content dedup (A5,
-    /root/reference/src/mbtiles.rs:104-107)."""
-    return fused.select(F.col("tile_hash").alias("tile_id"),
-                        F.col("png").alias("tile_data")).dropDuplicates(["tile_id"])
 
 
 def metadata_table(spark: SparkSession, images: DataFrame, minzoom: int, maxzoom: int,

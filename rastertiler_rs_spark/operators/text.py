@@ -7,6 +7,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ._lineage import cut
+
 
 def exact_dup_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact dedup by content hash: (content_md5, n_docs, keep_doc_id)."""
@@ -55,7 +57,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold_pct: int = 30,
     # re-executes the shingle explode+distinct from the scan (8 scans in
     # the r5 physical plan) — the lightweight (doc_id, shingle) proxy is
     # what to store once, not re-derive per consumer
-    sh = char_shingles(docs, n).localCheckpoint(eager=False)
+    sh = cut(char_shingles(docs, n))
     if max_df_pct is not None:
         totals = docs.agg(F.countDistinct("doc_id").alias("n_docs"))
         hot = (
@@ -95,15 +97,40 @@ def minhash_signatures(docs: DataFrame, num_perms: int = 16, n: int = 3) -> Data
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def lsh_candidate_pairs(docs: DataFrame, num_perms: int = 16, band_size: int = 4,
-                        n: int = 3) -> DataFrame:
-    """Banded-LSH near-dup candidates: docs sharing any band bucket.
-    (doc_a < doc_b, n_bands_shared)."""
+def _check_bands(num_perms: int, band_size: int) -> None:
     if not 0 < band_size <= num_perms or num_perms % band_size:
         raise ValueError(
             f"band_size must divide num_perms (got num_perms={num_perms}, "
             f"band_size={band_size}) — leftover permutations would be "
             "silently dropped (weaker recall with no warning)")
+
+
+def _band_pairs(sig: DataFrame, band_buckets) -> DataFrame:
+    """(doc_a < doc_b, n_bands_shared) over docs sharing a band bucket.
+
+    Lazy lineage cut: the self-join references buckets twice, and
+    exchange reuse cannot be relied on across join sides — without a
+    materialization boundary the signature aggregation (the corpus
+    pass) runs once PER SIDE. The stored table is (doc_id, band,
+    bucket) — ~24 bytes/doc/band, the lightweight proxy of the corpus
+    (guide §8 discipline), so one pass + a tiny store beats two passes
+    at every scale."""
+    buckets = cut(sig.select(
+        "doc_id", F.posexplode(band_buckets).alias("band", "bucket")))
+    a, b = buckets.alias("a"), buckets.alias("b")
+    return (
+        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bucket") == F.col("b.bucket"))
+               & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count("*").alias("n_bands_shared"))
+    )
+
+
+def lsh_candidate_pairs(docs: DataFrame, num_perms: int = 16, band_size: int = 4,
+                        n: int = 3) -> DataFrame:
+    """Banded-LSH near-dup candidates: docs sharing any band bucket.
+    (doc_a < doc_b, n_bands_shared)."""
+    _check_bands(num_perms, band_size)
 
     sig = minhash_signatures(docs, num_perms, n)
     # ONE posexplode over an array of per-band buckets, NOT a union of
@@ -116,67 +143,7 @@ def lsh_candidate_pairs(docs: DataFrame, num_perms: int = 16, band_size: int = 4
     band_buckets = F.array(*[
         F.xxhash64(*[F.col(f"h{b * band_size + j}") for j in range(band_size)])
         for b in range(num_perms // band_size)])
-    # lazy localCheckpoint: the self-join references buckets twice, and
-    # exchange reuse cannot be relied on across join sides — without a
-    # materialization boundary the signature aggregation (the corpus
-    # pass) runs once PER SIDE. The checkpointed table is (doc_id,
-    # band, bucket) — ~24 bytes/doc/band, the lightweight proxy of the
-    # corpus (guide §8 discipline), so one pass + a tiny store beats
-    # two passes at every scale.
-    buckets = sig.select(
-        "doc_id", F.posexplode(band_buckets).alias("band", "bucket")
-    ).localCheckpoint(eager=False)
-    a, b = buckets.alias("a"), buckets.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_bands_shared"))
-    )
-
-
-def simhash64(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """64-bit SimHash over whitespace tokens: sign of per-bit vote of
-    token hashes. (doc_id, simhash). Pure column expressions: for each
-    bit position, sum(+1/-1 by token bit) > 0 → bit set."""
-    tokens = docs.select(
-        "doc_id", F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok")
-    ).withColumn("th", F.xxhash64("tok"))
-    votes = [
-        F.sum(
-            F.when(F.expr(f"(th >> {i}) & 1") == 1, 1).otherwise(-1)
-        ).alias(f"v{i}")
-        for i in range(64)
-    ]
-    agg = tokens.groupBy("doc_id").agg(*votes)
-    expr = " + ".join(f"(case when v{i} > 0 then shiftleft(1L, {i}) else 0L end)" for i in range(64))
-    return agg.select("doc_id", F.expr(expr).alias("simhash"))
-
-
-def simhash_near_pairs(docs: DataFrame, max_hamming: int = 8) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance <= max_hamming.
-    Candidate blocking: 4 x 16-bit chunks (pigeonhole guarantees recall
-    for distance <= 3; wider distances are best-effort, standard LSH
-    tradeoff). (doc_a, doc_b, hamming)."""
-    sig = simhash64(docs)
-    chunks = sig.select(
-        "doc_id", "simhash",
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("chunk"),
-                     F.expr(f"(simhash >> {16 * i}) & 65535").alias("val"))
-            for i in range(4)
-        ])).alias("c"),
-    ).select("doc_id", "simhash", "c.chunk", "c.val").localCheckpoint(
-        eager=False)  # two join sides, one 64-vote aggregation pass
-    a, b = chunks.alias("a"), chunks.alias("b")
-    return (
-        a.join(b, (F.col("a.chunk") == F.col("b.chunk")) & (F.col("a.val") == F.col("b.val"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"),
-                F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"))
-        .dropDuplicates(["doc_a", "doc_b"])
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    return _band_pairs(sig, band_buckets)
 
 
 # --- integer-exact variants (DuckDB-oracle-checkable) ---------------------
@@ -220,11 +187,7 @@ def lsh_candidate_pairs_int(docs: DataFrame, num_perms: int = 16,
     """Banded-LSH near-dup candidates, integer-exact: band bucket =
     polynomial fold of the band's signature slice. Same scale shape as
     lsh_candidate_pairs (bucket equi-join, no all-pairs)."""
-    if not 0 < band_size <= num_perms or num_perms % band_size:
-        raise ValueError(
-            f"band_size must divide num_perms (got num_perms={num_perms}, "
-            f"band_size={band_size}) — leftover permutations would be "
-            "silently dropped (weaker recall with no warning)")
+    _check_bands(num_perms, band_size)
 
     sig = minhash_signatures_int(docs, num_perms, n)
     # single posexplode over per-band bucket folds (see the engine-hash
@@ -239,24 +202,14 @@ def lsh_candidate_pairs_int(docs: DataFrame, num_perms: int = 16,
 
     band_buckets = F.array(*[_fold(b)
                              for b in range(num_perms // band_size)])
-    # one materialization, two join-side consumers (see engine-hash
-    # variant above for the rationale)
-    buckets = sig.select(
-        "doc_id", F.posexplode(band_buckets).alias("band", "bucket")
-    ).localCheckpoint(eager=False)
-    a, b = buckets.alias("a"), buckets.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_bands_shared"))
-    )
+    return _band_pairs(sig, band_buckets)
 
 
 def simhash62_int(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """62-bit SimHash from two independent polynomial token hashes
     (B=131 for the high 31 bits, B=137 for the low 31): per-bit votes,
-    bit set where the vote is positive. Integer-exact twin of simhash64."""
+    bit set where the vote is positive. Every token hash is integer
+    arithmetic, so the SQL twin computes the same signature."""
     tokens = docs.select(
         "doc_id", F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok")
     ).select(
@@ -275,18 +228,20 @@ def simhash62_int(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def simhash_near_pairs_int(docs: DataFrame, max_hamming: int = 8) -> DataFrame:
-    """Integer-exact twin of simhash_near_pairs: 16-bit chunk blocking
-    over the 62-bit simhash (pigeonhole recall for hamming <= 3)."""
+    """Near-dup pairs (doc_a, doc_b, hamming) by SimHash hamming
+    distance <= max_hamming, integer-exact: 16-bit chunk blocking over
+    the 62-bit simhash (pigeonhole recall for hamming <= 3; wider
+    distances are best-effort, the standard LSH tradeoff)."""
     sig = simhash62_int(docs)
-    chunks = sig.select(
+    # two join sides, one 62-vote aggregation pass
+    chunks = cut(sig.select(
         "doc_id", "simhash",
         F.explode(F.array(*[
             F.struct(F.lit(i).alias("chunk"),
                      F.expr(f"(simhash >> {16 * i}) & 65535").alias("val"))
             for i in range(4)
         ])).alias("c"),
-    ).select("doc_id", "simhash", "c.chunk", "c.val").localCheckpoint(
-        eager=False)  # two join sides, one 62-vote aggregation pass
+    ).select("doc_id", "simhash", "c.chunk", "c.val"))
     a, b = chunks.alias("a"), chunks.alias("b")
     return (
         a.join(b, (F.col("a.chunk") == F.col("b.chunk")) & (F.col("a.val") == F.col("b.val"))

@@ -132,7 +132,7 @@ def render_warp(images: DataFrame, minzoom: int, maxzoom: int,
     shuffle: decode+warp per image, then mosaic+encode per tile with
     the ascending-image_id overwrite rule shared with the native-3857
     render. Output (zoom, x, y, png) in XYZ rows; feed through
-    render._finish / tiles_table for the TMS sink shape.
+    render._finish for the TMS sink shape.
 
     ``salt_threshold`` has render's meaning: tile keys whose projected
     footprint cover count reaches it mosaic in two salted phases

@@ -10,10 +10,11 @@ suffice (depth is bounded by the strictly-decreasing elevation along
 any flow path, ≤ the value range).
 
 Scale shape: per round ONE self-join on the jump table + ONE 1-row
-convergence aggregate — the components.py discipline (pinned
-repartition, lazy localCheckpoint to cut lineage, decimal sum as the
-fixpoint test is replaced here by an exact pit-count). Rows never
-exceed one per valid pixel; nothing is ever collected.
+convergence count (pointers not yet at a pit) — the components.py
+discipline: the round loop is `_lineage.fixpoint` (pinned repartition,
+lazy lineage cut, superseded round released after the next round's
+action). Rows never exceed one per valid pixel; the only collect is
+the canvas width, once per call.
 
 Nodata discipline: a nodata-neighbor drop is masked to −1 (nothing
 flows into nodata); canvas-border pixels therefore drain inward or
@@ -25,22 +26,20 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
+from ._lineage import (NotConverged, cut, fixpoint, persisted, release,
+                       round_parts, unchanged)
 from .halo import _D8_OFFSETS, _halo_apply, d8_direction
 
 
-def pixel_successors(tiles: DataFrame, tile_size: int,
-                     nodata: int = 0) -> DataFrame:
-    """(v, p): global pixel id → D8 successor id (self for
-    pits/flats), one row per valid pixel. v = row·W + col in global
-    canvas coordinates; W is derived from the tile grid with one tiny
-    aggregate."""
-    ts = int(tile_size)
-    ext = tiles.agg(F.max("tx").alias("mx")).collect()[0]
-    if ext["mx"] is None:
-        return tiles.sparkSession.createDataFrame([], "v long, p long")
-    width = (int(ext["mx"]) + 1) * ts
+def _successors(tiles: DataFrame, ts: int,
+                nodata: int) -> tuple[DataFrame, int]:
+    """(pixel_successors, canvas width W); W = ts without tiles."""
+    mx = tiles.agg(F.max("tx")).collect()[0][0]
+    if mx is None:
+        return tiles.sparkSession.createDataFrame([], "v long, p long"), ts
+    width = (int(mx) + 1) * ts
 
     def per_tile(tx: int, ty: int, pad: np.ndarray) -> dict | None:
         c = pad[1:-1, 1:-1]
@@ -61,38 +60,54 @@ def pixel_successors(tiles: DataFrame, tile_size: int,
             succ[m] = gid[m] + dr * width + dc
         return {"v": gid, "p": succ}
 
-    return _halo_apply(tiles, ts, nodata, True, per_tile, "v long, p long")
+    return (_halo_apply(tiles, ts, nodata, True, per_tile, "v long, p long"),
+            width)
+
+
+def pixel_successors(tiles: DataFrame, tile_size: int,
+                     nodata: int = 0) -> DataFrame:
+    """(v, p): global pixel id → D8 successor id (self for
+    pits/flats), one row per valid pixel. v = row·W + col in global
+    canvas coordinates; W is derived from the tile grid with one tiny
+    aggregate."""
+    return _successors(tiles, int(tile_size), nodata)[0]
+
+
+def _labels(succ: DataFrame, max_rounds: int = 48) -> DataFrame:
+    """watershed_labels over a successor table."""
+    n_parts = round_parts(succ)
+    with persisted(succ.repartition(n_parts, "v")) as succ:
+        pits = succ.filter(F.col("v") == F.col("p")).select("v")
+
+        def step(jump: DataFrame) -> DataFrame:
+            hop = jump.select(F.col("v").alias("p"),
+                              F.col("p").alias("p2"))
+            return jump.join(hop, "p").select("v", F.col("p2").alias("p"))
+
+        def converged(jump: DataFrame) -> bool:
+            # no row whose pointer has not yet reached a pit
+            return jump.join(pits.withColumnRenamed("v", "p"),
+                             "p", "left_anti").count() == 0
+
+        jump = fixpoint(cut(succ, eager=True), step, converged, max_rounds,
+                        "watershed_labels", n_parts, "v")
+        return jump.select("v", F.col("p").alias("pit"))
 
 
 def watershed_labels(tiles: DataFrame, tile_size: int,
                      nodata: int = 0, max_rounds: int = 48) -> DataFrame:
     """(v, pit): every valid pixel's terminal D8 pit, by pointer
     doubling on the successor table. Converges in ceil(log₂ depth)
-    rounds; raises after ``max_rounds`` (a DEM whose longest flow
-    path exceeds 2^48 pixels does not exist)."""
-    spark = tiles.sparkSession
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
-    succ = (pixel_successors(tiles, tile_size, nodata)
-            .repartition(n_parts, "v").persist())
-    try:
-        pits = succ.filter(F.col("v") == F.col("p")).select("v")
-        jump = succ.localCheckpoint()
-        for _ in range(max_rounds):
-            # rows whose pointer has not yet reached a pit
-            pending = (jump.join(pits.withColumnRenamed("v", "p"),
-                                 "p", "left_anti").count())
-            if pending == 0:
-                return jump.select("v", F.col("p").alias("pit"))
-            hop = jump.select(F.col("v").alias("p"),
-                              F.col("p").alias("p2"))
-            jump = (jump.join(hop, "p")
-                    .select("v", F.col("p2").alias("p"))
-                    .repartition(n_parts, "v")
-                    .localCheckpoint(eager=False))
-    finally:
-        succ.unpersist()
-    raise ValueError(
-        f"watershed_labels did not converge in {max_rounds} rounds")
+    rounds; raises after ``max_rounds`` doublings (a DEM whose longest
+    flow path exceeds 2^48 pixels does not exist)."""
+    return _labels(pixel_successors(tiles, tile_size, nodata), max_rounds)
+
+
+def _by_tile(df: DataFrame, col: str, width: int, ts: int):
+    """``df``'s pixel rows grouped by the tile holding pixel v."""
+    return (df.select(F.expr(f"(v % {width}) div {ts}").alias("tx"),
+                      F.expr(f"(v div {width}) div {ts}").alias("ty"), col)
+            .groupBy("tx", "ty"))
 
 
 def watershed_stats(tiles: DataFrame, tile_size: int,
@@ -101,17 +116,12 @@ def watershed_stats(tiles: DataFrame, tile_size: int,
     labeled pixels, sum_g2 = Σ pit id (position-weighted assignment
     pin), max_g2 = distinct basins touching the tile."""
     ts = int(tile_size)
-    ext = tiles.agg(F.max("tx").alias("mx")).collect()[0]
-    width = (int(ext["mx"]) + 1) * ts if ext["mx"] is not None else ts
-    lab = watershed_labels(tiles, ts, nodata)
-    return (lab.select(
-        F.expr(f"(v % {width}) div {ts}").alias("tx"),
-        F.expr(f"(v div {width}) div {ts}").alias("ty"),
-        "pit")
-        .groupBy("tx", "ty")
-        .agg(F.count("*").alias("n_valid"),
-             F.sum("pit").alias("sum_g2"),
-             F.count_distinct("pit").alias("max_g2")))
+    succ, width = _successors(tiles, ts, nodata)
+    lab = _labels(succ)
+    return (_by_tile(lab, "pit", width, ts)
+            .agg(F.count("*").alias("n_valid"),
+                 F.sum("pit").alias("sum_g2"),
+                 F.count_distinct("pit").alias("max_g2")))
 
 
 def basin_sizes(tiles: DataFrame, tile_size: int,
@@ -151,42 +161,40 @@ def flow_accumulation(tiles: DataFrame, tile_size: int,
     ``iterate_rounds=0`` forces the doubling path (pinned equal to the
     iterative result in tests). ``max_rounds`` bounds the DOUBLING
     rounds: 64 covers 2^63 edges — a safety rail, not a tuning knob."""
-    spark = tiles.sparkSession
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
-    succ = (pixel_successors(tiles, tile_size, nodata)
-            .repartition(n_parts, "v").persist())
-    try:
-        from pyspark.sql import Window
+    return _accumulate(pixel_successors(tiles, tile_size, nodata),
+                       max_rounds, iterate_rounds)
 
-        edges = (succ.filter(F.col("v") != F.col("p"))
-                 .select(F.col("v").alias("u"), "p")
-                 .repartition(n_parts, "p").persist())
+
+def _accumulate(succ: DataFrame, max_rounds: int = 64,
+                iterate_rounds: int = 20) -> DataFrame:
+    """flow_accumulation over a successor table."""
+    n_parts = round_parts(succ)
+    with (persisted(succ.repartition(n_parts, "v")) as succ,
+          persisted(succ.filter(F.col("v") != F.col("p"))
+                    .select(F.col("v").alias("u"), "p")
+                    .repartition(n_parts, "p")) as edges):
         pits = succ.filter(F.col("v") == F.col("p")).select(
             F.col("v").alias("pit"))
         n_edges = edges.count()
-        if n_edges == 0:
-            return pits.select(F.col("pit").alias("v"),
-                               F.lit(1).cast("long").alias("acc"))
 
         # fast path: shallow forests converge in depth rounds
-        acc = (succ.select("v", F.lit(1).cast("long").alias("acc"))
-               .repartition(n_parts, "v").localCheckpoint())
-        prev = acc.agg(F.sum("acc")).first()[0]
-        for _ in range(iterate_rounds):
+        def level(acc: DataFrame) -> DataFrame:
             contrib = (edges.join(acc.withColumnRenamed("v", "u"), "u")
                        .groupBy("p").agg(F.sum("acc").alias("up")))
-            acc = (succ.select("v")
-                   .join(contrib.withColumnRenamed("p", "v"), "v", "left")
-                   .select("v", (F.lit(1)
-                                 + F.coalesce(F.col("up"), F.lit(0)))
-                           .cast("long").alias("acc"))
-                   .repartition(n_parts, "v")
-                   .localCheckpoint(eager=False))
-            cur = acc.agg(F.sum("acc")).first()[0]
-            if cur == prev:
-                edges.unpersist()
-                return acc
-            prev = cur
+            return (succ.select("v")
+                    .join(contrib.withColumnRenamed("p", "v"), "v", "left")
+                    .select("v", (F.lit(1)
+                                  + F.coalesce(F.col("up"), F.lit(0)))
+                            .cast("long").alias("acc")))
+
+        acc = cut(succ.select("v", F.lit(1).cast("long").alias("acc")),
+                  n_parts, "v", eager=True)
+        total = unchanged(lambda a: a.agg(F.sum("acc")).first()[0])
+        try:
+            return fixpoint(acc, level, total, iterate_rounds,
+                            "flow_accumulation", n_parts, "v")
+        except NotConverged:
+            pass
 
         # deep chain: switch to the Euler-tour log-round formulation
         rounds = max(1, int(math.ceil(math.log2(2 * n_edges + 1))))
@@ -216,26 +224,27 @@ def flow_accumulation(tiles: DataFrame, tile_size: int,
                       F.when(F.col("ns").isNotNull(), F.col("ns") * 2)
                       .when(F.col("_root").isNull(), F.col("p") * 2 + 1)
                       .otherwise(F.lit(None).cast("long")).alias("nxt")))
-        jump = (down.unionByName(up)
-                .withColumn("w", F.lit(1).cast("long"))
-                .repartition(n_parts, "dart")
-                .localCheckpoint(eager=False))
+        jumps = [cut(down.unionByName(up)
+                     .withColumn("w", F.lit(1).cast("long")),
+                     n_parts, "dart")]
 
         # pointer doubling with partial sums: invariant w = #darts in
-        # [dart, nxt); when nxt is NULL, w = to-end rank inclusive
+        # [dart, nxt); when nxt is NULL, w = to-end rank inclusive.
+        # No per-round action: every round is stored by the final
+        # eager cut below and released after it.
         for _ in range(rounds):
+            jump = jumps[-1]
             b = jump.select(F.col("dart").alias("_d"),
                             F.col("nxt").alias("_n2"),
                             F.col("w").alias("_w2"))
-            jump = (jump.join(b, F.col("nxt") == F.col("_d"), "left")
-                    .select("dart", F.col("_n2").alias("nxt"),
-                            (F.col("w") + F.coalesce(F.col("_w2"),
-                                                     F.lit(0)))
-                            .cast("long").alias("w"))
-                    .repartition(n_parts, "dart")
-                    .localCheckpoint(eager=False))
+            jumps.append(cut(
+                jump.join(b, F.col("nxt") == F.col("_d"), "left")
+                .select("dart", F.col("_n2").alias("nxt"),
+                        (F.col("w") + F.coalesce(F.col("_w2"), F.lit(0)))
+                        .cast("long").alias("w")),
+                n_parts, "dart"))
 
-        rank = jump.select("dart", "w")
+        rank = jumps[-1].select("dart", "w")
         down_rank = (rank.where(F.col("dart") % 2 == 0)
                      .select(F.expr("dart div 2").alias("u"),
                              F.col("w").alias("wd")))
@@ -254,14 +263,11 @@ def flow_accumulation(tiles: DataFrame, tile_size: int,
                             (F.lit(1) + F.coalesce(F.col("kids"),
                                                    F.lit(0)))
                             .cast("long").alias("acc")))
-        out = (sizes.select(F.col("u").alias("v"), "acc")
-               .unionByName(pit_rows)
-               .repartition(n_parts, "v")
-               .localCheckpoint())  # eager: edges unpersists below
-        edges.unpersist()
+        out = cut(sizes.select(F.col("u").alias("v"), "acc")
+                  .unionByName(pit_rows), n_parts, "v", eager=True)
+        for jump in jumps:
+            release(jump)
         return out
-    finally:
-        succ.unpersist()
 
 
 def flow_accumulation_stats(tiles: DataFrame, tile_size: int,
@@ -270,14 +276,9 @@ def flow_accumulation_stats(tiles: DataFrame, tile_size: int,
     n_valid, Σacc (= total drained-through counts, the stream-power
     mass of the tile), max acc (the tile's largest channel)."""
     ts = int(tile_size)
-    ext = tiles.agg(F.max("tx").alias("mx")).collect()[0]
-    width = (int(ext["mx"]) + 1) * ts if ext["mx"] is not None else ts
-    acc = flow_accumulation(tiles, ts, nodata)
-    return (acc.select(
-        F.expr(f"(v % {width}) div {ts}").alias("tx"),
-        F.expr(f"(v div {width}) div {ts}").alias("ty"),
-        "acc")
-        .groupBy("tx", "ty")
-        .agg(F.count("*").alias("n_valid"),
-             F.sum("acc").alias("sum_g2"),
-             F.max("acc").alias("max_g2")))
+    succ, width = _successors(tiles, ts, nodata)
+    acc = _accumulate(succ)
+    return (_by_tile(acc, "acc", width, ts)
+            .agg(F.count("*").alias("n_valid"),
+                 F.sum("acc").alias("sum_g2"),
+                 F.max("acc").alias("max_g2")))

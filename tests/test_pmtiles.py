@@ -210,6 +210,34 @@ def test_materialize_and_distributed_agree(spark, tmp_path):
         fused.unpersist()
 
 
+def test_distributed_part_temp_is_per_attempt(spark, tmp_path):
+    """A part's temp file is unique per task attempt: the temp another
+    attempt of partition 0 is still writing is neither truncated nor
+    renamed into place."""
+    from rastertiler_rs_spark.operators.pmtiles_sink import (
+        materialize_pmtiles, write_pmtiles_distributed)
+
+    fused = _small_render(spark).persist()
+    try:
+        p1 = str(tmp_path / "a.pmtiles")
+        p2 = str(tmp_path / "b.pmtiles")
+        materialize_pmtiles(fused, p1)
+        os.makedirs(p2 + ".parts")
+        other = os.path.join(p2 + ".parts", ".part-00000.tmp")
+        with open(other, "wb") as f:
+            f.write(b"other attempt")
+        write_pmtiles_distributed(fused, p2, n_parts=3)
+        with open(other, "rb") as f:
+            assert f.read() == b"other attempt"
+        t1 = dict(((z, x, y), b) for z, x, y, b in
+                  PMTilesReader(open(p1, "rb").read()))
+        t2 = dict(((z, x, y), b) for z, x, y, b in
+                  PMTilesReader(open(p2, "rb").read()))
+        assert t1 == t2 and t1
+    finally:
+        fused.unpersist()
+
+
 def test_cli_pmtiles_output(spark, tmp_path):
     """render OUT.pmtiles routes to the distributed archive sink and
     carries the mbtiles-equivalent metadata."""
