@@ -59,13 +59,17 @@ def _zoom(v: str) -> int:
 def cmd_render(args) -> None:
     from .operators._lineage import persisted
     from .operators.overview import render_pyramid
-    from .operators.render import metadata_table, render
+    from .operators.render import metadata_table
     from .session import get_spark
 
     if args.minzoom > args.maxzoom:
         sys.exit("ERROR: minzoom must be less than or equal to maxzoom")
     if not os.path.exists(args.src):
         sys.exit(f"ERROR: input does not exist: {args.src}")
+    if args.out == "-" and not (args.shards_dir or args.xyz_dir
+                                or args.tiles_dir):
+        sys.exit("ERROR: OUT='-' (skip single-file output) requires "
+                 "--shards-dir, --xyz-dir, or --tiles-dir")
 
     spark = get_spark("rastertiler-render", cpus=args.workers)
     spark.sparkContext.setLogLevel("ERROR")
@@ -81,36 +85,29 @@ def cmd_render(args) -> None:
     if args.colormap and tag != "u8":
         sys.exit("ERROR: colormap can only be provided for uint8 data")
 
+    overview_below = None if args.disable_overviews else 8
     if "minlon" in images.columns:
         # geographic (EPSG:4326) source: reproject through the warp
         # operator (the reference's warped-VRT role, dataset.rs:74-109)
         from .operators.warp import render_warp_pyramid
 
-        if args.tiles_dir:
-            sys.exit("ERROR: --tiles-dir is not supported for "
-                     "geographic sources yet (warp renders in-memory)")
-        fused = render_warp_pyramid(
-            images, args.minzoom, args.maxzoom, args.tilesize, tag,
-            args.colormap,
-            overview_below=None if args.disable_overviews else 8)
-    elif args.tiles_dir:
-        # sink-boundary pyramid (the at-scale fork): direct zooms write
-        # once, cascade reads the base partition back — no executor-
-        # memory cache of the output; .mbtiles materializes from the
-        # written table
-        from .operators.overview import render_pyramid_to_sink
-
-        fused = render_pyramid_to_sink(
-            images, args.tiles_dir, args.minzoom, args.maxzoom,
-            args.tilesize, tag, args.colormap,
-            overview_below=None if args.disable_overviews else 8)
-    elif args.disable_overviews:
-        fused = render(images, args.minzoom, args.maxzoom, args.tilesize,
-                       tag, args.colormap)
+        fused = render_warp_pyramid(images, args.minzoom, args.maxzoom,
+                                    args.tilesize, tag, args.colormap,
+                                    overview_below)
     else:
         fused = render_pyramid(images, args.minzoom, args.maxzoom,
                                args.tilesize, tag, args.colormap,
-                               overview_below=8)
+                               overview_below)
+    if args.tiles_dir:
+        # the at-scale product: the pyramid written once as a
+        # zoom-partitioned parquet table; every sink reads the table
+        from .operators.overview import _to_tile_table
+
+        fused = _to_tile_table(fused, args.tiles_dir)
+    n_sinks = sum(1 for v in (args.shards_dir, args.xyz_dir,
+                              args.out != "-") if v)
+    if n_sinks == 0:
+        return  # --tiles-dir alone: the written table is the output
     name = args.name or os.path.splitext(os.path.basename(args.src))[0]
     meta = metadata_table(spark, images, args.minzoom, args.maxzoom, name)
     if args.description or args.attribution:
@@ -118,12 +115,6 @@ def cmd_render(args) -> None:
                  ("attribution", args.attribution or "")]
         extra = [(k, v) for k, v in extra if v]
         meta = meta.unionByName(spark.createDataFrame(extra, meta.schema))
-    if args.out == "-" and not (args.shards_dir or args.xyz_dir
-                                or args.tiles_dir):
-        sys.exit("ERROR: OUT='-' (skip single-file output) requires "
-                 "--shards-dir, --xyz-dir, or --tiles-dir")
-    n_sinks = sum(1 for v in (args.shards_dir, args.xyz_dir,
-                              args.out != "-") if v)
     if n_sinks > 1:
         # every sink consumes fused: persist so the render runs ONCE
         # (lazy-DataFrame forks re-execute the producer otherwise)
@@ -564,9 +555,9 @@ def main(argv=None) -> None:
                         "atomic per tile); pass OUT as '-' to skip the "
                         "single-file output")
     r.add_argument("--tiles-dir", default=None,
-                   help="materialize the pyramid as a zoom-partitioned "
-                        "parquet tile table here (the at-scale sink "
-                        "boundary) instead of rendering in memory")
+                   help="write the pyramid once as a zoom-partitioned "
+                        "parquet tile table here; the other outputs "
+                        "read that table")
     r.set_defaults(fn=cmd_render)
 
     s = sub.add_parser(

@@ -2,7 +2,9 @@
 .mbtiles file.
 
 The distributed sink is the product at 100 TB (next to the parquet
-tile table of `overview.render_pyramid_to_sink`):
+tile table of `overview.render_pyramid_to_sink`, the one-pass pyramid
+written once by zoom; every sink reads the pyramid lazily, and nothing
+is cached between the render and the write):
 `write_mbtiles_shards` — one standalone SQLite shard per quadkey
 subtree, written EXECUTOR-side (streamed into sqlite per task, atomic
 temp+rename commit, idempotent retries) so no tile byte ever crosses

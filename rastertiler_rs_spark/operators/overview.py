@@ -7,8 +7,18 @@ precise, and switchable off (/root/reference/src/dataset.rs:28-30,
 2x nearest decimation of zoom z+1 (each parent's four children pasted
 into a 2·ts super-canvas, parent pixel i = child-pair pixel 2i+1, the
 K2 index rule idx = floor((i+0.5)*2)), so low zooms never touch source
-images at all. ``cascade_fragments`` builds every such level in one
-shuffle; ``oracle.overview_oracle`` states the level-by-level rule.
+images at all. k levels of that rule compose to one strided sample of
+the base (_strided_axis), so every base tile emits its fragment for
+every ancestor zoom at once; ``oracle.overview_oracle`` states the
+level-by-level rule.
+
+One pass (render_pyramid, render_warp_pyramid): the render's own last
+python worker decodes each base tile it just encoded and appends its
+fragments (_with_fragments); tile rows and fragment rows share ONE
+exchange on (zoom, x, y), and one paste stage passes tiles through and
+assembles + encodes every ancestor tile (_paste). Nothing is cached,
+so no fork outlives the call. ``cascade_fragments`` runs the same emit
+and paste over stored tiles (the streaming upsert).
 
 Why this matters at 100 TB: a direct z0 render mosaics EVERY image onto
 one tile — 10^12 contributions to a single group key. The cascade
@@ -29,6 +39,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..fixtures import NODATA
 from ..kernel import encode_tile
 from ..png import Colormap, decode_png
+from .render import _TILE_SCHEMA, _emit_tiles, _finish, _render_tiles
 
 
 def validate_cascade_colormap(colormap_str: str | None) -> None:
@@ -106,56 +117,81 @@ def _strided_axis(t: int, tile_size: int, step: int) -> tuple[int, int] | None:
     return src, ((t * tile_size + src + 1) // step - 1) % tile_size
 
 
-def _fragment_emit_fn(top_zoom: int, minzoom: int, tile_size: int,
-                      dtype_tag: str, colormap_str: str | None, nodata: int):
-    """Map-only stage of the one-shot cascade: decode each base tile
-    ONCE and emit its strided sample for EVERY ancestor zoom. k-fold 2x
-    nearest decimation composes to strided sampling (_strided_axis), and
-    pasting children into parent quadrants commutes with the sampling,
-    so these fragments assemble into canvases value-identical to the
-    level-by-level rule's (byte-identical PNGs against
-    oracle.overview_oracle; pinned by
+def _fragments(canvas: np.ndarray, x: int, y: int, top_zoom: int,
+               minzoom: int, tile_size: int, nodata: int):
+    """Base tile (x, y)'s strided sample for EVERY ancestor zoom in
+    [minzoom, top_zoom), as (zoom, x, y, r0, c0, fw, frag) rows keyed
+    by the ancestor tile. k-fold 2x nearest decimation composes to
+    strided sampling (_strided_axis), and pasting children into parent
+    quadrants commutes with the sampling, so these fragments assemble
+    into canvases value-identical to the level-by-level rule's
+    (byte-identical PNGs against oracle.overview_oracle; pinned by
     tests/test_overview_salt.py::test_fragment_cascade_byte_parity).
     Fragments may be non-square; ``fw`` is their width."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        colormap = Colormap.parse(colormap_str, nodata) if colormap_str else None
-        for pdf in batches:
-            out = {"zoom": [], "x": [], "y": [], "r0": [], "c0": [],
-                   "fw": [], "frag": []}
-            for row in pdf.itertuples(index=False):
-                canvas = decode_canvas(bytes(row.png), dtype_tag, colormap, nodata)
-                x, y = int(row.x), int(row.y)
-                for z in range(minzoom, top_zoom):
-                    k = top_zoom - z
-                    step = 1 << k
-                    rows = _strided_axis(y, tile_size, step)
-                    cols = _strided_axis(x, tile_size, step)
-                    if rows is None or cols is None:
-                        continue
-                    frag = canvas[rows[0] :: step, cols[0] :: step]
-                    if (frag == nodata).all():
-                        continue  # parent canvas is nodata-prefilled
-                    out["zoom"].append(z)
-                    out["x"].append(x >> k)
-                    out["y"].append(y >> k)
-                    out["r0"].append(rows[1])
-                    out["c0"].append(cols[1])
-                    out["fw"].append(frag.shape[1])
-                    out["frag"].append(np.ascontiguousarray(frag).tobytes())
-            yield pd.DataFrame(out)
-
-    return fn
+    for z in range(minzoom, top_zoom):
+        k = top_zoom - z
+        step = 1 << k
+        rows = _strided_axis(y, tile_size, step)
+        cols = _strided_axis(x, tile_size, step)
+        if rows is None or cols is None:
+            continue
+        frag = canvas[rows[0] :: step, cols[0] :: step]
+        if (frag == nodata).all():
+            continue  # parent canvas is nodata-prefilled
+        yield (z, x >> k, y >> k, rows[1], cols[1], frag.shape[1],
+               np.ascontiguousarray(frag).tobytes())
 
 
-_FRAG_SCHEMA = "zoom int, x long, y long, r0 int, c0 int, fw int, frag binary"
+_FRAG_COLS = ["zoom", "x", "y", "r0", "c0", "fw", "frag"]
+# tile rows carry png (fragment columns null), fragment rows the rest
+_EMIT_SCHEMA = _TILE_SCHEMA + ", r0 int, c0 int, fw int, frag binary"
+
+
+def _with_fragments(base: int, minzoom: int, tile_size: int,
+                    dtype_tag: str, colormap_str: str | None,
+                    nodata: int = NODATA):
+    """The pyramid's ``emit`` hook (render._emit_tiles's contract): run
+    the producer's last mapInPandas function ``fn`` with every (zoom,
+    x, y, png) row it yields passing through, and each ``zoom == base``
+    row decoded in this same worker and followed by its _fragments.
+
+    Emitting inside the producer's worker, not as a second chained
+    mapInPandas, is measured: the chained form starts one more python
+    worker per task (pyramid_merge peak RSS +25-28%, cold pass slower).
+    The decode stays on purpose: decode_canvas costs ~0.09 ms per 256²
+    tile against ~1.4 ms for encode_tile, while fragments from the
+    canvases would branch every encode site on pyramid mode."""
+
+    def emit(df: DataFrame, fn) -> DataFrame:
+        def wrapped(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            colormap = (Colormap.parse(colormap_str, nodata)
+                        if colormap_str else None)
+            for pdf in fn(batches):
+                tiles = pdf[["zoom", "x", "y", "png"]]
+                yield tiles.assign(r0=None, c0=None, fw=None, frag=None)
+                at_base = tiles[tiles["zoom"] == base]
+                frags = [
+                    f for x, y, png in zip(at_base["x"], at_base["y"],
+                                           at_base["png"])
+                    for f in _fragments(
+                        decode_canvas(bytes(png), dtype_tag, colormap, nodata),
+                        int(x), int(y), base, minzoom, tile_size, nodata)
+                ]
+                if frags:
+                    yield pd.DataFrame(frags, columns=_FRAG_COLS).assign(png=None)
+
+        return df.mapInPandas(wrapped, _EMIT_SCHEMA)
+
+    return emit
 
 
 def _fragment_paste_fn(tile_size: int, dtype_tag: str,
                        colormap_str: str | None, nodata: int,
                        flush_rows: int = 1024):
-    """Sorted-stream paste+encode over fragments grouped by ancestor
-    tile. Fragments target DISJOINT canvas regions and paste order is
+    """Sorted-stream paste+encode over rows grouped by tile key. Rows
+    that carry a png are finished tiles and pass straight through (no
+    fragment shares their key: tiles sit at zooms >= base, fragments
+    below). Fragments target DISJOINT canvas regions and paste order is
     irrelevant, so the stream carries only the CURRENT tile's canvas
     across Arrow-batch boundaries — no pending-rows buffer. (A
     hold-back-the-boundary-group pattern like the cell stream's would
@@ -184,9 +220,12 @@ def _fragment_paste_fn(tile_size: int, dtype_tag: str,
             return df
 
         for pdf in batches:
+            done = pdf["png"].notna()
+            if done.any():
+                yield pdf.loc[done, ["zoom", "x", "y", "png"]]
+            frags = pdf[~done]
             for z, x, y, r0, c0, fw, frag in zip(
-                    pdf["zoom"], pdf["x"], pdf["y"], pdf["r0"], pdf["c0"],
-                    pdf["fw"], pdf["frag"]):
+                    *(frags[c] for c in _FRAG_COLS)):
                 key = (int(z), int(x), int(y))
                 if key != cur_key:
                     if cur_key is not None:
@@ -206,6 +245,47 @@ def _fragment_paste_fn(tile_size: int, dtype_tag: str,
     return fn
 
 
+def _paste(rows: DataFrame, tile_size: int, dtype_tag: str,
+           colormap_str: str | None) -> DataFrame:
+    """The one paste step: _EMIT_SCHEMA rows → ONE exchange keyed by
+    (zoom, x, y) (a tile row by itself, a fragment by its ancestor
+    tile) → sorted-stream _fragment_paste_fn → TMS flip + hash
+    (render._finish). Groups are one ancestor tile (<= 4^k tiny
+    fragments); fragment bytes total ~= base_bytes/3.
+
+    Task count ~= cores, NOT the renderer's cores*8: per-group work is
+    tiny and uniform, so there is no straggler tail worth packing, and
+    every python task pays a fixed start-up cost."""
+    n_parts = max(rows.sparkSession.sparkContext.defaultParallelism, 8)
+    return _finish(
+        rows.repartition(n_parts, "zoom", "x", "y")
+        .sortWithinPartitions("zoom", "x", "y")
+        .mapInPandas(
+            _fragment_paste_fn(tile_size, dtype_tag, colormap_str, NODATA),
+            _TILE_SCHEMA))
+
+
+def _pyramid(render_tiles, minzoom: int, maxzoom: int,
+             overview_below: int | None, tile_size: int, dtype_tag: str,
+             colormap_str: str | None) -> DataFrame:
+    """The pyramid over one render path: ``render_tiles(zlo, emit)``
+    renders zooms [zlo, maxzoom] as (zoom, x, y, png) rows with its
+    last python stage run through ``emit`` (render._render_tiles,
+    warp._warp_tiles). Without overviews that is the direct render;
+    with them the base level's fragments ride the render's own worker
+    (_with_fragments) into the one _paste exchange."""
+    if overview_below is None or overview_below <= minzoom:
+        return _finish(render_tiles(minzoom, _emit_tiles))
+    # Clamp to the requested range: the reference renders exactly
+    # minzoom..maxzoom (src/main.rs zoom validation) — with the CLI's
+    # default overview_below above a small --maxzoom, an unclamped base
+    # would render and emit zooms beyond maxzoom.
+    base = min(max(overview_below, minzoom), maxzoom)
+    emit = _with_fragments(base, minzoom, tile_size, dtype_tag, colormap_str)
+    return _paste(render_tiles(base, emit), tile_size, dtype_tag,
+                  colormap_str)
+
+
 def cascade_fragments(
     fused_top: DataFrame,
     minzoom: int,
@@ -214,13 +294,10 @@ def cascade_fragments(
     colormap_str: str | None = None,
     top_zoom: int | None = None,
 ) -> DataFrame:
-    """One-shot overview build: ONE map-only python stage (decode each
-    base tile once, emit per-ancestor strided fragments) + ONE shuffle
-    keyed by ancestor tile + ONE assemble/encode stage for ALL low
-    zooms. A per-level exchange+python pair would pay fixed stage
-    floors that dominate low-zoom build time at high core counts (the
-    levels shrink 4x each but every level would still pay a full
-    shuffle + python stage + intermediate PNG decode).
+    """Overview zooms [minzoom, top_zoom) of STORED top-level tiles
+    ``fused_top`` (the streaming upsert's decode path): the pyramid's
+    emit (_with_fragments over the rows as they are, fragment rows
+    filtered JVM-side) and its one _paste exchange.
 
     Colormap contract: the cascade decodes stored paletted PNGs back to
     values, so a user colormap must cover every value that OCCURS in
@@ -234,25 +311,15 @@ def cascade_fragments(
     (oracle.overview_oracle): k-fold 2x decimation == strided sampling
     for any tile size and depth (see _strided_axis); intermediate-level
     drops can't change surviving values, and a tile exists in both
-    schemes iff its assembled canvas has data.
-
-    Scale shape: fragment bytes total ~= base_bytes/3 through one
-    compressed shuffle; groups are one ancestor tile (<= 4^k tiny
-    fragments). No persisted intermediates, so no executor-cache
-    bookkeeping for callers."""
+    schemes iff its assembled canvas has data."""
     spark = fused_top.sparkSession
     if top_zoom is None:
         top_zoom = fused_top.select(F.max("zoom")).collect()[0][0]
     if top_zoom is None or top_zoom <= minzoom:
         return fused_top.filter(F.lit(False))
-    # task count ~= cores, NOT the renderer's cores*8: every python task
-    # pays a fixed start-up cost (PySpark's per-task import-cache
-    # invalidation re-parsed pyspark.zip until ``_worker`` stamped it; a
-    # 256-task no-op python stage cost ~2.5 s wall at local[32]
-    # regardless of data), and these stages have no straggler tail
-    # worth packing — per-group work is tiny and uniform
     n_parts = max(spark.sparkContext.defaultParallelism, 8)
-    top = fused_top.select("x", "y", "png")
+    top = fused_top.select(F.lit(top_zoom).cast("int").alias("zoom"),
+                           "x", "y", "png")
     # coalesce can only REDUCE partitions: a narrow input (e.g. a small
     # pruned sink scan) would run the decode-heavy emit stage on its
     # 2-4 scan splits; pay the exchange only in that case
@@ -260,25 +327,10 @@ def cascade_fragments(
         top = top.repartition(n_parts)
     else:
         top = top.coalesce(n_parts)
-    frags = top.mapInPandas(
-        _fragment_emit_fn(top_zoom, minzoom, tile_size, dtype_tag,
-                          colormap_str, NODATA),
-        _FRAG_SCHEMA,
-    )
-    tiles = (
-        frags.repartition(n_parts, "zoom", "x", "y")
-        .sortWithinPartitions("zoom", "x", "y")
-        .mapInPandas(
-            _fragment_paste_fn(tile_size, dtype_tag, colormap_str, NODATA),
-            "zoom int, x long, y long, png binary",
-        )
-    )
-    flip = F.expr("shiftleft(1L, zoom)") - 1 - F.col("y")
-    return (
-        tiles.withColumn("tile_row", flip)
-        .withColumn("tile_hash", F.xxhash64("png"))
-        .select("zoom", "x", "y", "tile_row", "tile_hash", "png")
-    )
+    emit = _with_fragments(top_zoom, minzoom, tile_size, dtype_tag,
+                           colormap_str)
+    frags = emit(top, lambda batches: batches).filter(F.col("frag").isNotNull())
+    return _paste(frags, tile_size, dtype_tag, colormap_str)
 
 
 def render_pyramid_to_sink(
@@ -291,41 +343,25 @@ def render_pyramid_to_sink(
     colormap_str: str | None = None,
     overview_below: int | None = None,
 ) -> DataFrame:
-    """The 100 TB realization of render_pyramid: materialize the fork
-    at the SINK instead of executor memory. Direct zooms
-    [base, maxzoom] render once and write straight to a zoom-partitioned
-    parquet tile table; the cascade then reads ONLY the base partition
-    back (partition-pruned scan — no re-render, no cluster-wide cache
-    of the full output) and appends the low zooms. render_pyramid's
-    persist() fork holds the whole fused output in executor storage,
-    which is the right call for an in-memory pipeline at bench scale
-    but not for a 10^12-row table; here the only state between the two
-    jobs is the product itself.
+    """render_pyramid written once to a zoom-partitioned parquet tile
+    table at ``out_dir/tiles`` and read back — the at-scale product for
+    the sinks to read (a table, not a 10^12-row collect).
 
-    Returns a DataFrame reading the completed table at
-    ``out_dir/tiles`` (same fused schema; byte-content identical to
-    render_pyramid — pinned by tests/test_overview_salt.py).
-    """
-    from .render import render
+    Returns a DataFrame reading the completed table (same fused
+    schema; byte-content identical to render_pyramid — pinned by
+    tests/test_overview_salt.py)."""
+    return _to_tile_table(
+        render_pyramid(images, minzoom, maxzoom, tile_size, dtype_tag,
+                       colormap_str, overview_below), out_dir)
 
-    spark = images.sparkSession
-    tiles_path = f"{out_dir}/tiles"
-    if overview_below is None or overview_below <= minzoom:
-        fused = render(images, minzoom, maxzoom, tile_size, dtype_tag,
-                       colormap_str)
-        fused.write.mode("overwrite").partitionBy("zoom").parquet(tiles_path)
-        return spark.read.parquet(tiles_path)
 
-    base = min(max(overview_below, minzoom), maxzoom)
-    full = render(images, base, maxzoom, tile_size, dtype_tag,
-                  colormap_str)
-    full.write.mode("overwrite").partitionBy("zoom").parquet(tiles_path)
-    base_level = spark.read.parquet(tiles_path).filter(
-        F.col("zoom") == base)  # prunes to the zoom=<base> directory
-    low = cascade_fragments(base_level, minzoom, tile_size, dtype_tag,
-                            colormap_str, top_zoom=base)
-    low.write.mode("append").partitionBy("zoom").parquet(tiles_path)
-    return spark.read.parquet(tiles_path)
+def _to_tile_table(fused: DataFrame, out_dir: str) -> DataFrame:
+    """Write ``fused`` as the zoom-partitioned parquet table at
+    ``out_dir/tiles`` and read it back (render_pyramid_to_sink, CLI
+    --tiles-dir)."""
+    path = f"{out_dir}/tiles"
+    fused.write.mode("overwrite").partitionBy("zoom").parquet(path)
+    return fused.sparkSession.read.parquet(path)
 
 
 def render_pyramid(
@@ -336,71 +372,24 @@ def render_pyramid(
     dtype_tag: str = "u8",
     colormap_str: str | None = None,
     overview_below: int | None = None,
-    persisted: list | None = None,
 ) -> DataFrame:
     """Full pyramid with the overview cascade below ``overview_below``:
     zooms in [overview_below, maxzoom] render directly from source
     images; zooms in [minzoom, overview_below) are its 2x-per-step
-    nearest decimation (cascade_fragments).
+    nearest decimation, emitted by the render's own last python worker
+    and pasted in the one exchange (module docstring). Nothing is
+    cached, so there is nothing for the caller to release.
 
     ``overview_below=None`` → all-direct (exact; the reference's
-    --disable-overviews). The direct render is persisted and appended
-    to ``persisted``; the caller releases it once the result is
-    materialized (render_pyramid_to_sink is the sink-boundary variant
-    with nothing cached).
-    """
-    from .render import render
+    --disable-overviews).
 
-    if overview_below is None or overview_below <= minzoom:
-        return render(images, minzoom, maxzoom, tile_size, dtype_tag,
-                      colormap_str)
-    # Clamp to the requested range: the reference renders exactly
-    # minzoom..maxzoom (src/main.rs zoom validation) — with the CLI's
-    # default overview_below above a small --maxzoom, an unclamped base
-    # would render and emit zooms beyond maxzoom.
-    base = min(max(overview_below, minzoom), maxzoom)
-    # ONE direct render covers [base, maxzoom] — the base level is NOT
-    # rendered as a second job (that cost a full extra decode of every
-    # source image plus its own explode+shuffle: ~35% of the direct
-    # render's core-seconds again, profiled as the production pyramid's
-    # scaling bottleneck at local[32]). The result union and the
-    # cascade both consume the single render, which in lazy Spark
-    # demands a materialized fork; persist() is that boundary. At real
-    # scale the boundary is the tile SINK instead — write zooms
-    # [base..max] once, read the base partition back
-    # (render_pyramid_to_sink partitions by zoom for exactly this;
-    # write_mbtiles_shards is the sharded .mbtiles sink; the streaming
-    # pyramid already works that way per batch).
-    #
-    # Rejected alternatives, measured:
-    # - Shared explicit exchange + Spark exchange reuse: Catalyst
-    #   pushes the zoom filter AND per-consumer column pruning below
-    #   the exchange, specializing it per consumer — two non-identical
-    #   exchanges, no reuse, and the whole render silently executes
-    #   TWICE (nondeterministic-predicate barriers fix the filter but
-    #   not the pruning). +2x cell-stage core-seconds.
-    # - sortWithinPartitions("zoom") before the persist (to give the
-    #   cascade's zoom==base scan cached-batch min/max pruning):
-    #   sorting rows that carry PNG payloads moves ~0.6 KB/row through
-    #   the sorter — slower at both parallelism levels than
-    #   decompressing mixed cached batches on the one filtered scan.
-    full = render(images, base, maxzoom, tile_size, dtype_tag,
-                  colormap_str)
-    return _with_overviews(full, base, minzoom, tile_size, dtype_tag,
-                          colormap_str, persisted)
-
-
-def _with_overviews(full: DataFrame, base: int, minzoom: int, tile_size: int,
-                   dtype_tag: str, colormap_str: str | None,
-                   persisted: list | None) -> DataFrame:
-    """``full`` (fused zooms [base, maxzoom], already rendered) plus the
-    cascaded zooms [minzoom, base). The union and the cascade both
-    consume ``full``, so it is persisted once (appended to
-    ``persisted`` for the caller to release) and the cascade reads its
-    base level from the cache."""
-    shared = full.persist()
-    if persisted is not None:
-        persisted.append(shared)
-    low = cascade_fragments(shared.filter(F.col("zoom") == base), minzoom,
-                            tile_size, dtype_tag, colormap_str, top_zoom=base)
-    return shared.unionByName(low)
+    ONE direct render covers [base, maxzoom]: the base level is NOT
+    rendered as a second job (that cost a full extra decode of every
+    source image plus its own explode+shuffle, ~35% of the direct
+    render's core-seconds again at local[32]), and the overviews need
+    no fork of it, because the fragments leave the render's worker
+    beside the tiles."""
+    return _pyramid(
+        lambda zlo, emit: _render_tiles(images, zlo, maxzoom, tile_size,
+                                        dtype_tag, colormap_str, emit=emit),
+        minzoom, maxzoom, overview_below, tile_size, dtype_tag, colormap_str)

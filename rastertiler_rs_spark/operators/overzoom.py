@@ -14,8 +14,7 @@ over the child's local grid offset by d·ts).
 Scale shape: NO shuffle — one mapInPandas over the parent tiles,
 each task independent (a parent's children never depend on another
 parent), so the stage is embarrassingly parallel at any corpus size.
-Output rides the same (tx, ty, png) grid schema; the fused-pyramid
-wrapper re-tags zoom/x/y.
+Output rides the same (tx, ty, png) grid schema.
 """
 
 from __future__ import annotations
@@ -24,7 +23,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..kernel import encode_tile
 from ..png import decode_band
@@ -80,41 +79,3 @@ def overzoom_tiles(tiles: DataFrame, levels: int, tile_size: int,
 
     return tiles.select("tx", "ty", "png").mapInPandas(
         fn, "tx long, ty long, png binary")
-
-
-def overzoom_pyramid(fused: DataFrame, levels: int, tile_size: int,
-                     dtype_tag: str = "u8", nodata: int = 0,
-                     colormap_str: str | None = None,
-                     persisted: list | None = None) -> DataFrame:
-    """Fused-pyramid form: take the DEEPEST zoom present in `fused`
-    (zoom, x, y, png) and append the overzoomed levels maxz+1 …
-    maxz+levels in the same schema. Each overzoom level upsamples
-    directly from the rendered base (levels = k against the base
-    beats chaining 1-level hops: one decode per parent per level, no
-    re-encode cascade). The max-zoom aggregate and every level are
-    separate consumers, so `fused` is PERSISTED here (forks below a
-    python stage re-execute the producer — CLAUDE.md); pass
-    ``persisted`` to receive the handle and unpersist after your
-    action, matching the render_pyramid contract (without it the
-    cache lives until the session ends)."""
-    shared = fused.select("zoom", "x", "y", "png").persist()
-    if persisted is not None:
-        persisted.append(shared)
-    maxz = shared.agg(F.max("zoom")).collect()[0][0]
-    if maxz is None:
-        if persisted is None:
-            shared.unpersist()
-        return fused.select("zoom", "x", "y", "png").filter(F.lit(False))
-    base = (shared.filter(F.col("zoom") == int(maxz))
-            .select(F.col("x").alias("tx"), F.col("y").alias("ty"), "png"))
-    out = []
-    for k in range(1, levels + 1):
-        kids = overzoom_tiles(base, k, tile_size, dtype_tag, nodata,
-                              colormap_str)
-        out.append(kids.select(
-            F.lit(int(maxz) + k).cast("int").alias("zoom"),
-            F.col("tx").alias("x"), F.col("ty").alias("y"), "png"))
-    res = out[0]
-    for df in out[1:]:
-        res = res.unionByName(df)
-    return res

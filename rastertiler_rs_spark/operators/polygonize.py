@@ -202,7 +202,7 @@ def region_label(tiles: DataFrame, tile_size: int, nodata: int = 0,
 
     # one decode pass feeds BOTH branches; persist the (small)
     # fragment+strip rows — a lazy fork below a python stage would
-    # re-execute the decode per consumer (CLAUDE.md / render_pyramid).
+    # re-execute the decode per consumer (CLAUDE.md).
     unified = (tiles.select("tx", "ty", "png")
                .mapInPandas(per_tile, _UNIFIED_SCHEMA)
                .persist())

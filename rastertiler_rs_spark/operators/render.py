@@ -19,6 +19,11 @@ Spark-first re-expression of `rastertiler-rs render`
          ── [hot keys only: groupBy(zoom,x,y) argmax-merge + encode]
          ── xxhash64 content hash + TMS y-flip (S9)
 
+Both paths end in ONE python stage that emits the finished (zoom, x, y,
+png) rows through an ``emit`` hook (_emit_tiles); the overview pyramid
+(operators/overview.py) hooks it to append each base tile's overview
+fragments in that same worker.
+
 Design notes for 100 TB scale:
 - The tile manifest is generated per image by column expressions and
   explode — there is no manifest⋈images join at all; the spatial join
@@ -394,6 +399,18 @@ def _argmax_merge(parts, tile_size: int, np_dtype, nodata=NODATA):
     return canvas
 
 
+_TILE_SCHEMA = "zoom int, x long, y long, png binary"
+
+
+def _emit_tiles(df: DataFrame, fn) -> DataFrame:
+    """A render path's last python stage: ``fn`` over ``df``, (zoom, x,
+    y, png) rows out (mapInPandas reads a frame's first four columns, so
+    stage B's png/canvas/winner frames qualify). The ``emit`` hook of
+    _render_tiles and _mosaic_blocks; overview._with_fragments is the
+    pyramid's form, which wraps ``fn`` in the same worker."""
+    return df.mapInPandas(fn, _TILE_SCHEMA)
+
+
 def _route_mosaic_fn(tile_size: int, dtype_tag: str,
                      colormap_str: str | None, nodata=NODATA):
     """Stage B of _mosaic_blocks: rows are (zoom, x, y[, salt],
@@ -518,7 +535,7 @@ def _hot_keys(footprints: DataFrame, minzoom: int, maxzoom: int,
 
 def _mosaic_blocks(blocks: DataFrame, hot_rows, tile_size: int,
                    dtype_tag: str, colormap_str: str | None, n_parts: int,
-                   nodata=NODATA) -> DataFrame:
+                   nodata=NODATA, emit=_emit_tiles) -> DataFrame:
     """The blocks-path mosaic, shared by render and render_warp:
     (zoom, x, y, img_ord, left, top, bw, bh, block) rows → (zoom, x, y,
     png), pasted in ascending img_ord.
@@ -531,7 +548,8 @@ def _mosaic_blocks(blocks: DataFrame, hot_rows, tile_size: int,
     buckets instead of aggregating every image in ONE task (a serial
     tail that flattens N→4N scaling, and at 10^12 rows an OOM); cold
     tiles pay one extra shuffle hop of their PNG (KBs). With no hot
-    keys stage B alone is the whole mosaic. Salted and plain output is
+    keys stage B alone is the whole mosaic. The last stage (B, or C with
+    hot keys) runs through ``emit``. Salted and plain output is
     byte-identical (tests/test_overview_salt.py)."""
     spark = blocks.sparkSession
     if hot_rows:
@@ -551,28 +569,27 @@ def _mosaic_blocks(blocks: DataFrame, hot_rows, tile_size: int,
     else:
         blocks = blocks.withColumn("is_hot", F.lit(False))
         keys = ["zoom", "x", "y"]
-    stage_b = blocks.repartition(n_parts, *keys).groupBy(*keys, "is_hot").agg(
+    groups = blocks.repartition(n_parts, *keys).groupBy(*keys, "is_hot").agg(
         F.collect_list(
             F.struct("img_ord", "left", "top", "bw", "bh", "block")
-        ).alias("contribs")
-    ).mapInPandas(
-        _route_mosaic_fn(tile_size, dtype_tag, colormap_str, nodata),
-        "zoom int, x long, y long, png binary, canvas binary, winner binary",
-    )
+        ).alias("contribs"))
+    route = _route_mosaic_fn(tile_size, dtype_tag, colormap_str, nodata)
     if not hot_rows:
-        return stage_b.select("zoom", "x", "y", "png")
-    return stage_b.repartition(n_parts, "zoom", "x", "y").groupBy(
-        "zoom", "x", "y").agg(
-        F.collect_list(F.struct("png", "canvas", "winner")).alias("partials")
-    ).mapInPandas(
-        _merge_or_pass_fn(tile_size, dtype_tag, colormap_str, nodata),
-        "zoom int, x long, y long, png binary",
-    )
+        return emit(groups, route)
+    stage_b = groups.mapInPandas(
+        route,
+        "zoom int, x long, y long, png binary, canvas binary, winner binary")
+    return emit(
+        stage_b.repartition(n_parts, "zoom", "x", "y").groupBy(
+            "zoom", "x", "y").agg(
+            F.collect_list(F.struct("png", "canvas", "winner"))
+            .alias("partials")),
+        _merge_or_pass_fn(tile_size, dtype_tag, colormap_str, nodata))
 
 
 def _cell_tiles(images: DataFrame, src: DataFrame, pz: int, zlo: int,
                 zhi: int, tile_size: int, dtype_tag: str,
-                colormap_str: str | None) -> DataFrame:
+                colormap_str: str | None, emit) -> DataFrame:
     """CELL path, zooms [zlo, zhi] >= pz: explode each image to its
     covering zoom-pz cells, shuffle compressed source bytes by cell and
     render every cell group end to end (_cell_stream_fn)."""
@@ -625,19 +642,15 @@ def _cell_tiles(images: DataFrame, src: DataFrame, pz: int, zlo: int,
         .select("cx", "cy", "image_id", "bytes", "fmt",
                 "minx", "miny", "maxx", "maxy")
     )
-    return (
+    return emit(
         exploded.repartition(n_parts, "cx", "cy")
-        .sortWithinPartitions("cx", "cy")
-        .mapInPandas(
-            _cell_stream_fn(pz, zlo, zhi, tile_size, dtype_tag, colormap_str),
-            "zoom int, x long, y long, png binary",
-        )
-    )
+        .sortWithinPartitions("cx", "cy"),
+        _cell_stream_fn(pz, zlo, zhi, tile_size, dtype_tag, colormap_str))
 
 
 def _blocks_tiles(src: DataFrame, general_ids: bool, hot_rows, zlo: int,
                   zhi: int, tile_size: int, dtype_tag: str,
-                  colormap_str: str | None) -> DataFrame:
+                  colormap_str: str | None, emit) -> DataFrame:
     """BLOCKS path, zooms [zlo, zhi] < pz: decode each image once and
     window-read its per-tile blocks (_kernel_all_zooms_fn), then
     _mosaic_blocks. ``general_ids`` joins an order-preserving ord64
@@ -665,7 +678,7 @@ def _blocks_tiles(src: DataFrame, general_ids: bool, hot_rows, zlo: int,
         _kernel_all_zooms_fn(zlo, zhi, tile_size, use_input_ord=general_ids),
         _KERNEL_SCHEMA)
     return _mosaic_blocks(blocks, hot_rows, tile_size, dtype_tag,
-                          colormap_str, n_parts)
+                          colormap_str, n_parts, emit=emit)
 
 
 def render(
@@ -717,6 +730,19 @@ def render(
     raising pz (quadtree descent) — AQE skew hints apply to the
     exchange either way.
     """
+    return _finish(_render_tiles(images, minzoom, maxzoom, tile_size,
+                                 dtype_tag, colormap_str, partition_zoom,
+                                 salt_threshold))
+
+
+def _render_tiles(images: DataFrame, minzoom: int, maxzoom: int,
+                  tile_size: int, dtype_tag: str, colormap_str: str | None,
+                  partition_zoom: int | None | str = "auto",
+                  salt_threshold: int | None = _AUTO_SALT_THRESHOLD,
+                  emit=_emit_tiles) -> DataFrame:
+    """render's (zoom, x, y, png) rows before _finish, each path's last
+    python stage run through ``emit`` (the overview pyramid's private
+    entry: overview._pyramid)."""
     if colormap_str is not None and dtype_tag != "u8":
         raise ValueError("colormap can only be provided for uint8 data")
     if dtype_tag not in ("u8", "u32"):
@@ -738,9 +764,9 @@ def render(
     cell_tiles = None
     if pz is not None and pz <= maxzoom:
         cell_tiles = _cell_tiles(images, src, pz, max(minzoom, pz), maxzoom,
-                                 tile_size, dtype_tag, colormap_str)
+                                 tile_size, dtype_tag, colormap_str, emit)
         if minzoom >= pz:
-            return _finish(cell_tiles)
+            return cell_tiles
         maxzoom = pz - 1  # blocks path covers the remaining low zooms
 
     # ONE collect: the image-id scheme flag (a full image_id scan; it
@@ -773,10 +799,10 @@ def render(
     hot_rows = [r for r in rows if r["zoom"] >= 0]
 
     tiles = _blocks_tiles(src, general_ids, hot_rows, minzoom, maxzoom,
-                          tile_size, dtype_tag, colormap_str)
+                          tile_size, dtype_tag, colormap_str, emit)
     if cell_tiles is not None:
         tiles = tiles.unionByName(cell_tiles)
-    return _finish(tiles)
+    return tiles
 
 
 def _finish(tiles: DataFrame) -> DataFrame:

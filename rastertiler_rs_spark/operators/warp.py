@@ -44,7 +44,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from .. import tilemath as tm
 from ..png import decode_band
-from .render import _AUTO_SALT_THRESHOLD, _hot_keys, _mosaic_blocks
+from .overview import _pyramid
+from .render import _AUTO_SALT_THRESHOLD, _emit_tiles, _hot_keys, _mosaic_blocks
 
 _WARP_BLOCK_SCHEMA = "zoom int, x long, y long, img_ord long, canvas binary"
 
@@ -143,6 +144,17 @@ def render_warp(images: DataFrame, minzoom: int, maxzoom: int,
     Paste order is an order-preserving int (distinct image_ids sorted
     once), so it matches ascending-image_id pasting for ANY id scheme.
     """
+    return _warp_tiles(images, minzoom, maxzoom, tile_size, dtype_tag,
+                       colormap_str, nodata, n_parts, salt_threshold)
+
+
+def _warp_tiles(images: DataFrame, minzoom: int, maxzoom: int,
+                tile_size: int, dtype_tag: str, colormap_str: str | None,
+                nodata: int = 0, n_parts: int | None = None,
+                salt_threshold: int | None = _AUTO_SALT_THRESHOLD,
+                emit=_emit_tiles) -> DataFrame:
+    """render_warp with the mosaic's last python stage run through
+    ``emit`` (render._mosaic_blocks; the warp pyramid's private entry)."""
     from ..functions.columns import geo_to_mercator_cols
 
     n_parts = n_parts or max(
@@ -175,28 +187,20 @@ def render_warp(images: DataFrame, minzoom: int, maxzoom: int,
                            mx1.alias("maxx"), my1.alias("maxy"))
         hot_rows = _hot_keys(fp, minzoom, maxzoom, salt_threshold).collect()
     return _mosaic_blocks(blocks, hot_rows, tile_size, dtype_tag,
-                          colormap_str, n_parts, nodata)
+                          colormap_str, n_parts, nodata, emit)
 
 
 def render_warp_pyramid(images: DataFrame, minzoom: int, maxzoom: int,
                         tile_size: int = 256, dtype_tag: str = "u8",
                         colormap_str: str | None = None,
-                        overview_below: int | None = None,
-                        persisted: list | None = None) -> DataFrame:
+                        overview_below: int | None = None) -> DataFrame:
     """Full warped pyramid in the FUSED sink schema (zoom, x, y,
     tile_row, tile_hash, png): zooms in [overview_below, maxzoom] warp
-    directly from source; zooms below are its 2× nearest decimation
-    through the shared overview machinery (operators/overview — same
-    cascade, persist-fork and colormap contracts as render_pyramid).
-    ``overview_below=None`` → all-direct."""
-    from .overview import _with_overviews
-    from .render import _finish
-
-    if overview_below is None or overview_below <= minzoom:
-        return _finish(render_warp(images, minzoom, maxzoom, tile_size,
-                                   dtype_tag, colormap_str))
-    base = min(max(overview_below, minzoom), maxzoom)
-    full = _finish(render_warp(images, base, maxzoom, tile_size,
-                               dtype_tag, colormap_str))
-    return _with_overviews(full, base, minzoom, tile_size, dtype_tag,
-                           colormap_str, persisted)
+    directly from source; zooms below are its 2× nearest decimation,
+    emitted by the warp's own mosaic worker and pasted in one exchange
+    (operators/overview — same one-pass and colormap contracts as
+    render_pyramid). ``overview_below=None`` → all-direct."""
+    return _pyramid(
+        lambda zlo, emit: _warp_tiles(images, zlo, maxzoom, tile_size,
+                                      dtype_tag, colormap_str, emit=emit),
+        minzoom, maxzoom, overview_below, tile_size, dtype_tag, colormap_str)

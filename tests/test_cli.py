@@ -113,16 +113,10 @@ def test_cli_render_warp_geotiff(spark, tmp_path):
     tiles, blobs, meta = _mb(out)
 
     images = images_from_geotiff(spark, src)
-    persisted = []
-    try:
-        fused = render_warp_pyramid(images, 4, 6, tile_size=128,
-                                    dtype_tag="u8", overview_below=8,
-                                    persisted=persisted)
-        want = {(r["zoom"], r["x"], r["tile_row"]):
-                (r["tile_hash"], bytes(r["png"])) for r in fused.collect()}
-    finally:
-        for df in persisted:
-            df.unpersist()
+    fused = render_warp_pyramid(images, 4, 6, tile_size=128,
+                                dtype_tag="u8", overview_below=8)
+    want = {(r["zoom"], r["x"], r["tile_row"]):
+            (r["tile_hash"], bytes(r["png"])) for r in fused.collect()}
     assert tiles == {k: h for k, (h, _) in want.items()}
     for k, (h, png) in want.items():
         assert bytes(blobs[tiles[k]]) == png
@@ -132,6 +126,34 @@ def test_cli_render_warp_geotiff(spark, tmp_path):
     lo_lat, hi_lat = y0 + h_px * e, y0
     bl = [float(v) for v in meta["bounds"].split(",")]
     assert bl == [round(v, 5) for v in (lo_lon, lo_lat, hi_lon, hi_lat)]
+
+
+def test_cli_render_warp_geotiff_tiles_dir(spark, tmp_path, monkeypatch):
+    """`render GEO.tif - --tiles-dir T`: a geographic source writes the
+    same zoom-partitioned tile table as a native one — exactly the
+    in-process warp pyramid's rows — and OUT='-' writes nothing else."""
+    from rastertiler_rs_spark.fixtures import geotiff_geo_fixture
+    from rastertiler_rs_spark.operators.geotiff_source import \
+        images_from_geotiff
+    from rastertiler_rs_spark.operators.warp import render_warp_pyramid
+
+    monkeypatch.chdir(tmp_path)
+    src = geotiff_geo_fixture()
+    tdir = tmp_path / "tiles"
+    main(["render", src, "-", "--minzoom", "4", "--maxzoom", "6",
+          "--tilesize", "128", "--tiles-dir", str(tdir)])
+    assert os.listdir(tmp_path) == ["tiles"]
+
+    def rows(df):
+        return sorted((r["zoom"], r["x"], r["y"], r["tile_row"],
+                       r["tile_hash"], bytes(r["png"])) for r in df.collect())
+
+    got = rows(spark.read.parquet(str(tdir / "tiles")))
+    want = rows(render_warp_pyramid(images_from_geotiff(spark, src), 4, 6,
+                                    tile_size=128, dtype_tag="u8",
+                                    overview_below=8))
+    assert got and got == want
+    assert {r[0] for r in got} == {4, 5, 6}
 
 
 def test_cli_validation(tmp_path):

@@ -183,13 +183,7 @@ def test_render_pyramid_deep_overviews(spark):
     overview zoom byte-matches the level-by-level rule."""
     imgs = _spark_images(spark, 16)
     ts = 64
-    persisted = []
-    try:
-        pyr = _fused_map(render_pyramid(imgs, 0, 8, ts, "u8", overview_below=8,
-                                        persisted=persisted))
-    finally:
-        for df in persisted:
-            df.unpersist()
+    pyr = _fused_map(render_pyramid(imgs, 0, 8, ts, "u8", overview_below=8))
     want = _fused_map(render(imgs, 8, 8, ts, "u8"))
     want.update(_oracle_overviews(want, 8, 0, ts, "u8"))
     assert min(k[0] for k in pyr) < 8
@@ -250,3 +244,58 @@ def test_sink_pyramid_matches_in_memory(spark, tmp_path):
     plan = base_scan._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(zoom" in plan or "zoom#" in plan
     assert base_scan.count() > 0
+
+
+@pytest.mark.parametrize("call", [
+    "pyramid_cell_base", "pyramid_blocks_base", "warp_pyramid",
+    "pyramid_to_sink", "cascade_fragments"])
+def test_pyramid_calls_cache_nothing(spark, tmp_path, call):
+    """Every pyramid entry runs in one pass: after its result is
+    collected, the session holds no more persisted RDDs than before
+    (no fork cache for the caller to release)."""
+    from rastertiler_rs_spark.fixtures import images_geo_parquet
+    from rastertiler_rs_spark.operators.overview import render_pyramid_to_sink
+    from rastertiler_rs_spark.operators.warp import render_warp_pyramid
+
+    imgs = _spark_images(spark, 24)
+    ts = 64
+    calls = {
+        # base z8 = partition zoom: the cell stage emits the fragments
+        "pyramid_cell_base": lambda: render_pyramid(
+            imgs, 0, 8, ts, "u8", overview_below=8),
+        # base z6 < partition zoom 8: the blocks mosaic emits them
+        "pyramid_blocks_base": lambda: render_pyramid(
+            imgs, 2, 8, ts, "u8", overview_below=6),
+        "warp_pyramid": lambda: render_warp_pyramid(
+            spark.read.parquet(images_geo_parquet(12)), 2, 7, 128, "u8",
+            overview_below=6),
+        "pyramid_to_sink": lambda: render_pyramid_to_sink(
+            imgs, str(tmp_path / "sink"), 2, 8, ts, "u8", overview_below=7),
+        "cascade_fragments": lambda: cascade_fragments(
+            render(imgs, 6, 6, ts, "u8"), 0, ts, "u8", top_zoom=6),
+    }
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    rows = calls[call]().collect()
+    assert rows
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_salted_pyramid_entry_equals_unsalted(spark):
+    """The pyramid's private entry with every blocks-path key salted:
+    the fragments then leave stage C (the argmax merge) instead of
+    stage B, and the pyramid is byte-identical to the unsalted one."""
+    from rastertiler_rs_spark.operators.overview import _pyramid
+    from rastertiler_rs_spark.operators.render import _render_tiles
+
+    imgs = _spark_images(spark, 40)
+
+    def pyramid(thresh):
+        return _fused_map(_pyramid(
+            lambda zlo, emit: _render_tiles(imgs, zlo, 8, 64, "u8", None,
+                                            salt_threshold=thresh, emit=emit),
+            2, 8, 6, 64, "u8", None))
+
+    salted = pyramid(1)
+    assert sorted({k[0] for k in salted}) == [2, 3, 4, 5, 6, 7, 8]
+    assert salted == pyramid(None)

@@ -81,28 +81,6 @@ def test_overzoom_drops_all_nodata_children(spark, tmp_path):
     assert kids == {(0, 0)}
 
 
-def test_overzoom_pyramid_tags_zooms(spark):
-    """Fused wrapper: deepest level found, children tagged maxz+k and
-    equal to the grid form."""
-    from pyspark.sql import functions as F
-
-    from rastertiler_rs_spark.operators.overzoom import overzoom_pyramid
-
-    ts = 64
-    tiles = spark.read.parquet(tiled_canvas_parquet(256, 192, ts, seed=5))
-    fused = tiles.select(F.lit(3).cast("int").alias("zoom"),
-                         F.col("tx").alias("x"), F.col("ty").alias("y"),
-                         "png")
-    out = overzoom_pyramid(fused, 2, ts)
-    rows = out.collect()
-    assert {r["zoom"] for r in rows} == {4, 5}
-    want4 = {(r["tx"], r["ty"]): bytes(r["png"])
-             for r in overzoom_tiles(tiles, 1, ts).collect()}
-    got4 = {(r["x"], r["y"]): bytes(r["png"])
-            for r in rows if r["zoom"] == 4}
-    assert got4 == want4
-
-
 def test_overzoom_validates(spark):
     ts = 64
     tiles = spark.read.parquet(tiled_canvas_parquet(256, 192, ts, seed=5))

@@ -216,16 +216,10 @@ def test_render_warp_pyramid_cascade_identity(spark):
     from rastertiler_rs_spark.operators.warp import render_warp_pyramid
 
     images = spark.read.parquet(images_geo_parquet(N))
-    persisted = []
-    try:
-        fused = render_warp_pyramid(images, ZMIN, ZMAX, tile_size=TS,
-                                    dtype_tag="u8", overview_below=ZMAX,
-                                    persisted=persisted)
-        tiles = {(r["zoom"], r["x"], r["y"]): bytes(r["png"])
-                 for r in fused.collect()}
-    finally:
-        for df in persisted:
-            df.unpersist()
+    fused = render_warp_pyramid(images, ZMIN, ZMAX, tile_size=TS,
+                                dtype_tag="u8", overview_below=ZMAX)
+    tiles = {(r["zoom"], r["x"], r["y"]): bytes(r["png"])
+             for r in fused.collect()}
     zs = sorted({z for z, _, _ in tiles})
     assert zs and zs[0] == ZMIN and zs[-1] == ZMAX
     # verify every z(max-1) tile against its z(max) children

@@ -37,6 +37,7 @@ def plan_text(df) -> str:
 def main() -> None:
     import __spark_entry__ as e
     from rastertiler_rs_spark.fixtures import images_parquet
+    from rastertiler_rs_spark.operators.overview import render_pyramid
     from rastertiler_rs_spark.operators.render import render
     from rastertiler_rs_spark.session import get_spark
 
@@ -53,6 +54,18 @@ def main() -> None:
     sections.append((
         "render (blocks path z0-5): kernel map, one exchange on (zoom,x,y)",
         plan_text(render(img, 0, 5, 128, "u8", partition_zoom=None))))
+    # one-pass pyramid: the cell stage's own worker emits the z8 tiles'
+    # fragments, and tiles + fragments share one (zoom, x, y) exchange;
+    # the operator tree with exchange keys (lines cut at 160 chars)
+    pyr = render_pyramid(img, 0, 10, 128, "u8", overview_below=8)
+    tree = pyr._jdf.queryExecution().executedPlan().toString()
+    n_python = tree.count("MapInPandas")
+    n_zxy = len(re.findall(r"Exchange hashpartitioning\(zoom#\d+, x#\d+L?, y#", tree))
+    sections.append((
+        f"render_pyramid (z0-10, overviews below z8): {n_python} Python "
+        f"stages, {n_zxy} exchange on (zoom, x, y) shared by tiles and "
+        f"fragments, {tree.count('InMemoryRelation')} InMemoryRelation",
+        "\n".join(line[:160] for line in tree.splitlines())))
 
     for name in ["bbox_join", "knn", "pip", "merge_anti", "dedup_exact",
                  "point_tiles", "embedding_ivf", "embedding_lsh",
