@@ -60,7 +60,7 @@ def cmd_render(args) -> None:
     from .operators._lineage import persisted
     from .operators.overview import render_pyramid
     from .operators.render import metadata_table
-    from .session import get_spark
+    from .session import get_spark, local_frame
 
     if args.minzoom > args.maxzoom:
         sys.exit("ERROR: minzoom must be less than or equal to maxzoom")
@@ -114,7 +114,7 @@ def cmd_render(args) -> None:
         extra = [("description", args.description or ""),
                  ("attribution", args.attribution or "")]
         extra = [(k, v) for k, v in extra if v]
-        meta = meta.unionByName(spark.createDataFrame(extra, meta.schema))
+        meta = meta.unionByName(local_frame(spark, extra, meta.schema))
     if n_sinks > 1:
         # every sink consumes fused: persist so the render runs ONCE
         # (lazy-DataFrame forks re-execute the producer otherwise)
@@ -232,7 +232,7 @@ def _read_mbtiles(path: str):
 def cmd_merge(args) -> None:
     from .operators.merge import merge_metadata, merge_tables
     from .oracle import write_mbtiles
-    from .session import get_spark
+    from .session import get_spark, local_frame
 
     for p in (args.left, args.right):
         if not os.path.exists(p):
@@ -260,14 +260,14 @@ def cmd_merge(args) -> None:
     img_schema = "tile_id long, tile_data binary"
     lt, lb, lm = _read_mbtiles(args.left)
     rt, rb, rm = _read_mbtiles(args.right)
-    lmap = spark.createDataFrame(lt, map_schema)
-    rmap = spark.createDataFrame(rt, map_schema)
-    limg = spark.createDataFrame(list(lb.items()), img_schema)
-    rimg = spark.createDataFrame(list(rb.items()), img_schema)
+    lmap = local_frame(spark, lt, map_schema)
+    rmap = local_frame(spark, rt, map_schema)
+    limg = local_frame(spark, list(lb.items()), img_schema)
+    rimg = local_frame(spark, list(rb.items()), img_schema)
     meta_schema = "name string, value string"
     merged_map, merged_img = merge_tables(lmap, limg, rmap, rimg)
-    merged_meta = merge_metadata(spark.createDataFrame(lm, meta_schema),
-                                 spark.createDataFrame(rm, meta_schema))
+    merged_meta = merge_metadata(local_frame(spark, lm, meta_schema),
+                                 local_frame(spark, rm, meta_schema))
 
     # single-file SQLite output is inherently driver-side (reference
     # semantics) — bound the collect like materialize_mbtiles does
@@ -290,7 +290,7 @@ def cmd_tileop(args) -> None:
     and write the result as parquet — raster ops (hillshade /
     equalize / overzoom) emit tiles, analysis ops emit per-tile
     stats."""
-    from .session import get_spark
+    from .session import get_spark, local_frame
 
     if not os.path.exists(args.src):
         sys.exit(f"ERROR: input does not exist: {args.src}")
@@ -313,12 +313,12 @@ def cmd_tileop(args) -> None:
         level = [(x, r, tid) for z, x, r, tid in tiles_rows
                  if z == int(zoom)]
         need = {tid for _, _, tid in level}
-        mdf = spark.createDataFrame(
-            [(x, (1 << int(zoom)) - 1 - r, tid) for x, r, tid in level],
+        mdf = local_frame(
+            spark, [(x, (1 << int(zoom)) - 1 - r, tid) for x, r, tid in level],
             "tx long, ty long, tile_hash long")
-        bdf = spark.createDataFrame(
-            [(tid, bytearray(b)) for tid, b in blobs.items()
-             if tid in need],
+        bdf = local_frame(
+            spark, [(tid, bytearray(b)) for tid, b in blobs.items()
+                    if tid in need],
             "tile_hash long, png binary")
         tiles = mdf.join(bdf, "tile_hash").select("tx", "ty", "png")
     elif os.path.isdir(args.src) and os.path.exists(
@@ -395,7 +395,7 @@ def cmd_convert(args) -> None:
 
     from pyspark.sql import functions as F
 
-    from .session import get_spark
+    from .session import get_spark, local_frame
 
     if not os.path.exists(args.src):
         sys.exit(f"ERROR: input does not exist: {args.src}")
@@ -410,11 +410,11 @@ def cmd_convert(args) -> None:
         # pyramids would otherwise blow up the driver list)
         mrows = [(z, x, (1 << z) - 1 - r, r, tid)
                  for z, x, r, tid in tiles]
-        mdf = spark.createDataFrame(
-            mrows, "zoom int, x long, y long, tile_row long, "
-                   "tile_hash long")
-        bdf = spark.createDataFrame(
-            [(tid, bytearray(b)) for tid, b in blobs.items()],
+        mdf = local_frame(
+            spark, mrows, "zoom int, x long, y long, tile_row long, "
+                          "tile_hash long")
+        bdf = local_frame(
+            spark, [(tid, bytearray(b)) for tid, b in blobs.items()],
             "tile_hash long, png binary")
         fused = mdf.join(bdf, "tile_hash").select(
             "zoom", "x", "y", "tile_row", "tile_hash", "png")
@@ -478,7 +478,7 @@ def cmd_convert(args) -> None:
                      if r[0] not in ("minzoom", "maxzoom")]
         meta_rows += [("minzoom", str(int(zr[0]))),
                       ("maxzoom", str(int(zr[1])))]
-    meta = spark.createDataFrame(meta_rows, "name string, value string")
+    meta = local_frame(spark, meta_rows, "name string, value string")
 
     if args.out.endswith(".mbtiles"):
         from .operators.mbtiles_sink import materialize_mbtiles

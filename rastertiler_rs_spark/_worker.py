@@ -20,7 +20,11 @@ It installs only in PySpark daemon and worker processes, recognised by
 for them and never for the driver. The package's ``__init__`` calls it,
 so the first task that unpickles package code installs it in its
 worker, and a daemon that imports the package at start-up hands it to
-every worker it forks.
+every worker it forks. The stamp reaches only workers that import the
+package: a worker that runs no package code (the PythonRDD map behind
+``createDataFrame(list)``, whose pool is separate from the Arrow UDF
+workers') keeps re-parsing, which is one reason the package builds its
+driver-side frames with ``session.local_frame``.
 """
 
 import os

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..geotiff import _decode_block, _encode_block, cog_directory, geotiff_ifds
 from ..png import decode_band
 from .. import tilemath as tm
+from ..session import local_frame
 
 _LVL_SHIFT = 40  # key = (level << _LVL_SHIFT) | idx
 
@@ -90,8 +91,8 @@ def write_cog_distributed(tiles: DataFrame, path: str, tile_size: int,
         raise ValueError("grid too large for the (level, idx) key packing")
     lvl_rows = [(lv["zoom"], zb - lv["zoom"], lv["ox"], lv["oy"], lv["nx"])
                 for lv in lvls]
-    lvl_df = spark.createDataFrame(
-        lvl_rows, "zoom int, lvl int, ox long, oy long, nx long")
+    lvl_df = local_frame(
+        spark, lvl_rows, "zoom int, lvl int, ox long, oy long, nx long")
     keyed = (tiles.select("zoom", "x", "y", "png")
              .join(F.broadcast(lvl_df), "zoom")
              .select((F.shiftleft(F.col("lvl").cast("long"), _LVL_SHIFT)
@@ -249,8 +250,8 @@ def cog_blocks(spark: SparkSession, path: str,
             rows.append((lvl, i % across, i // across, b["off"], b["cnt"],
                          b["pad_h"], b["pad_w"], m["compression"],
                          m["predictor"], m["nodata"]))
-    plan = spark.createDataFrame(
-        rows, "lvl int, bx long, by long, off long, cnt long, "
+    plan = local_frame(
+        spark, rows, "lvl int, bx long, by long, off long, cnt long, "
               "pad_h int, pad_w int, compression string, predictor int, "
               "nodata int")
 

@@ -16,6 +16,8 @@ import math
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
@@ -106,8 +108,8 @@ def dot_topk_int_blocked(vectors: DataFrame, queries: DataFrame, k: int,
     if not qrows:
         # an empty qmat would be 1-D and crash the executor matmul; the
         # declarative twin returns empty — match it
-        return (vectors.sparkSession.createDataFrame(
-            [], "qid long, vec_id long, dot long, rank int"))
+        return local_frame(spark, [],
+                           "qid long, vec_id long, dot long, rank int")
     qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
     qmat = np.floor(
         np.array([r["qemb"] for r in qrows], dtype=np.float64) * scale
@@ -183,8 +185,8 @@ def kmeans_centroids(vectors: DataFrame, n_lists: int, iters: int = 2) -> DataFr
         raise ValueError(
             f"k-means needs >= n_lists vectors: got {len(init_rows)} "
             f"for n_lists={n_lists}")
-    cents = spark.createDataFrame(
-        [(i, list(r["cemb"])) for i, r in enumerate(init_rows)],
+    cents = local_frame(
+        spark, [(i, list(r["cemb"])) for i, r in enumerate(init_rows)],
         "cent_id int, cemb array<double>")
     ve = F.col("embedding").cast("array<double>")
     ce = F.col("cemb")
@@ -208,7 +210,8 @@ def kmeans_centroids(vectors: DataFrame, n_lists: int, iters: int = 2) -> DataFr
         # empty clusters keep their previous centroid
         new_rows = {r["cent_id"]: list(r["cemb"]) for r in means.collect()}
         old_rows = {r["cent_id"]: list(r["cemb"]) for r in cents.collect()}
-        cents = spark.createDataFrame(
+        cents = local_frame(
+            spark,
             [(cid, new_rows.get(cid, old_rows[cid])) for cid in range(n_lists)],
             "cent_id int, cemb array<double>")
     assert dim == len(cents.first()["cemb"])

@@ -40,6 +40,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 
 from ..geotiff import geotiff_ifd
+from ..session import local_frame
 
 _OUT_SCHEMA = ("image_id string, bytes binary, w int, h int, fmt string, "
                "minx double, miny double, maxx double, maxy double")
@@ -133,10 +134,7 @@ def images_from_geotiff(spark: SparkSession, path: str,
                 b["nrows"], b["ncols"], b["pad_h"], b["pad_w"],
                 b["col0"] + sub0, min(step, b["ncols"] - sub0)))
 
-    mdf = spark.createDataFrame(manifest, _MANIFEST_SCHEMA)
-    npart = max(1, min(len(manifest),
-                       spark.sparkContext.defaultParallelism))
-    mdf = mdf.repartition(npart)
+    mdf = local_frame(spark, manifest, _MANIFEST_SCHEMA)
 
     fp_cols = (("minlon", "minlat", "maxlon", "maxlat") if geographic
                else ("minx", "miny", "maxx", "maxy"))

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..oracle import MBTILES_DDL, write_mbtiles
+from ..session import local_frame
 
 
 def shard_for_tile(z: int, x: int, y: int, prefix_zoom: int = 2) -> int:
@@ -78,10 +79,11 @@ def write_mbtiles_shards(fused: DataFrame, metadata: DataFrame, out_dir: str,
     of one z=p subtree; for pathological single-subtree inputs use
     hash_shards (uniform by construction).
 
+    The sharding arguments are checked before any work: a bad one
+    raises ValueError with no job run and ``out_dir`` untouched.
+
     Returns the manifest dict (also written to ``out_dir``/manifest.json).
     """
-    meta_rows = [(r["name"], r["value"]) for r in metadata.collect()]
-    os.makedirs(out_dir, exist_ok=True)
     if hash_shards:
         if hash_shards < 1:
             raise ValueError(f"hash_shards must be >= 1, got {hash_shards}")
@@ -96,6 +98,8 @@ def write_mbtiles_shards(fused: DataFrame, metadata: DataFrame, out_dir: str,
         n_shards = 1 + 4 ** prefix_zoom
         shard_expr = _quadkey_shard_expr(prefix_zoom)
         sharding = f"quadkey:{prefix_zoom}"
+    meta_rows = [(r["name"], r["value"]) for r in metadata.collect()]
+    os.makedirs(out_dir, exist_ok=True)
     # a reused out_dir must not union with a previous run: clear old
     # shards, orphan temps, and the manifest before the job starts
     _sweep_shard_dir(out_dir)
@@ -220,9 +224,11 @@ def merge_mbtiles_shards(spark, left_dir: str, right_dir: str,
 
     Shard routing is a pure function of (z, x, y), so the same tile
     lands in the same shard id in both sets and the merge is
-    embarrassingly parallel: NO shuffle, no tile bytes through the
-    driver — each task reads exactly two files and commits one output
-    shard atomically (temp + os.replace). Left wins on map-key
+    embarrassingly parallel: ONE map-only job, no shuffle, no tile
+    bytes through the driver. The shard ids are a local frame split
+    over min(shards, defaultParallelism) tasks; each task reads
+    exactly two files per shard and commits each output shard
+    atomically (temp + os.replace). Left wins on map-key
     conflicts (the shards' unique map index + OR IGNORE, exactly the
     reference's rule); metadata keeps left values with minzoom/maxzoom
     merged min/max, written into every output shard so each stays a
@@ -258,9 +264,7 @@ def merge_mbtiles_shards(spark, left_dir: str, right_dir: str,
     _sweep_shard_dir(out_dir)
     ids = sorted({int(s) for s in lman["shards"]}
                  | {int(s) for s in rman["shards"]})
-    n_parts = min(len(ids), spark.sparkContext.defaultParallelism * 2) or 1
-    df = spark.createDataFrame([(s,) for s in ids],
-                               "shard int").repartition(n_parts, "shard")
+    df = local_frame(spark, [(s,) for s in ids], "shard int")
 
     def merge_partition(batches):
         import sqlite3
@@ -392,7 +396,8 @@ def materialize_mbtiles(fused: DataFrame, metadata: DataFrame, path: str,
 def tiles_from_mbtiles_shards(spark, in_dir: str) -> "DataFrame":
     """Distributed ingest of a SHARDED .mbtiles set: the driver reads
     only manifest.json (shard names + counts), plans one row per
-    shard, and executors open their shard's SQLite and emit its
+    shard as a local frame (min(shards, defaultParallelism) tasks, no
+    exchange), and executors open their shard's SQLite and emit its
     joined map⋈images rows — no tile byte ever crosses the driver.
     Returns the fused schema (zoom, x, y, tile_row, tile_hash, png);
     y is the XYZ flip of the stored TMS tile_row. The inverse of
@@ -403,15 +408,9 @@ def tiles_from_mbtiles_shards(spark, in_dir: str) -> "DataFrame":
         man = json.load(f)
     # manifest "shards" is a dict keyed by shard id; files follow the
     # writer's shard-%05d naming
-    shards = [f"shard-{int(k):05d}.mbtiles" for k in man["shards"]]
-    if not shards:
-        return spark.createDataFrame(
-            [], "zoom int, x long, y long, tile_row long, "
-                "tile_hash long, png binary")
-    plan = spark.createDataFrame([(os.path.join(in_dir, s),)
-                                  for s in shards], "path string")
-    plan = plan.repartition(min(len(shards),
-                                spark.sparkContext.defaultParallelism))
+    paths = [(os.path.join(in_dir, f"shard-{int(k):05d}.mbtiles"),)
+             for k in man["shards"]]
+    plan = local_frame(spark, paths, "path string")
 
     def fetch(batches: Iterator) -> Iterator:
         import sqlite3

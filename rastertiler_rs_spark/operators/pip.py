@@ -25,6 +25,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_frame
 from .spatial_join import with_cover_cells
 
 
@@ -107,8 +108,8 @@ def _pip_join_prefiltered(points: DataFrame, polygons: list[tuple],
         for pid_, xs, ys in prepared
     ]
     poly_cells = with_cover_cells(
-        spark.createDataFrame(
-            poly_rows, "poly_id long, minx double, miny double, maxx double, maxy double"),
+        local_frame(
+            spark, poly_rows, "poly_id long, minx double, miny double, maxx double, maxy double"),
         cell_size,
     ).select("poly_id", "minx", "miny", "maxx", "maxy", "cell_x", "cell_y")
 

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from ..pmtiles.codec import (HEADER_SIZE, TILETYPE_PNG, Entry,
                              build_directories, build_pmtiles, pack_header,
                              tileid_col, _gzip)
+from ..session import local_frame
 
 
 def _xyz_y(df: DataFrame):
@@ -264,7 +265,8 @@ def tiles_from_pmtiles(spark: SparkSession, path: str,
             else:
                 entries.append(e)
     data_offset = h["data_offset"]
-    plan = spark.createDataFrame(
+    plan = local_frame(
+        spark,
         [(e.tile_id, data_offset + e.offset, e.length, e.run_length)
          for e in entries],
         "tile_id long, offset long, length long, run_length long")

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ._lineage import persisted, round_parts
 
 
@@ -57,7 +58,7 @@ def exact_quantiles(df: DataFrame, col: str,
         for pid, tot in ptot:
             offs.append((pid, acc))
             acc += tot
-        off_df = spark.createDataFrame(offs, "pid int, off long")
+        off_df = local_frame(spark, offs, "pid int, off long")
         cum = (counts.join(F.broadcast(off_df), "pid")
                .withColumn("cum", F.sum("cnt").over(
                    Window.partitionBy("pid").orderBy("v")
@@ -65,7 +66,7 @@ def exact_quantiles(df: DataFrame, col: str,
                    + F.col("off")))
         ks = [(int(p), (int(p) * n_total + 9999) // 10000)
               for p in ps_basis_points]
-        k_df = spark.createDataFrame(ks, "p_bp long, k long")
+        k_df = local_frame(spark, ks, "p_bp long, k long")
         # the smallest value reaching rank k is the UNIQUE row with
         # cum ≥ k and cum − cnt < k, so the join emits exactly one row
         # per quantile (the min is belt-and-braces). MATERIALIZE while
@@ -82,5 +83,5 @@ def exact_quantiles(df: DataFrame, col: str,
                 .select("p_bp", "value",
                         F.lit(n_total).cast("long").alias("n_total"),
                         "k")).collect()
-        return spark.createDataFrame(
-            rows, "p_bp long, value long, n_total long, k long")
+        return local_frame(
+            spark, rows, "p_bp long, value long, n_total long, k long")

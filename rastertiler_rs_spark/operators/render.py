@@ -64,6 +64,7 @@ from .. import tilemath as tm
 from ..fixtures import NODATA, image_index
 from ..kernel import encode_tile, mosaic, read_tile_block
 from ..png import Colormap, decode_band
+from ..session import local_frame
 from ._lineage import plan_size_bytes
 
 
@@ -553,8 +554,8 @@ def _mosaic_blocks(blocks: DataFrame, hot_rows, tile_size: int,
     byte-identical (tests/test_overview_salt.py)."""
     spark = blocks.sparkSession
     if hot_rows:
-        hot_keys = spark.createDataFrame(
-            [(int(r["zoom"]), int(r["x"]), int(r["y"]), True)
+        hot_keys = local_frame(
+            spark, [(int(r["zoom"]), int(r["x"]), int(r["y"]), True)
              for r in hot_rows],
             "zoom int, x long, y long, is_hot boolean")
         buckets = spark.sparkContext.defaultParallelism
@@ -848,4 +849,4 @@ def metadata_table(spark: SparkSession, images: DataFrame, minzoom: int, maxzoom
         ("format", "png"),
         ("version", "1.0.0"),
     ]
-    return spark.createDataFrame(rows, "name string, value string")
+    return local_frame(spark, rows, "name string, value string")

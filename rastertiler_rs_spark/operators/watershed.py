@@ -28,6 +28,7 @@ import math
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import local_frame
 from ._lineage import (NotConverged, cut, fixpoint, persisted, release,
                        round_parts, unchanged)
 from .halo import _D8_OFFSETS, _halo_apply, d8_direction
@@ -38,7 +39,7 @@ def _successors(tiles: DataFrame, ts: int,
     """(pixel_successors, canvas width W); W = ts without tiles."""
     mx = tiles.agg(F.max("tx")).collect()[0][0]
     if mx is None:
-        return tiles.sparkSession.createDataFrame([], "v long, p long"), ts
+        return local_frame(tiles.sparkSession, [], "v long, p long"), ts
     width = (int(mx) + 1) * ts
 
     def per_tile(tx: int, ty: int, pad: np.ndarray) -> dict | None:

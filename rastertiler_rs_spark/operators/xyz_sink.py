@@ -23,6 +23,8 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_frame
+
 
 def write_xyz_tree(fused: DataFrame, metadata: DataFrame,
                    out_dir: str) -> dict:
@@ -123,12 +125,11 @@ def read_xyz_tree(spark, in_dir: str) -> DataFrame:
                     rows.append((int(z), int(x), int(y[:-4]),
                                  os.path.join(xdir, y)))
     if not rows:
-        return spark.createDataFrame(
-            [], "zoom int, x long, y long, png binary")
+        return local_frame(spark, [], "zoom int, x long, y long, png binary")
     npart = max(1, min(len(rows) // 64 + 1,
                        spark.sparkContext.defaultParallelism))
-    paths = spark.createDataFrame(
-        rows, "zoom int, x long, y long, path string").repartition(npart)
+    paths = local_frame(
+        spark, rows, "zoom int, x long, y long, path string").repartition(npart)
 
     def fetch(batches: Iterator) -> Iterator:
         import pandas as pd

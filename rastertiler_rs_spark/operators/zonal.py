@@ -36,6 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..png import decode_band
+from ..session import local_frame
 from .render import with_footprints
 from .spatial_join import with_cover_cells
 
@@ -201,8 +202,8 @@ def zonal_stats_poly(polygons: list[tuple], images: DataFrame,
 
     prepared = _prepare(polygons)
     spark = images.sparkSession
-    boxes = spark.createDataFrame(
-        [(int(pid), float(xs.min()), float(ys.min()),
+    boxes = local_frame(
+        spark, [(int(pid), float(xs.min()), float(ys.min()),
           float(xs.max()), float(ys.max())) for pid, xs, ys in prepared],
         "zone_id long, minx double, miny double, maxx double, maxy double")
     rings_bc = spark.sparkContext.broadcast(

@@ -7,7 +7,7 @@ import os
 import re
 import warnings
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def env_int(name: str, default: int, lo: int = 1, hi: int | None = None) -> int:
@@ -42,6 +42,32 @@ def _env_size(name: str, default: str) -> str:
         return raw.strip()
     warnings.warn(f"{name}={raw!r} is not a byte size (e.g. '8m'); using {default}")
     return default
+
+
+def local_frame(spark: SparkSession, rows, ddl) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples in ``ddl`` column
+    order; ``ddl`` is a DDL string or a StructType) — the one way the
+    package builds a frame from a Python list.
+
+    ``createDataFrame(list)`` is ``parallelize`` plus a Python map, so
+    every collect, broadcast or scan of it runs a PythonRDD job, in a
+    second worker pool that the Arrow UDF stages' warm workers do not
+    serve. Built from a pyarrow Table typed by the DDL instead, the
+    frame is a JVM LocalRelation: collecting or broadcasting it starts
+    no job and no Python worker, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says. Scanned by a
+    stage, it splits into min(rows, defaultParallelism) partitions."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    schema = ddl if isinstance(ddl, StructType) else _parse_datatype_string(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.table([pa.array(c, type=f.type)
+                      for c, f in zip(cols, arrow_schema)],
+                     schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
 
 
 def get_spark(app: str = "rastertiler_rs_spark", cpus: int | None = None,

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.heatmap import _binned
+from ..session import local_frame
 
 _POINT_SCHEMA = "px double, py double, w long"
 
@@ -59,10 +60,10 @@ def read_heatmap_store(spark: SparkSession, state_dir: str) -> DataFrame:
     cur = _read_current(state_dir)
     schema = "bx long, gx long, gy long, cnt long, wsum long"
     if cur is None:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     path = os.path.join(state_dir, cur["version"])
     if not any(n.startswith("bx=") for n in os.listdir(path)):
-        return spark.createDataFrame([], schema)   # committed-empty store
+        return local_frame(spark, [], schema)   # committed-empty store
     return (spark.read.schema(schema).option("basePath", path)
             .parquet(path + "/bx=*").select(
                 "bx", "gx", "gy", "cnt", "wsum"))

@@ -14,3 +14,22 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` → the ids of the Spark jobs ``fn()`` runs."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -3,8 +3,6 @@ and every iterative operator leaves at most its own result's cut
 stored, whatever its round count — or nothing, when it does not
 converge."""
 
-import uuid
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -23,18 +21,6 @@ def _stored(spark) -> set:
     tests' leftovers may be freed by GC at any time, so callers only
     look at ids that appear."""
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-
-
-def _jobs(spark, fn) -> int:
-    """Number of Spark jobs ``fn()`` runs."""
-    sc = spark.sparkContext
-    group = f"lineage-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _path(spark, n):
@@ -118,7 +104,7 @@ def test_not_converging_releases_everything(spark, name, call):
 
 @pytest.mark.parametrize("iterate_rounds", [20, 0], ids=["levels",
                                                        "doubling"])
-def test_flow_accumulation_without_edges(spark, iterate_rounds):
+def test_flow_accumulation_without_edges(spark, count_jobs, iterate_rounds):
     """A flat DEM: every pixel is its own pit with acc 1, and the
     result is stored, so reading it runs one job instead of the halo
     pass again."""
@@ -127,16 +113,16 @@ def test_flow_accumulation_without_edges(spark, iterate_rounds):
                                   "tx long, ty long, png binary")
     acc = flow_accumulation(tiles, 8, iterate_rounds=iterate_rounds)
     rows = []
-    assert _jobs(spark, lambda: rows.extend(acc.collect())) == 1
+    assert len(count_jobs(lambda: rows.extend(acc.collect()))) == 1
     assert sorted(rows) == [(v, 1) for v in range(64)]
 
 
-def test_watershed_stats_collects_width_once(spark):
+def test_watershed_stats_collects_width_once(spark, count_jobs):
     """watershed_stats reads the canvas width once: the call runs the
     same jobs as watershed_labels (the width collect plus the rounds)."""
     tiles = _ramp(spark, 32)
-    assert (_jobs(spark, lambda: watershed_stats(tiles, 8))
-            == _jobs(spark, lambda: watershed_labels(tiles, 8)))
+    assert (len(count_jobs(lambda: watershed_stats(tiles, 8)))
+            == len(count_jobs(lambda: watershed_labels(tiles, 8))))
 
 
 def test_report_knn_dbscan_leftovers(spark, capsys):

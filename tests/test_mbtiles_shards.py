@@ -7,11 +7,12 @@ import os
 import sqlite3
 
 import pytest
+from pyspark.sql import functions as F
 
 from rastertiler_rs_spark.fixtures import images_parquet
 from rastertiler_rs_spark.operators.mbtiles_sink import (
-    materialize_mbtiles, read_mbtiles_shards, shard_for_tile,
-    write_mbtiles_shards)
+    materialize_mbtiles, merge_mbtiles_shards, read_mbtiles_shards,
+    shard_for_tile, tiles_from_mbtiles_shards, write_mbtiles_shards)
 from rastertiler_rs_spark.operators.render import metadata_table, render
 
 
@@ -147,6 +148,67 @@ def test_bad_prefix_zoom_rejected(spark, fused, tmp_path):
         write_mbtiles_shards(fused, meta, str(tmp_path / "x"), prefix_zoom=0)
     with pytest.raises(ValueError, match="prefix_zoom"):
         shard_for_tile(5, 1, 1, prefix_zoom=0)
+
+
+@pytest.mark.parametrize("kw", [{"prefix_zoom": 0}, {"prefix_zoom": 8},
+                                {"hash_shards": -1}])
+def test_bad_sharding_rejected_before_any_work(spark, fused, count_jobs,
+                                               tmp_path, kw):
+    """The arguments are checked before the metadata is collected and
+    before ``out_dir`` is created: a bad call runs no job and leaves no
+    directory behind."""
+    meta = spark.range(1).select(F.lit("name").alias("name"),
+                                 F.lit("t").alias("value"))
+    out = tmp_path / "never"
+
+    def call():
+        with pytest.raises(ValueError, match="prefix_zoom|hash_shards"):
+            write_mbtiles_shards(fused, meta, str(out), **kw)
+
+    assert count_jobs(call) == []
+    assert not out.exists()
+
+
+def test_metadata_collect_runs_no_job(spark, count_jobs):
+    images = spark.read.parquet(images_parquet(48, "u8"))
+    meta = metadata_table(spark, images, 0, 8, "t")
+    assert count_jobs(meta.collect) == []
+
+
+@pytest.fixture(scope="module")
+def shard_pair(spark, fused, tmp_path_factory):
+    """Two quadkey shard sets of ``fused``: all of it, and z0-5."""
+    meta = metadata_table(
+        spark, spark.read.parquet(images_parquet(48, "u8")), 0, 8, "t")
+    d = tmp_path_factory.mktemp("pair")
+    left, right = str(d / "L"), str(d / "R")
+    write_mbtiles_shards(fused, meta, left, prefix_zoom=2)
+    write_mbtiles_shards(fused.filter("zoom <= 5"), meta, right,
+                         prefix_zoom=2)
+    return left, right
+
+
+def test_shard_merge_runs_one_job(spark, fused, shard_pair, count_jobs,
+                                  tmp_path):
+    """The per-shard merge is one map-only job over the shard list: no
+    exchange in front of its Python stage."""
+    manifest = {}
+    jobs = count_jobs(lambda: manifest.update(
+        merge_mbtiles_shards(spark, *shard_pair, str(tmp_path / "M"))))
+    assert len(jobs) == 1
+    assert manifest["total_tiles"] == fused.count()
+
+
+def test_shard_read_runs_no_shuffle(spark, fused, shard_pair, count_jobs):
+    """Reading a shard set back is one single-stage job."""
+    rows = []
+    jobs = count_jobs(lambda: rows.extend(
+        tiles_from_mbtiles_shards(spark, shard_pair[0]).collect()))
+    tracker = spark.sparkContext.statusTracker()
+    assert [len(tracker.getJobInfo(j).stageIds) for j in jobs] == [1]
+    assert sorted((r["zoom"], r["x"], r["y"], r["tile_hash"])
+                  for r in rows) == sorted(
+        (r["zoom"], r["x"], r["y"], r["tile_hash"]) for r in fused.collect())
 
 
 
