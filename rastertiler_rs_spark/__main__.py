@@ -47,6 +47,7 @@ import argparse
 import os
 import sqlite3
 import sys
+from contextlib import nullcontext
 
 
 def _zoom(v: str) -> int:
@@ -115,12 +116,9 @@ def cmd_render(args) -> None:
                  ("attribution", args.attribution or "")]
         extra = [(k, v) for k, v in extra if v]
         meta = meta.unionByName(local_frame(spark, extra, meta.schema))
-    if n_sinks > 1:
-        # every sink consumes fused: persist so the render runs ONCE
-        # (lazy-DataFrame forks re-execute the producer otherwise)
-        with persisted(fused) as fused:
-            _write_sinks(args, fused, meta)
-    else:
+    # several sinks all consume fused: persist so the render runs ONCE
+    # (lazy-DataFrame forks re-execute the producer otherwise)
+    with (persisted if n_sinks > 1 else nullcontext)(fused) as fused:
         _write_sinks(args, fused, meta)
 
 
@@ -395,6 +393,7 @@ def cmd_convert(args) -> None:
 
     from pyspark.sql import functions as F
 
+    from .operators._lineage import persisted
     from .session import get_spark, local_frame
 
     if not os.path.exists(args.src):
@@ -402,7 +401,8 @@ def cmd_convert(args) -> None:
     spark = get_spark("rastertiler-convert", cpus=args.workers)
     spark.sparkContext.setLogLevel("ERROR")
 
-    meta_rows = None
+    # a source a python stage reads is stored for the zoom range + sink
+    meta_rows, stored = None, nullcontext
     if args.src.endswith(".mbtiles"):
         tiles, blobs, meta_rows = _read_mbtiles(args.src)
         # ship each DISTINCT blob once; the map->blob expansion happens
@@ -422,17 +422,16 @@ def cmd_convert(args) -> None:
         from .operators.pmtiles_sink import tiles_from_pmtiles
 
         fused = (tiles_from_pmtiles(spark, args.src)
-                 .withColumn("tile_hash", F.xxhash64("png"))
-                 .persist())
+                 .withColumn("tile_hash", F.xxhash64("png")))
+        stored = persisted
     elif os.path.isdir(args.src) and os.path.exists(
             os.path.join(args.src, "manifest.json")):
         # sharded .mbtiles set: distributed ingest, no driver bytes
-        import json as _json
-
         from .operators.mbtiles_sink import tiles_from_mbtiles_shards
 
-        man = _json.load(open(os.path.join(args.src, "manifest.json")))
-        fused = tiles_from_mbtiles_shards(spark, args.src).persist()
+        man = json.load(open(os.path.join(args.src, "manifest.json")))
+        fused = tiles_from_mbtiles_shards(spark, args.src)
+        stored = persisted
         meta_rows = sorted(man.get("metadata", {}).items())
     elif os.path.isdir(args.src) and os.path.isdir(
             os.path.join(args.src, "tiles")) and any(
@@ -453,8 +452,8 @@ def cmd_convert(args) -> None:
                  .withColumn("tile_row",
                              F.expr("cast(shiftleft(1L, zoom) - 1 - y "
                                     "as long)"))
-                 .withColumn("tile_hash", F.xxhash64("png"))
-                 .persist())
+                 .withColumn("tile_hash", F.xxhash64("png")))
+        stored = persisted
         meta_rows = [("name", str(tj.get("name", "tiles"))),
                      ("format", str(tj.get("format", "png")))]
         if "bounds" in tj:
@@ -469,41 +468,42 @@ def cmd_convert(args) -> None:
         meta_rows = [("name",
                       os.path.splitext(os.path.basename(args.src))[0]),
                      ("format", "png")]
-    names = {k for k, _ in meta_rows}
-    if "minzoom" not in names or "maxzoom" not in names:
-        zr = fused.agg(F.min("zoom"), F.max("zoom")).collect()[0]
-        if zr[0] is None:
-            sys.exit(f"ERROR: source holds no tiles: {args.src}")
-        meta_rows = [r for r in meta_rows
-                     if r[0] not in ("minzoom", "maxzoom")]
-        meta_rows += [("minzoom", str(int(zr[0]))),
-                      ("maxzoom", str(int(zr[1])))]
-    meta = local_frame(spark, meta_rows, "name string, value string")
+    with stored(fused) as fused:
+        names = {k for k, _ in meta_rows}
+        if "minzoom" not in names or "maxzoom" not in names:
+            zr = fused.agg(F.min("zoom"), F.max("zoom")).collect()[0]
+            if zr[0] is None:
+                sys.exit(f"ERROR: source holds no tiles: {args.src}")
+            meta_rows = [r for r in meta_rows
+                         if r[0] not in ("minzoom", "maxzoom")]
+            meta_rows += [("minzoom", str(int(zr[0]))),
+                          ("maxzoom", str(int(zr[1])))]
+        meta = local_frame(spark, meta_rows, "name string, value string")
 
-    if args.out.endswith(".mbtiles"):
-        from .operators.mbtiles_sink import materialize_mbtiles
+        if args.out.endswith(".mbtiles"):
+            from .operators.mbtiles_sink import materialize_mbtiles
 
-        try:
-            materialize_mbtiles(fused, meta, args.out,
-                                max_tiles=args.max_tiles)
-        except ValueError as e:
-            sys.exit(f"ERROR: {e}")
-        print(f"wrote {args.out}")
-    elif args.out.endswith(".pmtiles"):
-        from .operators.pmtiles_sink import write_pmtiles_distributed
+            try:
+                materialize_mbtiles(fused, meta, args.out,
+                                    max_tiles=args.max_tiles)
+            except ValueError as e:
+                sys.exit(f"ERROR: {e}")
+            print(f"wrote {args.out}")
+        elif args.out.endswith(".pmtiles"):
+            from .operators.pmtiles_sink import write_pmtiles_distributed
 
-        try:
-            stats = write_pmtiles_distributed(
-                fused, args.out, metadata=dict(meta_rows))
-        except ValueError as e:
-            sys.exit(f"ERROR: {e}")
-        print(f"wrote {args.out} ({stats['n_addressed']} tiles)")
-    else:
-        from .operators.xyz_sink import write_xyz_tree
+            try:
+                stats = write_pmtiles_distributed(
+                    fused, args.out, metadata=dict(meta_rows))
+            except ValueError as e:
+                sys.exit(f"ERROR: {e}")
+            print(f"wrote {args.out} ({stats['n_addressed']} tiles)")
+        else:
+            from .operators.xyz_sink import write_xyz_tree
 
-        st = write_xyz_tree(fused, meta, args.out)
-        print(f"wrote {st['n_tiles']} tiles (z{st['minzoom']}-"
-              f"z{st['maxzoom']}) to {args.out}")
+            st = write_xyz_tree(fused, meta, args.out)
+            print(f"wrote {st['n_tiles']} tiles (z{st['minzoom']}-"
+                  f"z{st['maxzoom']}) to {args.out}")
 
 
 def cmd_compact(args) -> None:

@@ -1,12 +1,14 @@
-"""Lineage cuts for the iterative operators, and their release.
+"""Stored intermediates (lineage cuts, persisted inputs) and release.
 
 A round loop cuts its lineage every round with a ``localCheckpoint``,
 or each round's plan re-embeds all earlier rounds. ``DataFrame
 .unpersist()`` does not free such a cut; ``release`` does, but only
 once the successor round's action has read it (earlier, that action
 fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). ``fixpoint`` keeps that
-order. This module is the package's only ``localCheckpoint`` call and
-its only reach into a DataFrame's JVM query execution.
+order, and ``materialize`` ends an operator with its result's own cut
+as the one stored RDD it leaves. This module is the package's only
+``persist``/``localCheckpoint`` call and its only reach into a
+DataFrame's JVM query execution.
 """
 
 from __future__ import annotations
@@ -42,6 +44,15 @@ def release(df: DataFrame) -> None:
         plan.rdd().unpersist(False)
 
 
+def materialize(result: DataFrame, *cuts: DataFrame) -> DataFrame:
+    """``result`` cut now, then ``cuts`` (which it read) released: the
+    result's own cut is the only stored RDD left."""
+    out = cut(result, eager=True)
+    for c in cuts:
+        release(c)
+    return out
+
+
 def plan_size_bytes(df: DataFrame) -> int:
     """The optimizer's size estimate of ``df``."""
     return int(df._jdf.queryExecution().optimizedPlan().stats()
@@ -50,7 +61,7 @@ def plan_size_bytes(df: DataFrame) -> int:
 
 @contextmanager
 def persisted(df: DataFrame):
-    """``df`` persisted for the block: a side input every round reads."""
+    """``df`` persisted for the block: an input several consumers read."""
     df = df.persist()
     try:
         yield df

@@ -33,7 +33,6 @@ split as operators/geotiff_source.
 
 from __future__ import annotations
 
-import glob
 import os
 import zlib
 
@@ -165,10 +164,12 @@ def _assemble(spark, keyed, write_part, path, parts_dir, lvls, zb, ox0,
     if len(entries) > max_blocks:
         raise ValueError(f"more than {max_blocks} blocks — raise max_blocks")
 
-    part_files = sorted(glob.glob(os.path.join(parts_dir, "part-*.bin")))
+    # this write's parts, from its entries: a stale part file left in
+    # parts_dir by an earlier run is never read
+    part_files = {pid: os.path.join(parts_dir, f"part-{pid:05d}.bin")
+                  for pid in sorted({r["part"] for r in entries})}
     bases, acc = {}, 0
-    for pf in part_files:
-        pid = int(os.path.basename(pf)[5:10])
+    for pid, pf in part_files.items():
         bases[pid] = acc
         acc += os.path.getsize(pf)
     nodata_block = _encode_block(
@@ -220,7 +221,7 @@ def _assemble(spark, keyed, write_part, path, parts_dir, lvls, zb, ox0,
     tmp = path + ".tmp"
     with open(tmp, "wb") as out:
         out.write(hdr)
-        for pf in part_files:
+        for pf in part_files.values():
             with open(pf, "rb") as f:
                 while True:
                     chunk = f.read(1 << 20)

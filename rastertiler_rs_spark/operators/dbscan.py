@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ._lineage import materialize, persisted
 from .components import connected_components
 
 
@@ -67,30 +68,30 @@ def dbscan(points: DataFrame, eps: int, min_pts: int,
                       & (F.col("cy") == F.col("pcy")))
              .where((d2 <= F.lit(int(eps) * int(eps)))
                     & (F.col("pid") != F.col("bpid")))
-             .select("pid", "bpid")
-             .persist())  # consumed by counts, edges, and border attach
-    counts = pairs.groupBy("pid").agg((F.count("*") + 1).alias("n_nb"))
-    core = (own.join(counts, "pid", "left")
-            .select("pid",
-                    (F.coalesce(F.col("n_nb"), F.lit(1))
-                     >= F.lit(int(min_pts))).alias("is_core")))
-    core_ids = core.where("is_core").select("pid")
-    cc_edges = (pairs
-                .join(core_ids, "pid")
-                .join(core_ids.select(F.col("pid").alias("bpid")), "bpid")
-                .select(F.col("pid").alias("src"), F.col("bpid").alias("dst")))
-    comp = connected_components(cc_edges, vertices=core_ids)
-    core_lbl = (core_ids.join(comp, core_ids["pid"] == comp["v"], "left")
-                .select("pid", F.coalesce(F.col("lbl"),
-                                          F.col("pid")).alias("cluster")))
-    # border: min cluster among core neighbors
-    border = (pairs.join(core_lbl.withColumnRenamed("pid", "bpid"), "bpid")
-              .groupBy("pid").agg(F.min("cluster").alias("bcluster")))
-    out = (core.join(core_lbl, "pid", "left")
-           .join(border, "pid", "left")
-           .select("pid",
-                   F.when(F.col("is_core"), F.col("cluster"))
-                   .otherwise(F.coalesce(F.col("bcluster"), F.lit(-1)))
-                   .cast("long").alias("cluster"),
-                   F.col("is_core").cast("long").alias("is_core")))
-    return out
+             .select("pid", "bpid"))
+    with persisted(pairs) as pairs:  # counts, edges and border attach
+        counts = pairs.groupBy("pid").agg((F.count("*") + 1).alias("n_nb"))
+        core = (own.join(counts, "pid", "left")
+                .select("pid",
+                        (F.coalesce(F.col("n_nb"), F.lit(1))
+                         >= F.lit(int(min_pts))).alias("is_core")))
+        core_ids = core.where("is_core").select("pid")
+        cc_edges = (pairs
+                    .join(core_ids, "pid")
+                    .join(core_ids.select(F.col("pid").alias("bpid")), "bpid")
+                    .select(F.col("pid").alias("src"), F.col("bpid").alias("dst")))
+        comp = connected_components(cc_edges, vertices=core_ids)
+        core_lbl = (core_ids.join(comp, core_ids["pid"] == comp["v"], "left")
+                    .select("pid", F.coalesce(F.col("lbl"),
+                                              F.col("pid")).alias("cluster")))
+        # border: min cluster among core neighbors
+        border = (pairs.join(core_lbl.withColumnRenamed("pid", "bpid"), "bpid")
+                  .groupBy("pid").agg(F.min("cluster").alias("bcluster")))
+        out = (core.join(core_lbl, "pid", "left")
+               .join(border, "pid", "left")
+               .select("pid",
+                       F.when(F.col("is_core"), F.col("cluster"))
+                       .otherwise(F.coalesce(F.col("bcluster"), F.lit(-1)))
+                       .cast("long").alias("cluster"),
+                       F.col("is_core").cast("long").alias("is_core")))
+        return materialize(out, comp)

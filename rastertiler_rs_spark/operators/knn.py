@@ -16,7 +16,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ._lineage import cut, fixpoint, release
+from ._lineage import cut, fixpoint, materialize, release
 
 
 def _candidates(queries: DataFrame, cells: DataFrame, r_col) -> DataFrame:
@@ -229,12 +229,17 @@ def knn_join(
         _saved["spark.sql.shuffle.partitions"] = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(int(loop_shuffle_partitions)))
     try:
-        # the ranked_all cuts are the result's parts and stay stored;
-        # the last pending table is not read again
+        # the last pending table is not read again (fixpoint released
+        # the earlier ones, the stats cut q included)
         release(fixpoint(q, stragglers, probe, max_rounds, "kNN"))
     finally:
         for key, val in _saved.items():
             spark.conf.set(key, val)
+
+    def finish(result: DataFrame) -> DataFrame:
+        # one round's ranked cut is the result's own stored part; more
+        # rounds are stored as one cut of the result, then released
+        return result if len(ranked) == 1 else materialize(result, *ranked)
 
     topk = reduce(DataFrame.unionByName, [
         r.filter("_done").select(query_id, point_id, "d2", "rank")
@@ -253,7 +258,7 @@ def knn_join(
             f"data too sparse for cell_size={cs} — increase cell_size "
             f"(or raise max_final_r knowingly; probe cost grows as r^2)")
     if not sum(g["n_widen"] for g in guards):
-        return topk
+        return finish(topk)
 
     widen = reduce(DataFrame.unionByName, [
         r.filter(is_kth)
@@ -286,4 +291,4 @@ def knn_join(
         .filter(F.col("rank") <= k)
         .select(query_id, point_id, "d2", "rank")
     )
-    return settled.unionByName(widened)
+    return finish(settled.unionByName(widened))

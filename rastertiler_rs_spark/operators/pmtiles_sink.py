@@ -27,6 +27,7 @@ Three surfaces, mirroring the MBTiles trio:
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -154,84 +155,85 @@ def write_pmtiles_distributed(fused: DataFrame, path: str,
              "part_size": [pos] * len(ents),
              "n_contents": [len(by_hash)] * len(ents)})
 
-    rows = (df.mapInPandas(
-        write_part, "pid int, tile_id long, run_length long, "
-        "rel_offset long, length long, part_size long, n_contents long")
-        .limit(max_entries + 1).collect())
-    if len(rows) > max_entries:
-        raise ValueError(
-            f"write_pmtiles_distributed: entry count exceeds "
-            f"max_entries={max_entries}; directory assembly is "
-            "driver-side — raise knowingly or shard the tileset")
-    if not rows:
-        raise ValueError("cannot build an empty PMTiles archive")
-
-    # parts in tile_id order; rebase offsets by cumulative part size
-    parts: dict[int, dict] = {}
-    for r in rows:
-        p = parts.setdefault(int(r["pid"]), {
-            "size": int(r["part_size"]), "min_id": int(r["tile_id"]),
-            "contents": int(r["n_contents"]), "entries": []})
-        p["entries"].append(r)
-        p["min_id"] = min(p["min_id"], int(r["tile_id"]))
-    order = sorted(parts, key=lambda pid: parts[pid]["min_id"])
-    base, entries, n_addressed, n_contents = 0, [], 0, 0
-    for pid in order:
-        p = parts[pid]
-        fn = os.path.join(parts_dir, f"part-{pid:05d}.bin")
-        if not os.path.exists(fn) or os.path.getsize(fn) != p["size"]:
-            raise RuntimeError(
-                f"part file {fn} missing or truncated driver-side: "
-                "write_pmtiles_distributed requires a filesystem "
-                "shared by driver and executors (like "
-                "write_mbtiles_shards); use materialize_pmtiles or "
-                "collect the tile table first")
-        for r in sorted(p["entries"], key=lambda r: int(r["tile_id"])):
-            entries.append(Entry(int(r["tile_id"]),
-                                 base + int(r["rel_offset"]),
-                                 int(r["length"]), int(r["run_length"])))
-            n_addressed += int(r["run_length"])
-        base += p["size"]
-        n_contents += p["contents"]
-    for a, b in zip(entries, entries[1:]):
-        if b.tile_id < a.tile_id + a.run_length:
-            raise ValueError(f"overlapping entries at tile id {b.tile_id}")
-
-    from ..pmtiles.codec import tileid_to_zxy
-    minz = tileid_to_zxy(entries[0].tile_id)[0]
-    maxz = tileid_to_zxy(entries[-1].tile_id + entries[-1].run_length - 1)[0]
-    root, leaves, _ = build_directories(entries)
-    meta = _gzip(json.dumps(metadata or {}, sort_keys=True).encode())
-    pos = HEADER_SIZE
-    root_offset, pos = pos, pos + len(root)
-    metadata_offset, pos = pos, pos + len(meta)
-    leaf_offset, pos = pos, pos + len(leaves)
-    header = pack_header(
-        root_offset=root_offset, root_length=len(root),
-        metadata_offset=metadata_offset, metadata_length=len(meta),
-        leaf_offset=leaf_offset, leaf_length=len(leaves),
-        data_offset=pos, data_length=base,
-        n_addressed=n_addressed, n_entries=len(entries),
-        n_contents=n_contents, clustered=True, tile_type=tile_type,
-        min_zoom=minz, max_zoom=maxz)
-    tmp = path + ".tmp"
-    with open(tmp, "wb") as out:
-        out.write(header + root + meta + leaves)
-        for pid in order:
-            with open(os.path.join(parts_dir, f"part-{pid:05d}.bin"),
-                      "rb") as src:
-                while True:
-                    chunk = src.read(1 << 22)
-                    if not chunk:
-                        break
-                    out.write(chunk)
-    os.replace(tmp, path)
-    for pid in order:
-        os.remove(os.path.join(parts_dir, f"part-{pid:05d}.bin"))
     try:
-        os.rmdir(parts_dir)
-    except OSError:
-        pass
+        rows = (df.mapInPandas(
+            write_part, "pid int, tile_id long, run_length long, "
+            "rel_offset long, length long, part_size long, n_contents long")
+            .limit(max_entries + 1).collect())
+        if len(rows) > max_entries:
+            raise ValueError(
+                f"write_pmtiles_distributed: entry count exceeds "
+                f"max_entries={max_entries}; directory assembly is "
+                "driver-side — raise knowingly or shard the tileset")
+        if not rows:
+            raise ValueError("cannot build an empty PMTiles archive")
+
+        # parts in tile_id order; rebase offsets by cumulative part size
+        parts: dict[int, dict] = {}
+        for r in rows:
+            p = parts.setdefault(int(r["pid"]), {
+                "size": int(r["part_size"]), "min_id": int(r["tile_id"]),
+                "contents": int(r["n_contents"]), "entries": []})
+            p["entries"].append(r)
+            p["min_id"] = min(p["min_id"], int(r["tile_id"]))
+        order = sorted(parts, key=lambda pid: parts[pid]["min_id"])
+        base, entries, n_addressed, n_contents = 0, [], 0, 0
+        for pid in order:
+            p = parts[pid]
+            fn = os.path.join(parts_dir, f"part-{pid:05d}.bin")
+            if not os.path.exists(fn) or os.path.getsize(fn) != p["size"]:
+                raise RuntimeError(
+                    f"part file {fn} missing or truncated driver-side: "
+                    "write_pmtiles_distributed requires a filesystem "
+                    "shared by driver and executors (like "
+                    "write_mbtiles_shards); use materialize_pmtiles or "
+                    "collect the tile table first")
+            for r in sorted(p["entries"], key=lambda r: int(r["tile_id"])):
+                entries.append(Entry(int(r["tile_id"]),
+                                     base + int(r["rel_offset"]),
+                                     int(r["length"]), int(r["run_length"])))
+                n_addressed += int(r["run_length"])
+            base += p["size"]
+            n_contents += p["contents"]
+        for a, b in zip(entries, entries[1:]):
+            if b.tile_id < a.tile_id + a.run_length:
+                raise ValueError(f"overlapping entries at tile id {b.tile_id}")
+
+        from ..pmtiles.codec import tileid_to_zxy
+        minz = tileid_to_zxy(entries[0].tile_id)[0]
+        maxz = tileid_to_zxy(entries[-1].tile_id + entries[-1].run_length - 1)[0]
+        root, leaves, _ = build_directories(entries)
+        meta = _gzip(json.dumps(metadata or {}, sort_keys=True).encode())
+        pos = HEADER_SIZE
+        root_offset, pos = pos, pos + len(root)
+        metadata_offset, pos = pos, pos + len(meta)
+        leaf_offset, pos = pos, pos + len(leaves)
+        header = pack_header(
+            root_offset=root_offset, root_length=len(root),
+            metadata_offset=metadata_offset, metadata_length=len(meta),
+            leaf_offset=leaf_offset, leaf_length=len(leaves),
+            data_offset=pos, data_length=base,
+            n_addressed=n_addressed, n_entries=len(entries),
+            n_contents=n_contents, clustered=True, tile_type=tile_type,
+            min_zoom=minz, max_zoom=maxz)
+        tmp = path + ".tmp"
+        with open(tmp, "wb") as out:
+            out.write(header + root + meta + leaves)
+            for pid in order:
+                with open(os.path.join(parts_dir, f"part-{pid:05d}.bin"),
+                          "rb") as src:
+                    while True:
+                        chunk = src.read(1 << 22)
+                        if not chunk:
+                            break
+                        out.write(chunk)
+        os.replace(tmp, path)
+    finally:
+        # finished parts only: another attempt's temp file stays
+        for fn in glob.glob(os.path.join(parts_dir, "part-*.bin")):
+            os.remove(fn)
+        if not os.listdir(parts_dir):
+            os.rmdir(parts_dir)
     return {"n_entries": len(entries), "n_addressed": n_addressed,
             "n_parts": len(order), "n_contents": n_contents,
             "data_length": base}

@@ -45,6 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..png import decode_band
+from ._lineage import materialize, persisted
 from .components import connected_components
 
 _PACK = np.int64(1) << np.int64(32)
@@ -200,13 +201,6 @@ def region_label(tiles: DataFrame, tile_size: int, nodata: int = 0,
                          pids=np.ascontiguousarray(p).tobytes())
             yield pd.DataFrame(out)
 
-    # one decode pass feeds BOTH branches; persist the (small)
-    # fragment+strip rows — a lazy fork below a python stage would
-    # re-execute the decode per consumer (CLAUDE.md).
-    unified = (tiles.select("tx", "ty", "png")
-               .mapInPandas(per_tile, _UNIFIED_SCHEMA)
-               .persist())
-
     def border_pairs(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
             return pd.DataFrame({"src": pd.Series([], dtype="int64"),
@@ -224,27 +218,32 @@ def region_label(tiles: DataFrame, tile_size: int, nodata: int = 0,
         pairs = np.unique(np.stack([pa[m], pb[m]], 1), axis=0)
         return pd.DataFrame({"src": pairs[:, 0], "dst": pairs[:, 1]})
 
-    pairs = (unified.filter(F.col("kind") == "B")
-             .select("ax", "btx", "bty", "side", "vals", "pids")
-             .groupBy("ax", "btx", "bty")
-             .applyInPandas(border_pairs, "src long, dst long"))
+    # one decode pass feeds BOTH branches; persist the (small)
+    # fragment+strip rows — a lazy fork below a python stage would
+    # re-execute the decode per consumer.
+    with persisted(tiles.select("tx", "ty", "png")
+                   .mapInPandas(per_tile, _UNIFIED_SCHEMA)) as unified:
+        pairs = (unified.filter(F.col("kind") == "B")
+                 .select("ax", "btx", "bty", "side", "vals", "pids")
+                 .groupBy("ax", "btx", "bty")
+                 .applyInPandas(border_pairs, "src long, dst long"))
 
-    labels = connected_components(pairs, "src", "dst",
-                                  max_rounds=max_rounds)
+        labels = connected_components(pairs, "src", "dst",
+                                      max_rounds=max_rounds)
 
-    frags = unified.filter(F.col("kind") == "F").select(*_FRAG_COLS)
-    merged = (frags.join(labels.withColumnRenamed("v", "root"),
-                         "root", "left")
-              .withColumn("region", F.coalesce("lbl", "root"))
-              .groupBy("region", "value")
-              .agg(F.sum("n_pixels").alias("n_pixels"),
-                   F.min("min_r").alias("min_r"),
-                   F.min("min_c").alias("min_c"),
-                   F.max("max_r").alias("max_r"),
-                   F.max("max_c").alias("max_c")))
-    # region = packed (first row, first col in row-major order); its
-    # row IS min_r, so expose only the column as first_c.
-    return merged.select(
-        "value", "n_pixels", "min_r", "min_c", "max_r", "max_c",
-        F.col("region").bitwiseAND(F.lit((1 << 32) - 1))
-        .alias("first_c"))
+        frags = unified.filter(F.col("kind") == "F").select(*_FRAG_COLS)
+        merged = (frags.join(labels.withColumnRenamed("v", "root"),
+                             "root", "left")
+                  .withColumn("region", F.coalesce("lbl", "root"))
+                  .groupBy("region", "value")
+                  .agg(F.sum("n_pixels").alias("n_pixels"),
+                       F.min("min_r").alias("min_r"),
+                       F.min("min_c").alias("min_c"),
+                       F.max("max_r").alias("max_r"),
+                       F.max("max_c").alias("max_c")))
+        # region = packed (first row, first col in row-major order); its
+        # row IS min_r, so expose only the column as first_c.
+        return materialize(merged.select(
+            "value", "n_pixels", "min_r", "min_c", "max_r", "max_c",
+            F.col("region").bitwiseAND(F.lit((1 << 32) - 1))
+            .alias("first_c")), labels)

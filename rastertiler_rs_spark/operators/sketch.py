@@ -38,7 +38,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def mg_merge(counters: dict, batch_counts: dict, k: int) -> dict:
@@ -94,17 +94,18 @@ def frequent_items(rows: DataFrame, key_col: str, k: int) -> DataFrame:
             "n": np.array(list(counters.values()) + [n_p], dtype="int64"),
         })
 
-    # candidates and total both fork off the sketch output; Catalyst
-    # does NOT reuse exchanges under python-stage consumers (measured —
-    # see CLAUDE.md), so persist the ≤ (k+1)·P tiny summary rows or the
-    # map-side sketch pass would run once per consumer
-    summaries = keys.mapInPandas(sketch, "key string, n long").persist()
-    cands = summaries.where(F.col("key").isNotNull()).select("key").distinct()
-    total = summaries.where(F.col("key").isNull()).agg(
-        F.sum("n").alias("total"))
-    exact = (keys.join(F.broadcast(cands), "key")
-             .groupBy("key").agg(F.count("*").alias("n")))
-    return (exact.crossJoin(F.broadcast(total))
+    # the exact total rides the ≤ (k+1)·P tiny summary rows as a
+    # window column, so the candidate set has one consumer and the
+    # map-side sketch pass runs once (a second consumer would re-run
+    # it: Catalyst does not reuse exchanges under python stages)
+    cands = (keys.mapInPandas(sketch, "key string, n long")
+             .withColumn("total", F.sum(F.when(F.col("key").isNull(),
+                                               F.col("n")))
+                         .over(Window.partitionBy()))
+             .where(F.col("key").isNotNull())
+             .select("key", "total").distinct())
+    return (keys.join(F.broadcast(cands), "key")
+            .groupBy("key", "total").agg(F.count("*").alias("n"))
             .where(F.col("n") * F.lit(k + 1) > F.col("total"))
             .select("key", "n", "total"))
 
@@ -204,7 +205,6 @@ def sample_bottom_k(rows: DataFrame, id_col: str, k: int,
     which is the cheap side of that trade at every scale."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    from pyspark.sql import Window
 
     h = F.xxhash64(F.col(id_col)) if hash_expr is None else hash_expr
     top = (rows.select(F.col(id_col).alias("id"), h.alias("h"),
@@ -245,10 +245,6 @@ def stratified_bottom_k(rows: DataFrame, stratum_col: str, id_col: str,
     h, rank) with rank 1..k per stratum in hash order."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql import Window
 
     h = F.xxhash64(F.col(id_col)) if hash_expr is None else hash_expr
     hashed = rows.select(F.col(stratum_col).alias("stratum"),

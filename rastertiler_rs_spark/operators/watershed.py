@@ -29,8 +29,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..session import local_frame
-from ._lineage import (NotConverged, cut, fixpoint, persisted, release,
-                       round_parts, unchanged)
+from ._lineage import (NotConverged, cut, fixpoint, materialize,
+                       persisted, round_parts, unchanged)
 from .halo import _D8_OFFSETS, _halo_apply, d8_direction
 
 
@@ -232,7 +232,7 @@ def _accumulate(succ: DataFrame, max_rounds: int = 64,
         # pointer doubling with partial sums: invariant w = #darts in
         # [dart, nxt); when nxt is NULL, w = to-end rank inclusive.
         # No per-round action: every round is stored by the final
-        # eager cut below and released after it.
+        # materialize below and released after it.
         for _ in range(rounds):
             jump = jumps[-1]
             b = jump.select(F.col("dart").alias("_d"),
@@ -264,11 +264,9 @@ def _accumulate(succ: DataFrame, max_rounds: int = 64,
                             (F.lit(1) + F.coalesce(F.col("kids"),
                                                    F.lit(0)))
                             .cast("long").alias("acc")))
-        out = cut(sizes.select(F.col("u").alias("v"), "acc")
-                  .unionByName(pit_rows), n_parts, "v", eager=True)
-        for jump in jumps:
-            release(jump)
-        return out
+        return materialize(sizes.select(F.col("u").alias("v"), "acc")
+                           .unionByName(pit_rows)
+                           .repartition(n_parts, "v"), *jumps)
 
 
 def flow_accumulation_stats(tiles: DataFrame, tile_size: int,

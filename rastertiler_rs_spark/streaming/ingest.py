@@ -24,6 +24,7 @@ import json
 import os
 import shutil
 import time
+from contextlib import ExitStack
 from typing import Iterator
 
 import numpy as np
@@ -32,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..fixtures import NODATA
 from ..kernel import encode_tile
+from ..operators._lineage import persisted
 from ..operators.overview import decode_canvas
 from ..operators.render import render
 
@@ -327,53 +329,18 @@ def _manifest_rows(out_dir: str, tiles_path: str, batch_id: int, delta: int,
     return spark_total
 
 
-def _upsert_batch(batch_df: DataFrame, out_dir: str, minzoom: int, maxzoom: int,
-                  tile_size: int, dtype_tag: str, batch_id: int,
+def _upsert_batch(batch_df: DataFrame, out_dir: str, minzoom: int,
+                  maxzoom: int, overview_below: int, tile_size: int,
+                  dtype_tag: str, batch_id: int,
                   colormap_str: str | None = None) -> None:
-    tiles_path = os.path.join(out_dir, "tiles")
-    # repair runs on EVERY batch (empty ones included): between a
-    # mid-swap crash and the next non-empty batch, readers of the table
-    # would otherwise see the partition's only copy stranded in `.old`
-    marker = _pending_marker(out_dir)
-    repaired = _recover_swap(tiles_path) or os.path.exists(marker)
-    if batch_df.isEmpty():
-        return
-    fused = render(batch_df, minzoom, maxzoom, tile_size=tile_size,
-                   dtype_tag=dtype_tag, colormap_str=colormap_str)
-    # persist: consumed twice (touched-partition discovery + staged write)
-    new = fused.select(*_TILE_COLS).persist()
-    staged = tiles_path + ".staged"
-    try:
-        if _tiles_exists(tiles_path):
-            merged = _merge_into_touched(new, tiles_path, dtype_tag,
-                                         colormap_str)
-        else:
-            merged = new
-        _write_staged(merged, staged)
-        # marker closes the swap-landed-but-manifest-missing crash
-        # window: while it exists, the next attempt full-resyncs the
-        # manifest count instead of trusting an incremental delta
-        os.makedirs(out_dir, exist_ok=True)
-        open(marker, "w").close()
-        delta = _swap_partitions(staged, tiles_path)
-    finally:
-        new.unpersist()
-        shutil.rmtree(staged, ignore_errors=True)
-    n = _manifest_rows(out_dir, tiles_path, batch_id, delta, repaired)
-    _write_manifest(out_dir, batch_id, n)
-    os.remove(marker)
-
-
-def _upsert_pyramid_batch(batch_df: DataFrame, out_dir: str, minzoom: int,
-                          maxzoom: int, overview_below: int, tile_size: int,
-                          dtype_tag: str, batch_id: int,
-                          colormap_str: str | None = None) -> None:
     """Streamed pyramid maintenance: the batch renders and mosaic-over
-    upserts ONLY the direct zooms [base..maxzoom]; the low zooms are
-    then rebuilt by the overview cascade FROM THE MATERIALIZED BASE
-    LEVEL — source images are never re-read for overviews, and each
-    batch's low-zoom work is bounded by the base tile count (shrinking
-    4x per level), not by the image count.
+    upserts ONLY the direct zooms [base..maxzoom] (base = overview_below
+    clamped to [minzoom, maxzoom]; base = minzoom makes every zoom
+    direct, the plain stream_render); the low zooms are then rebuilt by
+    the overview cascade FROM THE MATERIALIZED BASE LEVEL — source
+    images are never re-read for overviews, and each batch's low-zoom
+    work is bounded by the base tile count (shrinking 4x per level),
+    not by the image count.
 
     The direct-zoom upsert is materialized (staged parquet) before the
     cascade reads it: a fully-lazy formulation that self-joined the
@@ -396,7 +363,9 @@ def _upsert_pyramid_batch(batch_df: DataFrame, out_dir: str, minzoom: int,
 
     spark = batch_df.sparkSession
     tiles_path = os.path.join(out_dir, "tiles")
-    # repair on every batch, empty included (see _upsert_batch)
+    # repair runs on EVERY batch (empty ones included): between a
+    # mid-swap crash and the next non-empty batch, readers of the table
+    # would otherwise see the partition's only copy stranded in `.old`
     marker = _pending_marker(out_dir)
     repaired = _recover_swap(tiles_path) or os.path.exists(marker)
     if batch_df.isEmpty():
@@ -404,26 +373,26 @@ def _upsert_pyramid_batch(batch_df: DataFrame, out_dir: str, minzoom: int,
     base = min(max(overview_below, minzoom), maxzoom)
     fused = render(batch_df, base, maxzoom, tile_size=tile_size,
                    dtype_tag=dtype_tag, colormap_str=colormap_str)
-    new = fused.select(*_TILE_COLS).persist()
-    staged = tiles_path + ".staged"
 
     # phase 1: partition-scoped upsert of the direct zooms [base..maxzoom]
-    try:
-        touched = _touched_partitions(new)
-        if _tiles_exists(tiles_path):
-            merged = _merge_into_touched(new, tiles_path, dtype_tag,
-                                         colormap_str, touched=touched)
-        else:
-            merged = new
-        _write_staged(merged, staged)
-        # commit-pending marker before the FIRST swap; cleared only
-        # after the manifest row lands (covers both phases)
-        os.makedirs(out_dir, exist_ok=True)
-        open(marker, "w").close()
-        delta = _swap_partitions(staged, tiles_path)
-    finally:
-        new.unpersist()
-        shutil.rmtree(staged, ignore_errors=True)
+    # (read twice: touched-partition discovery and the staged write)
+    with persisted(fused.select(*_TILE_COLS)) as new:
+        touched = _touched_partitions(new) if minzoom < base else None
+        staged = tiles_path + ".staged"
+        try:
+            merged = (_merge_into_touched(new, tiles_path, dtype_tag,
+                                          colormap_str, touched=touched)
+                      if _tiles_exists(tiles_path) else new)
+            _write_staged(merged, staged)
+            # commit-pending marker before the FIRST swap, cleared only
+            # after the manifest row lands (covers both phases): while
+            # it exists, the next attempt full-resyncs the manifest
+            # count instead of trusting an incremental delta
+            os.makedirs(out_dir, exist_ok=True)
+            open(marker, "w").close()
+            delta = _swap_partitions(staged, tiles_path)
+        finally:
+            shutil.rmtree(staged, ignore_errors=True)
 
     # phase 2: recascade ONLY the dirty base stripes from the LIVE
     # merged base level (materialized boundary — see docstring).
@@ -432,11 +401,11 @@ def _upsert_pyramid_batch(batch_df: DataFrame, out_dir: str, minzoom: int,
     # and the _tiles_exists guard keeps a zero-tile FIRST batch from
     # reading an empty parquet dir (UNABLE_TO_INFER_SCHEMA would crash
     # the batch and deterministic replay would re-crash it forever).
-    dirty_bs = sorted({b for z, b in touched if z == base})
-    if minzoom < base and dirty_bs and _tiles_exists(tiles_path):
+    dirty_bs = sorted({b for z, b in touched or () if z == base})
+    if dirty_bs and _tiles_exists(tiles_path):
         staged2 = tiles_path + ".staged2"
-        cascade_cached: list[DataFrame] = []
-        try:
+        with ExitStack() as scope:
+            scope.callback(shutil.rmtree, staged2, ignore_errors=True)
             live = spark.read.parquet(tiles_path)
             if base <= XB_BITS:
                 # the whole sub-base pyramid is <= 4^XB_BITS tiles —
@@ -458,12 +427,10 @@ def _upsert_pyramid_batch(batch_df: DataFrame, out_dir: str, minzoom: int,
                 out_low = mid
                 if minzoom < mid_floor:
                     # mid feeds both the write and the zoom-XB_BITS
-                    # level below: persist (not localCheckpoint) so its
-                    # python stages run once AND it is freed in the
-                    # finally below (checkpoint blocks would linger
-                    # until driver GC, one leak per micro-batch)
-                    mid = mid.persist()
-                    cascade_cached.append(mid)
+                    # level below: persisted for the scope, so its
+                    # python stages run once and it is freed with the
+                    # batch (no stored block outlives a micro-batch)
+                    mid = scope.enter_context(persisted(mid))
                     # assemble the FULL zoom-XB_BITS level (one tile
                     # column per stripe): recomputed dirty columns + old
                     # clean ones (pruned: zoom partition + xb columns)
@@ -479,10 +446,6 @@ def _upsert_pyramid_batch(batch_df: DataFrame, out_dir: str, minzoom: int,
                     out_low = mid.unionByName(tiny)
             _write_staged(out_low, staged2)
             delta += _swap_partitions(staged2, tiles_path)
-        finally:
-            for df in cascade_cached:  # per-batch cache leak guard
-                df.unpersist()
-            shutil.rmtree(staged2, ignore_errors=True)
 
     n = _manifest_rows(out_dir, tiles_path, batch_id, delta, repaired)
     _write_manifest(out_dir, batch_id, n)
@@ -522,7 +485,7 @@ def stream_render_pyramid(
     )
     return (
         stream.writeStream
-        .foreachBatch(lambda df, bid: _upsert_pyramid_batch(
+        .foreachBatch(lambda df, bid: _upsert_batch(
             df, out_dir, minzoom, maxzoom, overview_below, tile_size,
             dtype_tag, bid, colormap_str))
         .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
@@ -549,21 +512,9 @@ def stream_render(
     per batch), ``out_dir/manifest`` (lineage), ``out_dir/_checkpoint``
     (Spark streaming offsets — restart-safe).
     """
-    _validate_stream_colormap(colormap_str)
-    stream = (
-        spark.readStream.schema(_INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(input_dir)
-    )
-    return (
-        stream.writeStream
-        .foreachBatch(lambda df, bid: _upsert_batch(
-            df, out_dir, minzoom, maxzoom, tile_size, dtype_tag, bid,
-            colormap_str))
-        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return stream_render_pyramid(
+        spark, input_dir, out_dir, minzoom, maxzoom, minzoom, tile_size,
+        dtype_tag, colormap_str, max_files_per_trigger)
 
 
 def compact_tiles(spark: SparkSession, out_dir: str,

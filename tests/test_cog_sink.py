@@ -3,6 +3,8 @@ decode back to exactly the tiles that went in (base + overviews),
 carry per-level georeferencing, and be readable by the engine's own
 header-only probe + ranged-read path."""
 
+import os
+
 import numpy as np
 import pytest
 
@@ -100,3 +102,19 @@ def test_rejects_zoom_gaps(spark):
     holey = fused.where(F.col("zoom") != 7)
     with pytest.raises(ValueError, match="zoom gaps"):
         write_cog_distributed(holey, "/tmp/never.tif", tile_size=128)
+
+
+def test_stale_part_file_is_not_read(spark, tmp_path):
+    """A part file a killed earlier run left in ``<path>.parts`` is not
+    concatenated into the COG: the bytes equal a clean write's."""
+    images = spark.read.parquet(images_parquet(8, "u8"))
+    fused = render_pyramid(images, 6, 7, tile_size=128, dtype_tag="u8",
+                           overview_below=7)
+    clean, stale = str(tmp_path / "clean.tif"), str(tmp_path / "stale.tif")
+    write_cog_distributed(fused, clean, tile_size=128, n_parts=3)
+    os.makedirs(stale + ".parts")
+    with open(os.path.join(stale + ".parts", "part-00099.bin"), "wb") as f:
+        f.write(b"junk from a killed run")
+    write_cog_distributed(fused, stale, tile_size=128, n_parts=3)
+    with open(clean, "rb") as a, open(stale, "rb") as b:
+        assert a.read() == b.read()

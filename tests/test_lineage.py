@@ -1,19 +1,36 @@
-"""Lineage cuts: a released round stays readable through its successor,
-and every iterative operator leaves at most its own result's cut
+"""Stored intermediates: a released round stays readable through its
+successor, every public operator leaves at most its own result's cut
 stored, whatever its round count — or nothing, when it does not
-converge."""
+converge — and `operators/_lineage.py` is the package's only persist
+or cut site."""
+
+import ast
+import os
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from rastertiler_rs_spark.fixtures import NODATA
+from rastertiler_rs_spark.operators import knn
 from rastertiler_rs_spark.operators._lineage import cut, release
-from rastertiler_rs_spark.operators.components import connected_components
+from rastertiler_rs_spark.operators.components import (connected_components,
+                                                       dedup_assign)
+from rastertiler_rs_spark.operators.dbscan import dbscan
+from rastertiler_rs_spark.operators.polygonize import region_label
+from rastertiler_rs_spark.operators.quantiles import exact_quantiles
+from rastertiler_rs_spark.operators.sketch import frequent_items
+from rastertiler_rs_spark.operators.text import (lsh_candidate_pairs,
+                                                 lsh_candidate_pairs_int,
+                                                 ngram_jaccard_pairs,
+                                                 simhash_near_pairs_int)
 from rastertiler_rs_spark.operators.watershed import (flow_accumulation,
                                                       watershed_labels,
                                                       watershed_stats)
 from rastertiler_rs_spark.png import encode_grayscale8
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                   "rastertiler_rs_spark")
 
 
 def _stored(spark) -> set:
@@ -125,29 +142,140 @@ def test_watershed_stats_collects_width_once(spark, count_jobs):
             == len(count_jobs(lambda: watershed_labels(tiles, 8))))
 
 
-def test_report_knn_dbscan_leftovers(spark, capsys):
-    """knn keeps its per-round ranked cuts (the result's parts) and
-    dbscan its persisted pair list; report, do not pin, what stays."""
-    from rastertiler_rs_spark.operators.dbscan import dbscan
-    from rastertiler_rs_spark.operators.knn import knn_join
+def _knn_inputs(spark, pts, qs):
+    return (spark.createDataFrame(pts, "pid long, px double, py double"),
+            spark.createDataFrame(qs, "qid long, qx double, qy double"))
 
-    pts = [(i, float(i * 17 % 230) * 3.0, float(i * 29 % 210) * 3.0)
-           for i in range(40)]
-    qs = [(j, float(j * 37 % 200) * 3.0 + 0.5,
-           float(j * 53 % 190) * 3.0 + 0.5) for j in range(5)]
-    points = spark.createDataFrame(pts, "pid long, px double, py double")
-    queries = spark.createDataFrame(qs, "qid long, qx double, qy double")
-    before = _stored(spark)
-    assert len(knn_join(points, queries, k=3, cell_size=1.0,
-                        max_final_r=200).collect()) == 15
-    knn_left = len(_stored(spark) - before)
 
-    blobs = spark.createDataFrame(
+def _dense(spark):
+    """One point per unit cell of a 15 x 15 grid: k=3 is reached in
+    the first round, at start radius 2 or the density-derived one."""
+    return _knn_inputs(
+        spark, [(i * 15 + j, i + 0.25, j + 0.75)
+                for i in range(15) for j in range(15)],
+        [(q, 3.5 + 2 * q, 7.5 - q) for q in range(5)])
+
+
+def _sparse(spark):
+    """test_knn's sparse input: the third neighbour lies tens of cells
+    away, so phase 1 doubles its radius over several rounds."""
+    return _knn_inputs(
+        spark, [(i, float(i * 17 % 230) * 3.0, float(i * 29 % 210) * 3.0)
+                for i in range(40)],
+        [(j, float(j * 37 % 200) * 3.0 + 0.5,
+          float(j * 53 % 190) * 3.0 + 0.5) for j in range(5)])
+
+
+_BASE = ("the quick brown fox jumps over the lazy dog while the rain "
+         "in spain stays mainly on the plain and the band plays on")
+
+
+def _docs(spark):
+    return spark.createDataFrame(
+        [(0, _BASE), (1, _BASE.replace("dog", "cat")),
+         (2, "completely different text about spark catalyst optimizer"),
+         (3, "another unrelated document about tiles pyramids and zooms"),
+         (4, _BASE)], "doc_id long, text string")
+
+
+def _regions(spark):
+    """A 32 x 32 canvas of values 1-3 with a nodata band, as 8 x 8
+    tiles: regions cross tile borders, so components run rounds."""
+    band = np.random.default_rng(3).integers(1, 4, (32, 32)).astype(np.uint8)
+    band[5:9, :] = 0
+    return spark.createDataFrame(
+        [(tx, ty, encode_grayscale8(
+            band[ty * 8:(ty + 1) * 8, tx * 8:(tx + 1) * 8], 0))
+         for ty in range(4) for tx in range(4)],
+        "tx long, ty long, png binary")
+
+
+# (name, call): every public operator that stores an intermediate
+LEFTOVERS = [(name, lambda s, call=call, n=short: call(s, n))
+             for name, call, short, _ in OPERATORS] + [
+    ("knn_one_round", lambda s: knn.knn_join(*_dense(s), k=3, cell_size=1.0,
+                                             start_radius=2)),
+    ("knn_rounds", lambda s: knn.knn_join(*_sparse(s), k=3, cell_size=1.0,
+                                          max_final_r=200)),
+    ("knn_density_radius", lambda s: knn.knn_join(*_dense(s), k=3,
+                                                  cell_size=1.0)),
+    ("dbscan", lambda s: dbscan(s.createDataFrame(
         [(i, (i % 4) // 2 + 40 * (i // 4), i % 2) for i in range(16)],
-        "pid long, x long, y long")
+        "pid long, x long, y long"), eps=2, min_pts=3)),
+    ("region_label", lambda s: region_label(_regions(s), 8)),
+    ("frequent_items", lambda s: frequent_items(s.createDataFrame(
+        [(["a", "b", "a", "c", None, "a"][i % 6],) for i in range(300)],
+        "w string").repartition(5), "w", 3)),
+    ("exact_quantiles", lambda s: exact_quantiles(
+        s.range(1000).select(((F.col("id") * 37) % 101).alias("c")), "c",
+        [100, 5000, 9900])),
+    ("dedup_assign", lambda s: dedup_assign(
+        s.createDataFrame([(i,) for i in range(10)], "doc_id long"),
+        s.createDataFrame([(1, 4), (4, 7), (2, 9)],
+                          "doc_a long, doc_b long"))),
+    ("ngram_jaccard_pairs", lambda s: ngram_jaccard_pairs(_docs(s))),
+    ("lsh_candidate_pairs", lambda s: lsh_candidate_pairs(_docs(s))),
+    ("lsh_candidate_pairs_int", lambda s: lsh_candidate_pairs_int(_docs(s))),
+    ("simhash_near_pairs_int",
+     lambda s: simhash_near_pairs_int(_docs(s), max_hamming=16)),
+]
+
+
+@pytest.mark.parametrize("name,call", LEFTOVERS,
+                         ids=[o[0] for o in LEFTOVERS])
+def test_operator_leaves_at_most_its_result(spark, name, call):
     before = _stored(spark)
-    assert len(dbscan(blobs, eps=2, min_pts=3).collect()) == 16
-    dbscan_left = len(_stored(spark) - before)
-    with capsys.disabled():
-        print(f"\nstored after collect: knn_join +{knn_left}, "
-              f"dbscan +{dbscan_left}")
+    result = call(spark)
+    assert result.collect()
+    assert len(_stored(spark) - before) <= 1
+
+
+@pytest.mark.parametrize("inputs,multi_round", [(_dense, False),
+                                                 (_sparse, True)],
+                         ids=["one_round", "rounds"])
+def test_knn_materializes_only_after_rounds(spark, monkeypatch, inputs,
+                                            multi_round):
+    """One round keeps its plan (its ranked cut is the result's own, so
+    no job is added); more rounds end in one materialize of the result,
+    which releases every round's cut."""
+    real, released = knn.materialize, []
+
+    def materialize(result, *cuts):
+        released.append(len(cuts))
+        return real(result, *cuts)
+
+    monkeypatch.setattr(knn, "materialize", materialize)
+    knn.knn_join(*inputs(spark), k=3, cell_size=1.0, start_radius=2,
+                 max_final_r=200).collect()
+    if multi_round:
+        assert len(released) == 1 and released[0] > 1
+    else:
+        assert released == []
+
+
+def _store_calls(path):
+    """(line, name) of every persist / unpersist / cache /
+    localCheckpoint call in ``path``."""
+    tree = ast.parse(open(path).read(), path)
+    return [(node.lineno, node.func.attr) for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("persist", "unpersist", "cache",
+                                   "localCheckpoint")]
+
+
+def test_lineage_is_the_only_store_site():
+    lineage = os.path.join("operators", "_lineage.py")
+    found = {}
+    for root, _dirs, files in os.walk(PKG):
+        for name in files:
+            rel = os.path.relpath(os.path.join(root, name), PKG)
+            if name.endswith(".py") and rel != lineage:
+                calls = _store_calls(os.path.join(root, name))
+                if calls:
+                    found[rel] = calls
+    assert found == {}, (
+        f"store and cut through operators/_lineage.py: {found}")
+    # the walk sees calls at all: _lineage's own are found
+    assert {c[1] for c in _store_calls(os.path.join(PKG, lineage))} == {
+        "persist", "unpersist", "localCheckpoint"}

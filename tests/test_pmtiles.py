@@ -238,6 +238,23 @@ def test_distributed_part_temp_is_per_attempt(spark, tmp_path):
         fused.unpersist()
 
 
+def test_distributed_errors_leave_no_parts(spark, tmp_path):
+    """Both refusals (empty input, too many entries) remove the part
+    files and their directory: the entry-count one raises after every
+    finished part is on disk."""
+    from rastertiler_rs_spark.operators.pmtiles_sink import \
+        write_pmtiles_distributed
+
+    fused = _small_render(spark)
+    for name, df, kw, match in (
+            ("empty.pmtiles", fused.limit(0), {}, "empty"),
+            ("big.pmtiles", fused, {"max_entries": 1}, "max_entries")):
+        p = str(tmp_path / name)
+        with pytest.raises(ValueError, match=match):
+            write_pmtiles_distributed(df, p, n_parts=3, **kw)
+        assert not os.path.exists(p + ".parts")
+
+
 def test_cli_pmtiles_output(spark, tmp_path):
     """render OUT.pmtiles routes to the distributed archive sink and
     carries the mbtiles-equivalent metadata."""

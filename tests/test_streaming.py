@@ -275,8 +275,8 @@ def test_commit_pending_marker_resyncs_manifest(spark, tmp_path):
     imgs = generate_images(24, "u8")
     df1 = spark.createDataFrame(imgs.slice(0, 12).to_pandas())
     df2 = spark.createDataFrame(imgs.slice(12, 12).to_pandas())
-    _upsert_batch(df1, str(out), 3, 6, 64, "u8", 0)
-    _upsert_batch(df2, str(out), 3, 6, 64, "u8", 1)
+    _upsert_batch(df1, str(out), 3, 6, 3, 64, "u8", 0)
+    _upsert_batch(df2, str(out), 3, 6, 3, 64, "u8", 1)
     assert not os.path.exists(_pending_marker(str(out)))  # cleared on commit
     live = spark.read.parquet(str(out / "tiles")).count()
     assert json.load(open(out / "manifest" / "batch=1.json"))["rows"] == live
@@ -285,7 +285,7 @@ def test_commit_pending_marker_resyncs_manifest(spark, tmp_path):
     # already contains batch 1's merge
     os.remove(out / "manifest" / "batch=1.json")
     open(_pending_marker(str(out)), "w").close()
-    _upsert_batch(df2, str(out), 3, 6, 64, "u8", 1)  # replay (idempotent)
+    _upsert_batch(df2, str(out), 3, 6, 3, 64, "u8", 1)  # replay (idempotent)
     assert json.load(open(out / "manifest" / "batch=1.json"))["rows"] == live
     assert not os.path.exists(_pending_marker(str(out)))
 
@@ -323,7 +323,7 @@ def test_pyramid_zero_tile_first_batch_does_not_wedge(spark, tmp_path):
     pyramid normally."""
     from rastertiler_rs_spark.operators.overview import render_pyramid
     from rastertiler_rs_spark.streaming.ingest import (_pending_marker,
-                                                       _upsert_pyramid_batch)
+                                                       _upsert_batch)
 
     out = tmp_path / "out"
     imgs = generate_images(16, "u8")
@@ -333,11 +333,11 @@ def test_pyramid_zero_tile_first_batch_does_not_wedge(spark, tmp_path):
     df_empty = spark.createDataFrame(pdf[pdf.image_id.isin(nodata_ids)])
     df_real = spark.createDataFrame(pdf[~pdf.image_id.isin(nodata_ids)])
 
-    _upsert_pyramid_batch(df_empty, str(out), 2, 8, 7, 64, "u8", 0)
+    _upsert_batch(df_empty, str(out), 2, 8, 7, 64, "u8", 0)
     assert not os.path.exists(_pending_marker(str(out)))
     assert json.load(open(out / "manifest" / "batch=0.json"))["rows"] == 0
 
-    _upsert_pyramid_batch(df_real, str(out), 2, 8, 7, 64, "u8", 1)
+    _upsert_batch(df_real, str(out), 2, 8, 7, 64, "u8", 1)
     got = {(r["zoom"], r["x"], r["y"]): r["tile_hash"]
            for r in spark.read.parquet(str(out / "tiles"))
            .select("zoom", "x", "y", "tile_hash").collect()}
